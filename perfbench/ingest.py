@@ -90,6 +90,7 @@ class Ingest(Workload):
         self.done: list[gen.Batch] = [self.batches[0]]
         self._next = 1
         self.search_results: list[tuple[dict, list]] = []
+        self.traced_batches: list[gen.Batch] = []
         self.quarantined = 0
 
     def _mirror_base_to_db(self) -> None:
@@ -135,6 +136,7 @@ class Ingest(Workload):
                 continue
             self.done.append(batch)
             if tracer is not None:
+                self.traced_batches.append(batch)
                 self._trace_sources(tracer, batch)
         return ops
 
@@ -254,9 +256,9 @@ class Ingest(Workload):
 
     def layers(self, tracer) -> dict[str, tuple[float, str]]:
         runner = tracer.spans.get("runner", [])
-        files = sum(b.files for b in self.done)
+        files = sum(b.files for b in self.traced_batches)
         scanned = sum(sp.counters.get("input_records.Scan binaryFile", 0) for sp in runner)
-        batch_rows = sum(len(b.valid) for b in self.done)
+        batch_rows = sum(len(b.valid) for b in self.traced_batches)
         upserts = tracer.spans.get("plans.catalog.upsert", [])
         with open(self.sink_log) as fh:
             sink_rows = sum(int(x) for x in fh.read().split())

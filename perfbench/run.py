@@ -167,16 +167,20 @@ def run(args, work: str, spec: dict) -> dict:
     attempted = ops_attempted + wl.checks_attempted()
     values = {
         "setup_s": setup_s,
-        "throughput_per_s": ops.units / loop_wall,
         "cpu_ms_per_op": 1000 * sum(ops.cpu) / max(len(ops.cpu), 1),
+    }
+    wall = {
+        "workload.throughput_per_s": (ops.units / loop_wall, "1/s"),
+        "workload.latency_p50_ms": (1000 * ops.p50, "ms"),
     }
     print(
         f"perfbench {args.workload}: {len(ops.latencies)} ops, {ops.units} units in "
-        f"{loop_wall:.2f} s; latency p50 {1000 * ops.p50:.1f} ms; "
+        f"{loop_wall:.2f} s: {wall['workload.throughput_per_s'][0]:.3f}/s, "
+        f"latency p50 {wall['workload.latency_p50_ms'][0]:.1f} ms; "
         f"failed_ratio {failed / attempted:.4f} ({failed}/{attempted})"
     )
     if traced:
-        layers["workload.latency_p50_ms"] = (1000 * ops.p50, "ms")
+        layers.update(wall)
         metrics = {
             m["name"]: {"value": layers.get(m["name"], (0, None))[0], "unit": m["unit"]}
             for m in spec["per_layer"]

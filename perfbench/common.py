@@ -22,7 +22,7 @@ class Ops:
         (its traceback goes to stderr) and the loop goes on."""
         from perfbench.trace import cpu_seconds
 
-        c0, t0 = cpu_seconds(), time.perf_counter()
+        c0, t0 = cpu_seconds(jit=False), time.perf_counter()
         try:
             result = fn()
         except Exception:
@@ -30,7 +30,7 @@ class Ops:
             self.failed += 1
             return None
         self.latencies.append(time.perf_counter() - t0)
-        self.cpu.append(cpu_seconds() - c0)
+        self.cpu.append(cpu_seconds(jit=False) - c0)
         self.units += units
         return result
 

@@ -9,10 +9,12 @@ only the generated inputs, never the seed.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import random
 import struct
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 
@@ -112,22 +114,21 @@ def landing_batches(
     root: str,
     seed: int,
     *,
-    n_batches: int,
     files_per_batch: int,
     redelivered_share: float = 0.2,
     netcdf_share: float = 0.2,
     corrupt_share: float = 0.01,
-) -> list[Batch]:
-    """Write ``n_batches`` landing directories under ``root``. From the
-    second batch on, ``redelivered_share`` of a batch's files redeliver
-    ids that landed in an earlier batch, with changed metadata (same
-    platform, new footprint and time). Corrupt files are planted at
-    ``corrupt_share``, at least one per batch."""
+) -> Iterator[Batch]:
+    """Write landing directories under ``root``, one per step of the
+    (endless) iteration, so a loop of any length never runs out. From
+    the second batch on, ``redelivered_share`` of a batch's files
+    redeliver ids that landed in an earlier batch, with changed
+    metadata (same platform, new footprint and time). Corrupt files are
+    planted at ``corrupt_share``, at least one per batch."""
     rng = random.Random(f"landing-{seed}")
     delivered: dict[str, dict] = {}
-    batches = []
     serial = 0
-    for b in range(n_batches):
+    for b in itertools.count():
         batch = Batch(os.path.join(root, f"b{b:03d}"))
         os.makedirs(batch.path)
         n_corrupt = max(1, round(files_per_batch * corrupt_share))
@@ -155,8 +156,7 @@ def landing_batches(
             with open(os.path.join(batch.path, f"{gid}.nc"), "wb") as fh:
                 fh.write(data)
         delivered.update(batch.valid)
-        batches.append(batch)
-    return batches
+        yield batch
 
 
 def base_catalog_meta(spark, n: int, seed: int, *, partitions: int = 8):

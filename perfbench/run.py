@@ -25,6 +25,7 @@ import shutil
 import subprocess
 import sys
 import time
+from contextlib import nullcontext
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -50,7 +51,9 @@ def pin_environment(work: str) -> dict[str, str]:
         ),
         "TMPDIR": tmp,
         "PYSPARK_SUBMIT_ARGS": (
-            f"--driver-java-options -Djava.io.tmpdir={tmp}"
+            # A fixed set of JIT compiler threads: see trace.cpu_seconds.
+            f"--driver-java-options '-Djava.io.tmpdir={tmp}"
+            " -XX:-UseDynamicNumberOfCompilerThreads'"
             " --conf spark.ui.showConsoleProgress=false pyspark-shell"
         ),
     }
@@ -122,29 +125,31 @@ def main(argv: list[str] | None = None) -> int:
 def run(args, work: str, spec: dict) -> dict:
     from perfbench.analytics import Analytics
     from perfbench.ingest import Ingest
-    from perfbench.trace import RssSampler, Tracer
+    from perfbench.trace import RssSampler, Tracer, cpu_seconds
     from recipes_spark.session import get_session
 
     cls = {"ingest": Ingest, "analytics": Analytics}[args.workload]
     traced = bool(args.trace)
-    with RssSampler() as rss:
-        t0 = time.perf_counter()
+    with RssSampler() if traced else nullcontext() as rss:
+        c0, t0 = cpu_seconds(), time.perf_counter()
         spark = get_session("perfbench")
         spark.sparkContext.setLogLevel("ERROR")
         try:
             wl = cls(spark, work, args.seed, size=args.size, traced=traced)
             log("session up", t0)
             wl.setup()
-            setup_s = time.perf_counter() - t0
-            log("set up", t0)
+            setup_cpu, setup_wall = cpu_seconds() - c0, time.perf_counter() - t0
+            log(f"set up, {setup_cpu:.2f} s CPU", t0)
             start = time.perf_counter()
             ops = wl.loop(start + args.seconds)
             loop_wall = time.perf_counter() - start
+            _require(ops, "untraced")
             layers = {}
             if traced:
                 tracer = Tracer(spark)
                 wl.instrument(tracer)
                 traced_ops = wl.loop(time.perf_counter() + args.seconds, tracer)
+                _require(traced_ops, "traced")
                 wl.finish(tracer)
                 layers = wl.layers(tracer)
                 layers["trace.overhead_ratio"] = (traced_ops.p50 / ops.p50, "ratio")
@@ -166,7 +171,7 @@ def run(args, work: str, spec: dict) -> dict:
     failed = ops_failed + len(problems)
     attempted = ops_attempted + wl.checks_attempted()
     values = {
-        "setup_s": setup_s,
+        "setup_s": setup_cpu,
         "cpu_ms_per_op": 1000 * sum(ops.cpu) / max(len(ops.cpu), 1),
     }
     wall = {
@@ -177,6 +182,7 @@ def run(args, work: str, spec: dict) -> dict:
         f"perfbench {args.workload}: {len(ops.latencies)} ops, {ops.units} units in "
         f"{loop_wall:.2f} s: {wall['workload.throughput_per_s'][0]:.3f}/s, "
         f"latency p50 {wall['workload.latency_p50_ms'][0]:.1f} ms; "
+        f"set-up {setup_wall:.2f} s wall, {setup_cpu:.2f} s CPU; "
         f"failed_ratio {failed / attempted:.4f} ({failed}/{attempted})"
     )
     if traced:
@@ -194,6 +200,12 @@ def run(args, work: str, spec: dict) -> dict:
             for m in spec["end_to_end"]
         }
     return {"correct": failed == 0, "attempted": attempted, "failed": failed, "metrics": metrics}
+
+
+def _require(ops, which: str) -> None:
+    """A loop in which no operation succeeded has no timing to report."""
+    if not ops.latencies:
+        raise RuntimeError(f"no operation of the {which} loop succeeded ({ops.failed} failed)")
 
 
 if __name__ == "__main__":

@@ -10,9 +10,6 @@ just ingested and compacted, one request at a time, so the read side of
 
 from __future__ import annotations
 
-from contextlib import nullcontext
-from types import SimpleNamespace
-
 from perfbench.common import median
 
 
@@ -23,14 +20,11 @@ def run_requests(spark, catalog: str, requests: list[dict], tracer) -> list[tupl
     return [(req, execute(items, req, tracer)) for req in requests]
 
 
-def execute(items, req: dict, tracer=None) -> list:
+def execute(items, req: dict, tracer) -> list:
     """Run one request; returns the result rows (for a page walk, the
     rows of all pages in order)."""
     from recipes_spark.plans.catalog import catalog_search, search_pages
     from recipes_spark.plans.cql import compile_cql
-
-    def span(name):
-        return tracer.span(name) if tracer is not None else nullcontext(SimpleNamespace())
 
     kind = req["kind"]
     if kind == "pages":
@@ -41,7 +35,7 @@ def execute(items, req: dict, tracer=None) -> list:
             datetime_range=req["datetime_range"],
         )
         for _ in range(req["pages"]):
-            with span("plans.catalog.page"):
+            with tracer.span("plans.catalog.page"):
                 page = next(pages, None)
                 got = page.collect() if page is not None else []
             rows += got
@@ -54,11 +48,11 @@ def execute(items, req: dict, tracer=None) -> list:
     elif kind == "ids":
         kwargs.update(ids=req["ids"])
     else:
-        with span("plans.cql.compile"):
+        with tracer.span("plans.cql.compile"):
             kwargs.update(filter=compile_cql(req["cql"]))
-    with span("plans.catalog.search_build"):
+    with tracer.span("plans.catalog.search_build"):
         df = catalog_search(items, **kwargs)
-    with span("plans.catalog.search_exec") as sp:
+    with tracer.span("plans.catalog.search_exec") as sp:
         rows = df.collect()
     sp.hits = len(rows)
     return rows

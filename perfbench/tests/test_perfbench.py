@@ -8,6 +8,7 @@ all)."""
 from __future__ import annotations
 
 import filecmp
+import itertools
 import json
 import os
 import shutil
@@ -24,7 +25,7 @@ with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
 
 
 def _landing(root: str, seed: int) -> list:
-    return gen.landing_batches(root, seed, n_batches=3, files_per_batch=30)
+    return list(itertools.islice(gen.landing_batches(root, seed, files_per_batch=30), 3))
 
 
 def test_landing_files_are_a_function_of_the_seed(tmp_path):
@@ -68,6 +69,46 @@ def test_benchmark_json_names_are_valid_and_unique():
     assert len(names) == len(set(names))
     assert [w["name"] for w in SPEC["workloads"]] == list(WORKLOADS)
     assert "setup_s" in {m["name"] for m in SPEC["end_to_end"]}
+
+
+def test_cpu_seconds_counts_the_python_workers():
+    """The workers of a mapInPandas are grandchildren of this process,
+    forked by the Python worker daemon the JVM starts; the CPU they
+    burn must show in cpu_seconds()."""
+    from pyspark.sql import SparkSession
+
+    from perfbench.run import stop_session
+    from perfbench.trace import cpu_seconds
+
+    def burning(seconds):
+        def burn(batches):
+            import time
+
+            t0 = time.process_time()
+            while time.process_time() - t0 < seconds:
+                pass
+            for pdf in batches:
+                yield pdf.assign(cpu=time.process_time() - t0)
+
+        return burn
+
+    spark = (
+        SparkSession.builder.master("local[2]").appName("perfbench-test")
+        .config("spark.ui.enabled", "false").getOrCreate()
+    )
+    try:
+        # The first job's JIT and worker start-up cost the JVM more CPU
+        # than the workers burn; time a second, warm one.
+        df = spark.range(0, 4, 1, 4)
+        df.mapInPandas(burning(0), "id long, cpu double").collect()
+        c0 = cpu_seconds()
+        rows = df.mapInPandas(burning(2.5), "id long, cpu double").collect()
+        spent = cpu_seconds() - c0
+    finally:
+        stop_session(spark)
+    workers = sum(r["cpu"] for r in rows)
+    assert workers >= 4 * 2.5
+    assert spent >= workers, (spent, workers)
 
 
 def _run(args: list[str], cwd: str) -> subprocess.CompletedProcess:

@@ -231,47 +231,82 @@ class RssSampler:
 
     def _run(self) -> None:
         me = os.getpid()
+        page_kb = os.sysconf("SC_PAGE_SIZE") // 1024
         while not self._stop.is_set():
-            self.peak_kb = max(self.peak_kb, sum(_rss_kb(p) for p in _tree(me)))
+            procs = _procs()
+            # rss (pages): field 24 of proc(5).
+            total = sum(int(procs[p][21]) for p in _tree(me, procs)) * page_kb
+            self.peak_kb = max(self.peak_kb, total)
             self._stop.wait(self.period)
 
 
-def _tree(root: int) -> list[int]:
-    out, todo = [], [root]
-    while todo:
-        pid = todo.pop()
-        out.append(pid)
+def _procs() -> dict[int, list[str]]:
+    """The /proc/<pid>/stat fields of every process, from field 3 (state)
+    on, keyed by pid."""
+    out = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
         try:
-            with open(f"/proc/{pid}/task/{pid}/children") as fh:
-                todo.extend(int(c) for c in fh.read().split())
+            with open(f"/proc/{name}/stat") as fh:
+                out[int(name)] = fh.read().rsplit(")", 1)[1].split()
         except OSError:
             pass
     return out
 
 
-def _rss_kb(pid: int) -> int:
-    try:
-        with open(f"/proc/{pid}/status") as fh:
-            for line in fh:
-                if line.startswith("VmRSS:"):
-                    return int(line.split()[1])
-    except OSError:
-        pass
-    return 0
+def _tree(root: int, procs: dict[int, list[str]]) -> list[int]:
+    """``root`` and its live descendants, linked by the parent pid in
+    each process's stat. (The children file of /proc/<pid>/task/<tid>
+    lists only what thread ``tid`` forked, and the JVM forks the Python
+    worker daemon from an executor thread, not its main one.)"""
+    children: dict[int, list[int]] = defaultdict(list)
+    for pid, fields in procs.items():
+        children[int(fields[1])].append(pid)
+    out, todo = [], [root]
+    while todo:
+        pid = todo.pop()
+        if pid in procs:
+            out.append(pid)
+            todo.extend(children[pid])
+    return out
 
 
-def cpu_seconds() -> float:
+def cpu_seconds(*, jit: bool = True) -> float:
     """CPU time (user + system) spent so far by this process and all of
     its live descendants, including children they have reaped — the
     JVM, the Python worker daemon and its workers. Unlike wall time it
-    does not grow when a shared host steals CPU from this machine."""
+    does not grow when a shared host steals CPU from this machine.
+
+    With ``jit=False`` the JVM's JIT compiler threads are left out:
+    their background compiling is warm-up, not the work of the
+    operation in flight. (run.py fixes the set of compiler threads, so
+    none exits and takes its CPU out of the per-thread sums.)"""
+    procs = _procs()
+    tree = _tree(os.getpid(), procs)
+    # utime, stime, cutime, cstime: fields 14-17 of proc(5).
+    ticks = sum(sum(int(f) for f in procs[p][11:15]) for p in tree)
+    if not jit:
+        ticks -= sum(_compiler_ticks(p) for p in tree)
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
+def _compiler_ticks(pid: int) -> int:
+    """utime + stime of the threads of ``pid`` that HotSpot names "C1
+    CompilerThread<n>" / "C2 CompilerThread<n>"."""
     ticks = 0
-    for pid in _tree(os.getpid()):
+    try:
+        tids = os.listdir(f"/proc/{pid}/task")
+    except OSError:
+        return 0
+    for tid in tids:
         try:
-            with open(f"/proc/{pid}/stat") as fh:
-                fields = fh.read().rsplit(")", 1)[1].split()
+            with open(f"/proc/{pid}/task/{tid}/stat") as fh:
+                raw = fh.read()
         except OSError:
             continue
-        # utime, stime, cutime, cstime: fields 14-17 of proc(5).
-        ticks += sum(int(f) for f in fields[11:15])
-    return ticks / os.sysconf("SC_CLK_TCK")
+        name = raw[raw.index("(") + 1:raw.rindex(")")]
+        if name.startswith(("C1 CompilerThre", "C2 CompilerThre")):
+            fields = raw.rsplit(")", 1)[1].split()
+            ticks += int(fields[11]) + int(fields[12])
+    return ticks

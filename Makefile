@@ -2,7 +2,7 @@
 # harness run, promoted out of the agent harness so they survive any
 # environment (CI, a fresh clone, a reviewer's shell).
 
-.PHONY: verify test bench probes lockfile planlock
+.PHONY: verify test bench probes lock
 
 # Driver simulation: import __spark_entry__ with a PLAIN SparkSession
 # (hostile non-UTC timezone, no engine tuning), smoke entry(), and
@@ -27,12 +27,12 @@ bench:
 probes:
 	python tools/stress_probes.py
 
-# Regenerate the attestation lockfile after touching recipes_spark/ —
-# the moment to decide whether registry._RECHECK entries are needed.
-lockfile:
+# Regenerate both lockfiles: the module attestation lockfile
+# (tests/module_fingerprints.json — after touching recipes_spark/, the
+# moment to decide whether registry._RECHECK entries are needed) and the
+# headline plan-fingerprint lockfile (tools/plan_fingerprints.json —
+# after a DELIBERATE physical-plan change; the test names the changed
+# queries). Commit the regenerated files with the change that needs them.
+lock:
 	python tests/test_recheck_hygiene.py
-
-# Regenerate the headline plan-fingerprint lockfile after a DELIBERATE
-# physical-plan change (the test names the changed queries).
-planlock:
 	python tools/plan_fingerprints.py

@@ -4,10 +4,18 @@ Store: partitioned Parquet by collection_id (the reference loads pgstac
 Postgres, docker-compose.yml:30-44; we keep the CAPABILITY — idempotent
 upsert + search — not the wire format).
 
-Upsert (S12, ToPgStac semantics): new batch ⟶ dedup-by-id against the
-existing partition via anti-join + union, written with DYNAMIC partition
-overwrite so only touched collections rewrite. Re-running the same batch
-is a no-op (idempotency test in tests/test_catalog.py).
+Upsert (S12, ToPgStac semantics): copy-on-write at FILE granularity. A
+semi-join on id finds the files of the touched collections that hold a
+batch id; only those are read, their rows without a batch id survive,
+and batch ∪ survivors is appended as one new file per touched
+collection. The hit files are deleted after the append (add, then
+delete): a failure in between leaves at worst duplicate ids, which a
+re-run of the batch removes, never a lost row (a reader that lists the
+store between the two steps sees those duplicates too). A batch's cost
+follows the batch, not the catalog. Re-running the same batch leaves
+the same rows (idempotency test in tests/test_catalog.py). Each upsert
+adds files, so compact_catalog is the maintenance step that bounds
+their count.
 
 Search (§3.3): collection equality → partition pruning; datetime range →
 min/max row-group pruning on start/end columns; bbox → G3 interval
@@ -19,6 +27,7 @@ from __future__ import annotations
 import os
 import weakref
 from collections.abc import Sequence
+from urllib.parse import unquote
 
 import pyspark.sql.functions as F
 from pyspark.errors import AnalysisException
@@ -166,38 +175,75 @@ def polygon_bbox_intersects(
     return envelope & pred
 
 
+def read_store(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet store at `path`, or None when it does not exist yet.
+    Only a genuinely-missing store means "first write": any other
+    analysis failure (corrupt store, permission, schema) raises, so an
+    upsert never skips its dedup against rows it could not read."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
+            raise
+        return None
+
+
+def _files_holding(store: DataFrame, batch: DataFrame) -> list[str]:
+    """Paths of the store files, in the batch's collections, that hold
+    any batch id. `_metadata.file_path` is a URI string; decoding it
+    gives the Hadoop path string the reader and the FileSystem take."""
+    touched = [
+        r["collection_id"]
+        for r in batch.select("collection_id").distinct().collect()
+    ]
+    hits = (
+        store.filter(F.col("collection_id").isin(touched))
+        .select("id", F.col("_metadata.file_path").alias("file"))
+        .join(batch.select("id"), "id", "left_semi")
+        .select("file")
+        .distinct()
+    )
+    return sorted(unquote(r["file"]) for r in hits.collect())
+
+
+def _delete_files(spark: SparkSession, paths: Sequence[str]) -> None:
+    """Delete files through the Hadoop FileSystem of each path."""
+    conf = spark._jsc.hadoopConfiguration()
+    for p in paths:
+        path = spark._jvm.org.apache.hadoop.fs.Path(p)
+        path.getFileSystem(conf).delete(path, False)
+
+
 def upsert_items(spark: SparkSession, items: DataFrame, catalog_path: str) -> None:
     """S12: idempotent upsert by item id into the partitioned store.
     Plain INSERT is not enough (SURVEY §4.1): re-runs must not duplicate.
-    New rows win over existing rows with the same id."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    New rows win over existing rows with the same id.
+
+    Copy-on-write at file granularity: only the files holding a batch
+    id are read; their other rows (the survivors) are appended with the
+    batch as one new file per touched collection, and then the hit
+    files are deleted. No path is overwritten while it is read, and the
+    caller's session conf is left alone."""
     batch = items.dropDuplicates(["id"])
-    try:
-        existing = spark.read.parquet(catalog_path)
-    except AnalysisException as e:
-        # Only a genuinely-missing store means "first write". Any other
-        # analysis failure (corrupt store, permission, schema) must NOT
-        # silently skip the dedup anti-join — with dynamic overwrite that
-        # would drop existing rows of touched partitions.
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
-        existing = None
-    if existing is None:
-        out = batch
-    else:
-        touched = [
-            r["collection_id"]
-            for r in batch.select("collection_id").distinct().collect()
-        ]
-        keep = existing.filter(F.col("collection_id").isin(touched)).join(
-            batch.select("id"), "id", "left_anti"
+    store = read_store(spark, catalog_path)
+    hit = [] if store is None else _files_holding(store, batch)
+    out = batch
+    if hit:
+        # The store's schema pins the partition column's type, which
+        # inference over a subset of directories could change. A re-run
+        # after a failed delete finds each survivor in two files: dedup.
+        survivors = (
+            spark.read.schema(store.schema)
+            .option("basePath", catalog_path)
+            .parquet(*hit)
+            .join(batch.select("id"), "id", "left_anti")
+            .dropDuplicates(["id"])
         )
-        out = batch.unionByName(keep)
-    # localCheckpoint: the overwrite below reads the same path it
-    # replaces — materialize first to avoid reading-while-overwriting.
-    out.localCheckpoint(eager=True).write.mode("overwrite").partitionBy(
+        out = batch.unionByName(survivors)
+    out.repartition("collection_id").write.mode("append").partitionBy(
         "collection_id"
     ).parquet(catalog_path)
+    _delete_files(spark, hit)
 
 
 def compact_catalog(
@@ -209,12 +255,13 @@ def compact_catalog(
 ) -> dict[str, int]:
     """Small-files maintenance for the upsert store (S12 aftermath).
 
-    Every `upsert_items` run rewrites touched partitions with however
-    many tasks the shuffle produced; after thousands of incremental
-    runs a partition holds thousands of KB-sized files, and at 100 TB
-    the scan's task-scheduling overhead dominates the query. This op
-    rewrites each collection partition into ceil(bytes/target) files
-    of ~target_file_bytes each.
+    Every `upsert_items` run adds one new file per touched collection
+    and deletes only the files it rewrote; after thousands of
+    incremental runs a partition holds thousands of KB-sized files, and
+    at 100 TB the scan's task-scheduling overhead dominates the query.
+    This op rewrites each collection partition into ceil(bytes/target)
+    files of ~target_file_bytes each, with a dynamic partition overwrite
+    that it sets on the session itself (the upsert needs none).
 
     File placement is deterministic: row → file via
     pmod(xxhash64(id), n_files), so re-running compaction is
@@ -263,8 +310,7 @@ def compact_catalog(
         .repartition("collection_id", "__bucket")
         .drop("__nf", "__bucket")
     )
-    # Materialize before overwriting the path being read (same pattern
-    # as upsert_items).
+    # Materialize before overwriting the path being read.
     bucketed.localCheckpoint(eager=True).write.mode("overwrite").partitionBy(
         "collection_id"
     ).parquet(catalog_path)

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
@@ -128,11 +129,13 @@ def upsert_items_to_database(
     (plans/items.build_items output) land as (id, collection_id,
     content) where content is the whole item document serialized to
     one JSON string — the pgstac items-table shape (id + collection +
-    JSONB content). New rows win on id."""
-    from recipes_spark.plans.items import items_to_json
-
-    docs = items_to_json(items).withColumnRenamed("json", "content")
-    keyed = items.select("id", "collection_id").join(docs, "id")
+    JSONB content). New rows win on id. One projection over `items`:
+    no self-join, so the frame is read once."""
+    keyed = items.select(
+        "id",
+        "collection_id",
+        F.to_json(F.struct(*items.columns)).alias("content"),
+    )
     upsert_to_database(
         keyed,
         table=table,

@@ -127,9 +127,9 @@ def merge_into(
     tagged = tagged_pieces[0]
     for p in tagged_pieces[1:]:
         tagged = tagged.unionByName(p)
-    # Materialize before overwriting the path being read (same pattern
-    # as upsert_items); counts + remaining-partition probe + write all
-    # read the checkpoint, not the joins.
+    # Materialize before overwriting the path being read; counts +
+    # remaining-partition probe + write all read the checkpoint, not
+    # the joins.
     tagged = tagged.localCheckpoint(eager=True)
     by_action = {
         r["__action"]: r["n"]

@@ -62,6 +62,154 @@ def test_upsert_untouched_partition_preserved(spark):
     assert store.filter(F.col("collection_id") == "c-b").count() == 20
 
 
+def _store_files(path):
+    """{relative path: size} of every data file in the store."""
+    import os
+
+    return {
+        os.path.relpath(os.path.join(d, f), path): os.path.getsize(os.path.join(d, f))
+        for d, _, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+
+
+def _rows(spark, path):
+    return sorted(spark.read.parquet(path).collect(), key=lambda r: r.id)
+
+
+def _changed(spark, n=10):
+    return _items(spark, n=n).withColumn(
+        "bbox", F.array(F.lit(0.0), F.lit(0.0), F.lit(1.0), F.lit(1.0))
+    )
+
+
+def test_upsert_delta_rewrites_only_hit_files(spark):
+    """Copy-on-write at file granularity: upserting one changed id into
+    a multi-file store rewrites only the file that held it. Every other
+    file keeps its name and size, and the rows written are at most the
+    changed row plus the hit file's other rows."""
+    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    for lo in (0, 50, 100):  # one new file per batch of new ids
+        ids = [f"item-{i}" for i in range(lo, lo + 50)]
+        upsert_items(spark, _items(spark, n=150).filter(F.col("id").isin(ids)), path)
+    other = _items(spark, n=20, collection="c-b").withColumn(
+        "id", F.concat(F.lit("other-"), F.col("id"))
+    )
+    upsert_items(spark, other, path)
+    before = _store_files(path)
+    assert len(before) == 4
+    holding = {
+        f for f in before
+        if spark.read.parquet(f"{path}/{f}").filter(F.col("id") == "item-60").count()
+    }
+    assert len(holding) == 1
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        upsert_items(spark, _changed(spark, n=61).filter(F.col("id") == "item-60"), path)
+        assert spark.conf.get(key) == "static"  # no session side effect
+    finally:
+        spark.conf.set(key, prior)
+
+    after = _store_files(path)
+    assert {f: before[f] for f in before if f not in holding} == {
+        f: after[f] for f in before if f not in holding
+    }
+    assert not holding & after.keys()
+    written = [f for f in after if f not in before]
+    assert len(written) == 1
+    hit_rows = 50
+    assert spark.read.parquet(f"{path}/{written[0]}").count() <= 1 + hit_rows
+    store = spark.read.parquet(path)
+    assert store.count() == 170 == store.select("id").distinct().count()
+    assert store.filter(F.col("bbox")[2] == 1.0).collect()[0].id == "item-60"
+
+
+def test_upsert_failed_delete_loses_no_row_and_rerun_converges(spark, monkeypatch):
+    """Add-then-delete: a crash while the hit files are deleted (after
+    the append) leaves both versions of the rewritten rows, never a lost
+    one, and re-running the same batch converges to the store a run
+    without the failure leaves: same rows, no duplicate ids."""
+    import pytest
+
+    import recipes_spark.plans.catalog as catalog
+
+    first = F.col("id").isin([f"item-{i}" for i in range(25)])
+    changed = _changed(spark, n=50).filter(
+        F.col("id").isin("item-0", "item-1", "item-30", "item-31")
+    )
+
+    def two_file_store():
+        path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+        upsert_items(spark, _items(spark).filter(first), path)
+        upsert_items(spark, _items(spark).filter(~first), path)
+        assert len(_store_files(path)) == 2
+        return path
+
+    clean = two_file_store()
+    upsert_items(spark, changed, clean)
+    expected = _rows(spark, clean)
+
+    path = two_file_store()
+    delete = catalog._delete_files
+
+    def crash_after_first(spark, paths):
+        assert len(paths) == 2
+        delete(spark, paths[:1])
+        raise RuntimeError("injected: delete step")
+
+    monkeypatch.setattr(catalog, "_delete_files", crash_after_first)
+    with pytest.raises(RuntimeError, match="injected"):
+        upsert_items(spark, changed, path)
+    left = spark.read.parquet(path)
+    assert {r.id for r in left.select("id").collect()} == {r.id for r in expected}
+    assert left.count() > 50  # the surviving old file duplicates some ids
+
+    monkeypatch.undo()
+    upsert_items(spark, changed, path)
+    assert _rows(spark, path) == expected
+    assert spark.read.parquet(path).select("id").distinct().count() == 50
+
+
+def _fail_finding_files(spark, monkeypatch):
+    import recipes_spark.plans.catalog as catalog
+
+    def fail(store, batch):
+        raise RuntimeError("injected: find step")
+
+    monkeypatch.setattr(catalog, "_files_holding", fail)
+    return _changed(spark)
+
+
+def _fail_inside_append(spark, monkeypatch):
+    # A row whose payload cannot be computed: the append job itself fails.
+    return _changed(spark).withColumn(
+        "end_datetime",
+        F.when(F.col("id") == "item-3", F.raise_error(F.lit("injected: append")))
+        .otherwise(F.col("end_datetime")),
+    )
+
+
+def test_upsert_failure_before_append_leaves_store_unchanged(spark, monkeypatch):
+    """A failure before the append commits (while the hit files are
+    found, or inside the append job) leaves the store's file list and
+    rows exactly as they were."""
+    import pytest
+
+    for make_batch in (_fail_finding_files, _fail_inside_append):
+        path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+        upsert_items(spark, _items(spark), path)
+        files, rows = _store_files(path), _rows(spark, path)
+        with pytest.raises(Exception, match="injected"):
+            upsert_items(spark, make_batch(spark, monkeypatch), path)
+        monkeypatch.undo()
+        assert _store_files(path) == files
+        assert _rows(spark, path) == rows
+
+
 def test_compact_catalog(spark):
     import glob as _glob
 

@@ -22,6 +22,18 @@ def _config(tmp: str) -> dict:
     }
 
 
+def _files(root: str) -> dict[str, tuple[int, int]]:
+    """{path: (size, mtime_ns)} of every file under root."""
+    return {
+        os.path.join(d, f): (
+            os.stat(os.path.join(d, f)).st_size,
+            os.stat(os.path.join(d, f)).st_mtime_ns,
+        )
+        for d, _, fs in os.walk(root)
+        for f in fs
+    }
+
+
 def test_runner_end_to_end_and_idempotent(spark):
     tmp = tempfile.mkdtemp(prefix="recipes_runner_")
     cfg = _config(tmp)
@@ -31,9 +43,36 @@ def test_runner_end_to_end_and_idempotent(spark):
     assert first["items"] == 12
     # Discovery memoized: the sha256-keyed manifest parquet exists.
     assert os.listdir(cfg["cache_root"])
-    # Re-run = no-op on both stores (ToPgStac re-run semantics).
+    # Re-run = no-op on both stores (ToPgStac re-run semantics), and an
+    # unchanged collections YAML leaves the collections files untouched.
+    collections = _files(f"{tmp}/catalog/collections")
     second = run_pipeline(spark, cfg)
     assert second == first
+    assert _files(f"{tmp}/catalog/collections") == collections
+
+
+def test_runner_rewrites_collections_only_when_yaml_changes(spark):
+    tmp = tempfile.mkdtemp(prefix="recipes_runner_cols_")
+    cfg = _config(tmp)
+    with open(cfg["collections"]) as fh:
+        docs = [d for d in yaml.safe_load_all(fh) if d]
+    cfg["collections"] = f"{tmp}/collections.yaml"
+    with open(cfg["collections"], "w") as fh:
+        yaml.safe_dump_all(docs, fh)
+    first = run_pipeline(spark, cfg)
+    before = _files(f"{tmp}/catalog/collections")
+
+    docs[0]["title"] = "retitled"
+    with open(cfg["collections"], "w") as fh:
+        yaml.safe_dump_all(docs, fh)
+    assert run_pipeline(spark, cfg) == first
+    assert _files(f"{tmp}/catalog/collections") != before
+    titles = {
+        r["id"]: r["title"]
+        for r in spark.read.parquet(f"{tmp}/catalog/collections").collect()
+    }
+    assert len(titles) == first["collections"]
+    assert titles[docs[0]["id"]] == "retitled"
 
 
 def test_runner_from_yaml_file(spark):

@@ -18,8 +18,13 @@ Why this shape at 100 TB:
   (Same reasoning as the parquet MERGE's new-rows-win.)
 - One connection and one prepared statement per partition, executemany
   in bounded batches: per-row connect/parse costs amortize to zero.
-- Back-pressure the database by sizing partitions
-  (df.repartition(n_writers)), not by throttling rows.
+- Back-pressure the database by sizing partitions, not by throttling
+  rows. The generic sink keeps the caller's partitioning
+  (df.repartition(n_writers)); the item sink sizes its own writers: it
+  hash-repartitions by id and lets AQE coalesce the shuffle, so a
+  metadata-sized landing batch gets one writer (one Python task, one
+  connection), a large backfill as many as its bytes call for, and
+  each id exactly one.
 
 The connection factory is any zero-arg picklable callable returning a
 DBAPI connection — e.g. ``functools.partial(psycopg2.connect, ...)``
@@ -130,8 +135,10 @@ def upsert_items_to_database(
     content) where content is the whole item document serialized to
     one JSON string — the pgstac items-table shape (id + collection +
     JSONB content). New rows win on id. One projection over `items`:
-    no self-join, so the frame is read once."""
-    keyed = items.select(
+    no self-join, so the frame is read once. The writers are the
+    AQE-coalesced partitions of a repartition by id (see the module
+    docstring), whatever the partitioning of `items`."""
+    keyed = items.repartition("id").select(
         "id",
         "collection_id",
         F.to_json(F.struct(*items.columns)).alias("content"),

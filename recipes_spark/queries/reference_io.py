@@ -37,11 +37,10 @@ _COLLECTIONS_PATH = os.path.join(
 def s5_glob_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5: distributed glob listing of the scale-factor directory —
     sorted(fs.glob(glob)) semantics (insitu…/recipe.py:40). The oracle
-    pins the exact file inventory."""
-    return (
-        glob_listing(spark, [f"{sf_dir}/*.parquet"])
-        .select(F.element_at(F.split("url", "/"), -1).alias("file"))
-        .orderBy("file")
+    pins the exact file inventory. One directory, so the listing's url
+    order is already file order; an orderBy would re-run the glob."""
+    return glob_listing(spark, [f"{sf_dir}/*.parquet"]).select(
+        F.element_at(F.split("url", "/"), -1).alias("file")
     )
 
 

@@ -9,7 +9,9 @@ with its own stores: `catalog.path` replaces the DSN (partitioned
 Parquet instead of Postgres — capability, not wire parity), `cache_root`
 memoizes discovery exactly like cached_glob (insitu…/recipe.py:30-45),
 and both phases stay two separate Spark actions so collections are
-durable before any item commits.
+durable before any item commits. Without `cache_root` the decode's own
+binaryFile file index is the discovery: `files` counts the files the
+decode read, undecodable ones included, and no second listing runs.
 
 Run:  python -m recipes_spark.runner path/to/config.yaml
 
@@ -23,6 +25,8 @@ Config:
                                    # reference's open_kwargs=storage_kwargs
                                    # pass-through (avhrr…/recipe.py:124,154),
                                    # fed to the executor-side filesystem
+                                   # of the cached listing's miss (only
+                                   # read when cache_root is set)
     xstac_kwargs:                  # optional projection metadata — the
       reference_system: epsg:4326  # reference's CreateStacItem xstac_kwargs
       x_dimension: lon             # (avhrr…/recipe.py:128-136); emits
@@ -47,7 +51,9 @@ from recipes_spark.sources.listing import cached_glob, read_collections_yaml
 
 def run_pipeline(spark: SparkSession, config: str | dict) -> dict[str, int]:
     """Execute the full ingest lifecycle from a runtime config. Returns
-    {"collections": n, "files": n, "items": n}. Idempotent: re-running
+    {"collections": n, "files": n, "items": n}: `files` is the cached
+    manifest's size with `cache_root`, else the number of files the
+    decode read; `items` is the catalog's size. Idempotent: re-running
     with the same config leaves both stores unchanged (upsert-by-id on
     both phases — ToPgStac re-run semantics, SURVEY §4.1)."""
     if isinstance(config, str):
@@ -79,21 +85,18 @@ def run_pipeline(spark: SparkSession, config: str | dict) -> dict[str, int]:
     # item assembly → idempotent upsert.
     pattern = config["granules"]
     cache_root = config.get("cache_root")
-    storage_kwargs = config.get("storage_kwargs")
+    decoded = file_metadata(spark, pattern)
     if cache_root:
-        listing = cached_glob(
+        n_files = cached_glob(
             spark, pattern, cache_root=cache_root,
-            storage_kwargs=storage_kwargs,
-        )
+            storage_kwargs=config.get("storage_kwargs"),
+        ).count()
     else:
-        from recipes_spark.sources.listing import glob_listing
+        # The binaryFile relation listed its files on the driver when it
+        # was created: counting them starts no job and no second listing.
+        n_files = len(decoded.inputFiles())
 
-        listing = glob_listing(
-            spark, [pattern], storage_kwargs=storage_kwargs
-        ).select("url")
-    n_files = listing.count()
-
-    meta = file_metadata(spark, pattern).select(
+    meta = decoded.select(
         F.col("granule_id").alias("item_id"),
         F.concat_ws("-", F.lit("sst"), F.col("platform")).alias("collection_id"),
         "west",

@@ -11,6 +11,11 @@ a row; fsspec/glob runs executor-side inside mapInPandas so a thousand
 category globs fan out across the cluster instead of serializing on the
 driver); the cache is an ordinary parquet manifest table keyed by
 sha2(glob, 256) — reading it back IS the cache hit.
+
+Driver-side rows (the patterns, the parsed YAML) enter Spark as pandas
+frames, which Arrow (on in the engine's session) carries to the JVM as a
+local relation: no Python task deserializes them, so the only Python
+work left is the glob.
 """
 
 from __future__ import annotations
@@ -61,13 +66,24 @@ def glob_listing(
     *,
     storage_kwargs: dict | None = None,
 ) -> DataFrame:
-    """S5: distributed listing — one row per (pattern, url), sorted
-    within pattern like the reference's sorted(fs.glob(...)). Local
+    """S5: distributed listing — one row per (pattern, url), sorted by
+    (pattern, url) like the reference's sorted(fs.glob(...)). Local
     filesystem via glob; proto://... patterns dispatch to fsspec
     executor-side (see _fs_glob). ``storage_kwargs`` (per-FS auth /
     options) rides the task closure into the executor-side filesystem
-    constructor."""
-    pat_df = spark.createDataFrame([(p,) for p in patterns], "pattern string")
+    constructor.
+
+    Each glob runs exactly once per action. The order comes from the
+    layout, not from a sort: the patterns are sorted on the driver and
+    sliced into contiguous runs, one pattern per task up to the default
+    parallelism (the reference loops them serially on the driver,
+    insitu…/recipe.py:140-152), and each task emits its patterns' urls
+    as _fs_glob sorts them. An ``orderBy`` here would add a
+    range-partition sampling job that re-runs every glob."""
+    pat_df = spark.createDataFrame(
+        pd.DataFrame({"pattern": sorted(patterns)}, columns=["pattern"]),
+        "pattern string",
+    )
 
     def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -77,14 +93,7 @@ def glob_listing(
                     out.append((p, url))
             yield pd.DataFrame(out, columns=["pattern", "url"])
 
-    # repartition so each pattern's (potentially slow, network-bound)
-    # glob runs as its own task — the reference loops them serially on
-    # the driver (insitu…/recipe.py:140-152).
-    return (
-        pat_df.repartition(max(len(patterns), 1), "pattern")
-        .mapInPandas(expand, schema="pattern string, url string")
-        .orderBy("pattern", "url")
-    )
+    return pat_df.mapInPandas(expand, schema="pattern string, url string")
 
 
 def _cache_path(cache_root: str, pattern: str) -> str:
@@ -139,8 +148,14 @@ def read_collections_yaml(spark: SparkSession, path: str) -> DataFrame:
         )
         for d in docs
     ]
+    columns = [
+        "id", "title", "description", "license", "keywords",
+        "temporal_start", "temporal_end",
+    ]
+    # A pandas frame crosses to the JVM through Arrow as a local relation;
+    # a list of tuples would go through parallelize and a Python-run scan.
     return spark.createDataFrame(
-        rows,
+        pd.DataFrame(rows, columns=columns),
         "id string, title string, description string, license string, "
         "keywords array<string>, temporal_start string, temporal_end string",
     ).withColumn(

@@ -26,9 +26,7 @@ def _connect(path: str) -> sqlite3.Connection:
     return sqlite3.connect(path, timeout=60)
 
 
-@pytest.fixture()
-def db(tmp_path):
-    path = str(tmp_path / "sink.db")
+def _create_tables(path: str) -> None:
     conn = sqlite3.connect(path)
     conn.execute(
         "CREATE TABLE items (id TEXT PRIMARY KEY, collection_id TEXT,"
@@ -40,6 +38,12 @@ def db(tmp_path):
     )
     conn.commit()
     conn.close()
+
+
+@pytest.fixture()
+def db(tmp_path):
+    path = str(tmp_path / "sink.db")
+    _create_tables(path)
     return path
 
 
@@ -175,3 +179,53 @@ def test_upsert_sql_golden_both_dialects():
         'INSERT INTO "we""ird" ("a", "b") VALUES (?, ?) '
         'ON CONFLICT ("a", "b") DO NOTHING'
     )
+
+
+def _logged_connect(path: str, log: str) -> sqlite3.Connection:
+    # Runs in the Python workers: one appended line per connection opened.
+    with open(log, "a") as fh:
+        fh.write("connect\n")
+    return _connect(path)
+
+
+def test_items_sink_sizes_its_writers_by_aqe(spark, db, tmp_path):
+    """A metadata-sized batch spread over 4 partitions gets ONE writer:
+    the sink repartitions by id and AQE coalesces the shuffle. The table
+    it leaves equals a per-input-partition write of the same rows."""
+    from recipes_spark.plans.items import build_items
+
+    meta = spark.range(40).select(
+        F.format_string("i%02d", "id").alias("item_id"),
+        F.concat(F.lit("c"), (F.col("id") % 3).cast("string")).alias(
+            "collection_id"
+        ),
+        F.col("id").cast("double").alias("west"),
+        F.lit(-5.0).alias("south"),
+        (F.col("id") + 1.0).alias("east"),
+        F.lit(5.0).alias("north"),
+        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("start_datetime"),
+        F.to_timestamp(F.lit("2024-01-02 00:00:00")).alias("end_datetime"),
+        F.format_string("u%02d", "id").alias("source_url"),
+    )
+    items = build_items(meta).repartition(4).localCheckpoint(eager=True)
+    assert items.rdd.getNumPartitions() == 4
+
+    log = str(tmp_path / "connects.log")
+    upsert_items_to_database(items, connect=partial(_logged_connect, db, log))
+    with open(log) as fh:
+        assert fh.read().split() == ["connect"]
+
+    per_partition = str(tmp_path / "per_partition.db")
+    _create_tables(per_partition)
+    upsert_to_database(
+        items.select(
+            "id", "collection_id",
+            F.to_json(F.struct(*items.columns)).alias("content"),
+        ),
+        table="items",
+        key_cols=["id"],
+        connect=partial(_connect, per_partition),
+    )
+    rows = _all(db, "items")
+    assert len(rows) == 40
+    assert rows == _all(per_partition, "items")

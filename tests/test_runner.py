@@ -126,3 +126,29 @@ def test_runner_xstac_and_database_sink(spark):
     assert doc["properties"]["proj:epsg"] == 4326
     assert run_pipeline(spark, cfg) == first  # rerun: both sinks no-op
     assert db_rows() == rows
+
+
+def test_runner_uncached_counts_the_files_the_decode_read(spark, monkeypatch):
+    """Without cache_root, `files` comes from the decode's own file
+    index: no second listing runs, and an undecodable file still
+    counts as a file read (it just yields no item)."""
+    import shutil
+
+    import recipes_spark.sources.listing as listing
+
+    def no_listing(*args, **kwargs):
+        raise AssertionError("the uncached runner must not list twice")
+
+    monkeypatch.setattr(listing, "glob_listing", no_listing)
+    tmp = tempfile.mkdtemp(prefix="recipes_runner_uncached_")
+    landing = f"{tmp}/landing"
+    shutil.copytree(stage_granules(6), landing)
+    with open(f"{landing}/corrupt.nc", "wb") as fh:
+        fh.write(b"not a granule")
+    cfg = _config(tmp)
+    del cfg["cache_root"]
+    cfg["granules"] = f"{landing}/*.nc"
+    first = run_pipeline(spark, cfg)
+    assert first["files"] == 7
+    assert first["items"] == 6
+    assert run_pipeline(spark, cfg) == first

@@ -12,7 +12,12 @@ from recipes_spark.sources.granules import (
     granule_meta,
     stage_granules,
 )
-from recipes_spark.sources.listing import cached_glob, glob_listing
+from recipes_spark.sources import listing
+from recipes_spark.sources.listing import (
+    cached_glob,
+    glob_listing,
+    read_collections_yaml,
+)
 
 
 def test_glob_listing_sorted_per_pattern(spark, sf_dir):
@@ -90,6 +95,64 @@ def test_cached_glob_materializes_and_hits(spark, sf_dir):
     # cache=False bypasses the manifest.
     live = cached_glob(spark, pattern, cache_root=cache_root, cache=False)
     assert live.count() == n
+
+
+def test_glob_listing_globs_each_pattern_once_per_action(
+    spark, sf_dir, monkeypatch, tmp_path
+):
+    """The globs run in the Python workers, so a wrapper that appends
+    one line per call to a file counts them. A collect over two patterns
+    globs each pattern once and returns rows sorted by (pattern, url);
+    the cached listing's miss globs once and its hit never."""
+    log = str(tmp_path / "globs.log")
+    real = listing._fs_glob
+
+    def logged(pattern, storage_kwargs=None):
+        with open(log, "a") as fh:
+            fh.write(pattern + "\n")
+        return real(pattern, storage_kwargs)
+
+    def calls() -> list[str]:
+        if not os.path.exists(log):
+            return []
+        with open(log) as fh:
+            out = fh.read().split()
+        os.remove(log)
+        return sorted(out)
+
+    monkeypatch.setattr(listing, "_fs_glob", logged)
+    patterns = [f"{sf_dir}/*.parquet", f"{sf_dir}/l*.parquet"]
+    rows = [(r.pattern, r.url) for r in glob_listing(spark, patterns).collect()]
+    assert calls() == sorted(patterns)
+    assert rows == sorted(rows)
+    assert {p for p, _ in rows} == set(patterns)
+
+    cache_root = str(tmp_path / "cache")
+    miss = cached_glob(spark, patterns[0], cache_root=cache_root)
+    assert calls() == [patterns[0]]
+    hit = cached_glob(spark, patterns[0], cache_root=cache_root)
+    assert [r.url for r in hit.collect()] == [r.url for r in miss.collect()]
+    assert calls() == []
+
+
+_COLLECTIONS_YAML = "recipes_spark/resources/collections.yaml"
+
+
+def test_read_collections_yaml_is_a_local_scan(spark):
+    """The parsed YAML reaches the JVM as a local relation: no RDD
+    scan, so no Python task runs to yield its rows."""
+    df = read_collections_yaml(spark, _COLLECTIONS_YAML)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+def test_read_collections_yaml_empty_keeps_schema(spark, tmp_path):
+    path = tmp_path / "empty.yaml"
+    path.write_text("---\n")
+    df = read_collections_yaml(spark, str(path))
+    assert df.collect() == []
+    assert df.schema == read_collections_yaml(spark, _COLLECTIONS_YAML).schema
 
 
 def test_manifest_keys_ignore_ineffective_blacklist(spark):

@@ -620,9 +620,11 @@ SELECT query_id, vec_id, cosine_sim, rnk FROM ranked WHERE rnk <= 10
 
 @query("x3_cosine_topk", oracle=_COSINE_ORACLE)
 def x3_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3: exact brute-force cosine top-10 for 5 query vectors —
-    broadcast queries × corpus, zip_with/aggregate dot products (all
-    JVM-side), window top-k. The 100 TB path is x3_lsh_topk."""
+    """X3: exact brute-force cosine top-10 for 5 query vectors through
+    `brute_force_topk`'s two-phase numpy kernel — a `mapInPandas` pass
+    scores each Arrow batch against the collected queries with one
+    matmul and keeps its local top-10 per query, then a window ranks
+    the partials. The 100 TB path is x3_lsh_topk."""
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")

@@ -8,6 +8,11 @@ Scale notes (100 TB design):
 - shuffle.partitions here is a local-mode default; on a real cluster AQE
   re-plans from `spark.sql.adaptive.coalescePartitions.initialPartitionNum`
   so the static number only caps the initial fan-out.
+- Python workers start from `recipes_spark.pyworker`
+  (`spark.python.daemon.module`): it swaps `pyspark.zip` for the
+  unpacked copy of the same pyspark and drops the spark-core jar from
+  the workers' `sys.path`, so a task no longer re-reads those archives'
+  directories. The executors must be able to import `recipes_spark`.
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "recipes_spark.pyworker")
     )
 
 

@@ -9,17 +9,18 @@ semi-join on id finds the files of the touched collections that hold a
 batch id; only those are read, their rows without a batch id survive,
 and batch ∪ survivors is appended as one new file per touched
 collection. The hit files are deleted after the append (add, then
-delete): a failure in between leaves at worst duplicate ids, which a
-re-run of the batch removes, never a lost row (a reader that lists the
+delete: `commit_rewrite`, which compact_catalog and plans/merge.py
+commit through too): a failure in between leaves at worst duplicate
+ids, which a re-run removes, never a lost row (a reader that lists the
 store between the two steps sees those duplicates too). A batch's cost
-follows the batch, not the catalog. Re-running the same batch leaves
-the same rows (idempotency test in tests/test_catalog.py). Each upsert
-adds files, so compact_catalog is the maintenance step that bounds
-their count.
+follows the batch, not the catalog. Each upsert adds files, so
+compact_catalog is the maintenance step that bounds their count.
 
-Search (§3.3): collection equality → partition pruning; datetime range →
-min/max row-group pruning on start/end columns; bbox → G3 interval
-arithmetic — all pushdown-friendly, zero UDFs.
+Search (§3.3): pure column arithmetic, zero UDFs, but only collection
+equality prunes (partition pruning). The datetime range prunes no row
+group (Spark writes INT96, which has no min/max statistics), and
+`bbox[i]` filters are not pushed down: only IsNotNull(bbox) reaches
+the reader.
 """
 
 from __future__ import annotations
@@ -46,8 +47,9 @@ def bbox_intersects(
     west: Column, south: Column, east: Column, north: Column,
     qw: float, qs: float, qe: float, qn: float,
 ) -> Column:
-    """G3: interval-overlap predicate NOT(disjoint) — pure SQL, pushes
-    down to parquet row-group stats when bbox corners are columns."""
+    """G3: interval-overlap predicate NOT(disjoint) — pure SQL. It could
+    prune row groups only over plain corner columns with statistics; on
+    the store's bbox array (`bbox[i]`) nothing is pushed down."""
     return ~(
         (east < F.lit(qw)) | (west > F.lit(qe)) | (north < F.lit(qs)) | (south > F.lit(qn))
     )
@@ -148,9 +150,10 @@ def polygon_bbox_intersects(
     rect-entirely-inside case, hole-aware via even-odd). Everything is
     compile-time constant except the four corner columns, and the
     polygon's ENVELOPE overlap — implied by any true intersection — is
-    AND-ed in as a redundant conjunct because ITS four comparisons
-    push down to parquet row-group stats; the exact predicate then
-    only evaluates on surviving row groups. Antimeridian-crossing
+    AND-ed in first as a cheap redundant conjunct. It prunes no row
+    group: comparisons on `bbox[i]` are not pushed to parquet, so the
+    exact predicate evaluates on every row of the scanned partitions.
+    Antimeridian-crossing
     query polygons are not supported here (split them into a
     MultiPolygon at ±180 first — the cql.py bbox path shows the
     split)."""
@@ -188,22 +191,24 @@ def read_store(spark: SparkSession, path: str) -> DataFrame | None:
         return None
 
 
-def _files_holding(store: DataFrame, batch: DataFrame) -> list[str]:
-    """Paths of the store files, in the batch's collections, that hold
-    any batch id. `_metadata.file_path` is a URI string; decoding it
+def scanned_files(files: DataFrame) -> list[tuple]:
+    """Sorted distinct rows of `files`, whose first column is a scan's
+    `_metadata.file_path`. That column is a URI string; decoding it
     gives the Hadoop path string the reader and the FileSystem take."""
-    touched = [
-        r["collection_id"]
-        for r in batch.select("collection_id").distinct().collect()
-    ]
+    return sorted((unquote(r[0]), *r[1:]) for r in files.distinct().collect())
+
+
+def _files_holding(store: DataFrame, batch: DataFrame, key: str, part: str) -> list[str]:
+    """Paths of the store files, in the batch's partitions, that hold
+    any batch key."""
+    touched = [r[0] for r in batch.select(part).distinct().collect()]
     hits = (
-        store.filter(F.col("collection_id").isin(touched))
-        .select("id", F.col("_metadata.file_path").alias("file"))
-        .join(batch.select("id"), "id", "left_semi")
+        store.filter(F.col(part).isin(touched))
+        .select(key, F.col("_metadata.file_path").alias("file"))
+        .join(batch.select(key), key, "left_semi")
         .select("file")
-        .distinct()
     )
-    return sorted(unquote(r["file"]) for r in hits.collect())
+    return [f for f, in scanned_files(hits)]
 
 
 def _delete_files(spark: SparkSession, paths: Sequence[str]) -> None:
@@ -214,19 +219,32 @@ def _delete_files(spark: SparkSession, paths: Sequence[str]) -> None:
         path.getFileSystem(conf).delete(path, False)
 
 
-def upsert_items(spark: SparkSession, items: DataFrame, catalog_path: str) -> None:
-    """S12: idempotent upsert by item id into the partitioned store.
-    Plain INSERT is not enough (SURVEY §4.1): re-runs must not duplicate.
-    New rows win over existing rows with the same id.
+def commit_rewrite(
+    spark: SparkSession, path: str, add: DataFrame, remove: Sequence[str],
+    *, partition_col: str,
+) -> None:
+    """The one way a partitioned store is rewritten: append `add`
+    partitioned by `partition_col`, then delete the `remove` files —
+    only files the writer's own scan read (`scanned_files`), so a file
+    that lands meanwhile is never deleted unread. Nothing is
+    overwritten and the session conf is left alone."""
+    add.write.mode("append").partitionBy(partition_col).parquet(path)
+    _delete_files(spark, remove)
 
-    Copy-on-write at file granularity: only the files holding a batch
-    id are read; their other rows (the survivors) are appended with the
-    batch as one new file per touched collection, and then the hit
-    files are deleted. No path is overwritten while it is read, and the
-    caller's session conf is left alone."""
-    batch = items.dropDuplicates(["id"])
+
+def upsert_items(
+    spark: SparkSession, items: DataFrame, catalog_path: str,
+    *, key: str = "id", partition_col: str = "collection_id",
+) -> None:
+    """S12: idempotent upsert by `key` into the store partitioned by
+    `partition_col`. Plain INSERT is not enough (SURVEY §4.1): re-runs
+    must not duplicate. New rows win over existing rows with the same
+    key. Only the files holding a batch key are read; their other rows
+    (the survivors) are appended with the batch as one new file per
+    touched partition, and then the hit files are deleted."""
+    batch = items.dropDuplicates([key])
     store = read_store(spark, catalog_path)
-    hit = [] if store is None else _files_holding(store, batch)
+    hit = [] if store is None else _files_holding(store, batch, key, partition_col)
     out = batch
     if hit:
         # The store's schema pins the partition column's type, which
@@ -236,14 +254,14 @@ def upsert_items(spark: SparkSession, items: DataFrame, catalog_path: str) -> No
             spark.read.schema(store.schema)
             .option("basePath", catalog_path)
             .parquet(*hit)
-            .join(batch.select("id"), "id", "left_anti")
-            .dropDuplicates(["id"])
+            .join(batch.select(key), key, "left_anti")
+            .dropDuplicates([key])
         )
         out = batch.unionByName(survivors)
-    out.repartition("collection_id").write.mode("append").partitionBy(
-        "collection_id"
-    ).parquet(catalog_path)
-    _delete_files(spark, hit)
+    commit_rewrite(
+        spark, catalog_path, out.repartition(partition_col), hit,
+        partition_col=partition_col,
+    )
 
 
 def compact_catalog(
@@ -260,8 +278,8 @@ def compact_catalog(
     incremental runs a partition holds thousands of KB-sized files, and
     at 100 TB the scan's task-scheduling overhead dominates the query.
     This op rewrites each collection partition into ceil(bytes/target)
-    files of ~target_file_bytes each, with a dynamic partition overwrite
-    that it sets on the session itself (the upsert needs none).
+    files of ~target_file_bytes each through `commit_rewrite`, keeping
+    one row per id so a re-run after a failed delete converges.
 
     File placement is deterministic: row → file via
     pmod(xxhash64(id), n_files), so re-running compaction is
@@ -274,28 +292,16 @@ def compact_catalog(
     if collections:
         store = store.filter(F.col("collection_id").isin(list(collections)))
 
-    # Per-collection byte sizes from the hidden _metadata file-source
-    # column, aggregated executor-side: distinct (file, size) pairs per
-    # collection, then sum — no per-file FileSystem RPC on the driver,
-    # so it scales to thousands of partitions/files.
-    sizes: dict[str, int] = {
-        r["collection_id"]: r["bytes"]
-        for r in (
-            store.select(
-                "collection_id",
-                F.col("_metadata.file_path").alias("__f"),
-                F.col("_metadata.file_size").alias("__sz"),
-            )
-            .distinct()
-            .groupBy("collection_id")
-            .agg(F.sum("__sz").alias("bytes"))
-            .collect()
-        )
-    }
-
-    plan = {
-        c: max(1, -(-b // target_file_bytes)) for c, b in sizes.items()
-    }
+    # One (file, collection, size) row per file the rewrite reads, from
+    # the hidden _metadata column (no per-file FileSystem RPC): both the
+    # plan and the files to delete come from these rows.
+    files = scanned_files(store.select(
+        F.col("_metadata.file_path"), "collection_id", F.col("_metadata.file_size"),
+    ))
+    sizes: dict[str, int] = {}
+    for _, c, size in files:
+        sizes[c] = sizes.get(c, 0) + size
+    plan = {c: max(1, -(-b // target_file_bytes)) for c, b in sizes.items()}
     if not plan:
         return {}
     plan_df = F.broadcast(
@@ -303,17 +309,18 @@ def compact_catalog(
             [(c, n) for c, n in plan.items()], "collection_id string, __nf int"
         )
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     bucketed = (
         store.join(plan_df, "collection_id")
         .withColumn("__bucket", F.pmod(F.xxhash64("id"), F.col("__nf")))
         .repartition("collection_id", "__bucket")
+        # Keyed by a superset of the repartition keys: no extra shuffle.
+        .dropDuplicates(["collection_id", "__bucket", "id"])
         .drop("__nf", "__bucket")
     )
-    # Materialize before overwriting the path being read.
-    bucketed.localCheckpoint(eager=True).write.mode("overwrite").partitionBy(
-        "collection_id"
-    ).parquet(catalog_path)
+    commit_rewrite(
+        spark, catalog_path, bucketed, [f for f, _, _ in files],
+        partition_col="collection_id",
+    )
     return plan
 
 
@@ -609,8 +616,8 @@ def catalog_search(
             out = out.filter(F.col("id").isin(list(ids)))
     if intersects is not None:
         # Top-level `intersects` (GeoJSON geometry): EXACT
-        # polygon-vs-footprint test, envelope conjunct included for
-        # pushdown — see polygon_bbox_intersects.
+        # polygon-vs-footprint test behind a cheap envelope conjunct —
+        # see polygon_bbox_intersects.
         out = out.filter(
             polygon_bbox_intersects(
                 intersects,

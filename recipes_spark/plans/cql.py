@@ -48,7 +48,9 @@ T_DURING/T_CONTAINS). The spatial
 property identifier resolves through ``spatial_cols`` and the temporal
 one through ``temporal_cols`` — the same indirection pgstac's
 queryables mapping performs. Everything compiles to plain column
-arithmetic: pushdown-friendly, zero UDFs.
+arithmetic, zero UDFs. On the catalog store that prunes nothing by
+itself: ``bbox[i]`` comparisons are not pushed to parquet, and the INT96
+datetime columns carry no min/max statistics.
 """
 
 from __future__ import annotations

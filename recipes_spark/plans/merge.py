@@ -5,7 +5,8 @@ hardness item "S12 true MERGE semantics without Delta").
 this operator generalizes it to the full MERGE matrix a Delta/Iceberg
 `MERGE INTO` offers — WHEN MATCHED UPDATE / DELETE / IGNORE, WHEN NOT
 MATCHED INSERT / IGNORE, with an optional matched-condition — while
-keeping the storage plain Parquet + dynamic partition overwrite. At
+keeping the storage plain Parquet, rewritten through the catalog's one
+add-then-delete commit (plans/catalog.commit_rewrite). At
 deployment the same call sites swap to transactional MERGE; the logical
 contract (and the tests) stay identical.
 
@@ -21,8 +22,11 @@ rewrite itself shuffles only touched-partition rows.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
+
+from recipes_spark.plans.catalog import commit_rewrite, read_store, scanned_files
+
+_ACTIONS = ("inserted", "updated", "deleted", "kept")
 
 
 def merge_into(
@@ -49,28 +53,24 @@ def merge_into(
 
     First write (missing path) inserts the source (unless 'ignore').
     Returns counts: {"inserted", "updated"|"deleted", "kept"} over the
-    touched partitions. Re-running the same merge is idempotent for
-    update/insert (delete removes already-removed keys: no-op).
+    touched partitions. The touched partitions' rows are appended, then
+    their old files deleted; a re-run after a failure between the two
+    steps drops the duplicate kept rows. Re-running the same merge is
+    idempotent for update/insert (delete removes already-removed keys:
+    no-op).
     """
     if when_matched not in ("update", "delete", "ignore"):
         raise ValueError(f"when_matched must be update|delete|ignore: {when_matched}")
     if when_not_matched not in ("insert", "ignore"):
         raise ValueError(f"when_not_matched must be insert|ignore: {when_not_matched}")
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     src = source.dropDuplicates([on])
-
-    try:
-        target = spark.read.parquet(target_path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
+    target = read_store(spark, target_path)
+    if target is None:
         if when_not_matched == "ignore":
-            return {"inserted": 0, "updated": 0, "deleted": 0, "kept": 0}
-        out = src
-        n = out.count()
-        out.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
-        return {"inserted": n, "updated": 0, "deleted": 0, "kept": 0}
+            return dict.fromkeys(_ACTIONS, 0)
+        inserted = src.withColumn("__action", F.lit("inserted"))
+        return _commit(spark, target_path, inserted, [], on, partition_col)
 
     # Narrow (key, partition) scan finds every partition holding a
     # matched key — handles keys whose partition value CHANGED in the
@@ -86,9 +86,13 @@ def merge_into(
     source_parts = src.select(F.col(partition_col).alias("__p")).distinct()
     touched = [r["__p"] for r in source_parts.union(matched_parts).distinct().collect()]
     if not touched:
-        return {"inserted": 0, "updated": 0, "deleted": 0, "kept": 0}
+        return dict.fromkeys(_ACTIONS, 0)
 
     in_touched = target.filter(F.col(partition_col).isin(touched))
+    # Every old file of the touched partitions is replaced, so a
+    # partition the merge empties loses its rows with them.
+    files = in_touched.select(F.col("_metadata.file_path"))
+    remove = [f for f, in scanned_files(files)]
 
     # Tag matched target rows (semi/anti joins keep plans shuffle-light;
     # source keys broadcast).
@@ -108,9 +112,8 @@ def merge_into(
     all_tgt_keys = in_touched.select(F.col(on).alias("__k")).distinct()
     src_new = src.join(F.broadcast(all_tgt_keys), src[on] == F.col("__k"), "left_anti")
 
-    # Tag every piece with its action so ONE materialization serves both
-    # the counts and the rewrite (the old per-action .count() calls each
-    # re-executed the target scan + joins).
+    # Tag every piece with its action so one plan serves both the counts
+    # and the rewrite.
     tagged_pieces = [
         tgt_unmatched.withColumn("__action", F.lit("kept")),
         non_qualifying.withColumn("__action", F.lit("kept")),
@@ -127,37 +130,24 @@ def merge_into(
     tagged = tagged_pieces[0]
     for p in tagged_pieces[1:]:
         tagged = tagged.unionByName(p)
-    # Materialize before overwriting the path being read; counts +
-    # remaining-partition probe + write all read the checkpoint, not
-    # the joins.
-    tagged = tagged.localCheckpoint(eager=True)
+    return _commit(spark, target_path, tagged, remove, on, partition_col)
+
+
+def _commit(spark, path, tagged, remove, on, partition_col) -> dict[str, int]:
+    """Count `tagged` by action, then commit its rows that are not
+    deleted in place of the `remove` files."""
+    # The count job projects __action only, so column pruning keeps the
+    # payload out of it.
     by_action = {
         r["__action"]: r["n"]
         for r in tagged.groupBy("__action").agg(F.count("*").alias("n")).collect()
     }
-    counts = {k: by_action.get(k, 0) for k in ("inserted", "updated", "deleted", "kept")}
-    out = tagged.filter(F.col("__action") != "deleted").drop("__action")
-    out.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
-
-    # Dynamic overwrite only rewrites partitions PRESENT in `out` — any
-    # action that empties a touched partition (a delete, or an UPDATE
-    # that moves a key out of a partition it solely occupied) would
-    # leave its old files behind (Hive dynamic-partition semantics) and
-    # resurrect the rows. Drop emptied touched partitions explicitly:
-    # bounded, metadata-only.
-    remaining = {
-        r["__p"]
-        for r in out.select(F.col(partition_col).alias("__p")).distinct().collect()
-    }
-    emptied = set(touched) - remaining
-    if emptied:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        for part in emptied:
-            p = jvm.org.apache.hadoop.fs.Path(
-                f"{target_path}/{partition_col}={part}"
-            )
-            fs = p.getFileSystem(conf)
-            if fs.exists(p):
-                fs.delete(p, True)
-    return counts
+    out = (
+        tagged.filter(F.col("__action") != "deleted")
+        .drop("__action")
+        .repartition(partition_col)
+        # Keyed by a superset of the repartition key: no extra shuffle.
+        .dropDuplicates([partition_col, on])
+    )
+    commit_rewrite(spark, path, out, remove, partition_col=partition_col)
+    return {k: by_action.get(k, 0) for k in _ACTIONS}

@@ -9,9 +9,10 @@ with its own stores: `catalog.path` replaces the DSN (partitioned
 Parquet instead of Postgres — capability, not wire parity), `cache_root`
 memoizes discovery exactly like cached_glob (insitu…/recipe.py:30-45),
 and both phases stay two separate Spark actions so collections are
-durable before any item commits. Without `cache_root` the decode's own
-binaryFile file index is the discovery: `files` counts the files the
-decode read, undecodable ones included, and no second listing runs.
+durable before any item commits. With `cache_root` the decode reads
+exactly the cached manifest's files; without it the decode's own
+binaryFile file index is the discovery. Either way `files` counts the
+files the decode read, undecodable ones included.
 
 Run:  python -m recipes_spark.runner path/to/config.yaml
 
@@ -51,9 +52,9 @@ from recipes_spark.sources.listing import cached_glob, read_collections_yaml
 
 def run_pipeline(spark: SparkSession, config: str | dict) -> dict[str, int]:
     """Execute the full ingest lifecycle from a runtime config. Returns
-    {"collections": n, "files": n, "items": n}: `files` is the cached
-    manifest's size with `cache_root`, else the number of files the
-    decode read; `items` is the catalog's size. Idempotent: re-running
+    {"collections": n, "files": n, "items": n}: `files` is the number
+    of files the decode read (the cached manifest's with `cache_root`);
+    `items` is the catalog's size. Idempotent: re-running
     with the same config leaves both stores unchanged (upsert-by-id on
     both phases — ToPgStac re-run semantics, SURVEY §4.1)."""
     if isinstance(config, str):
@@ -85,15 +86,21 @@ def run_pipeline(spark: SparkSession, config: str | dict) -> dict[str, int]:
     # item assembly → idempotent upsert.
     pattern = config["granules"]
     cache_root = config.get("cache_root")
-    decoded = file_metadata(spark, pattern)
     if cache_root:
-        n_files = cached_glob(
-            spark, pattern, cache_root=cache_root,
-            storage_kwargs=config.get("storage_kwargs"),
-        ).count()
+        # Decode exactly the manifest's files, so `files` and `items`
+        # describe the same listing even when a granule lands later.
+        urls = [
+            r["url"]
+            for r in cached_glob(
+                spark, pattern, cache_root=cache_root,
+                storage_kwargs=config.get("storage_kwargs"),
+            ).collect()
+        ]
+        decoded, n_files = file_metadata(spark, urls), len(urls)
     else:
         # The binaryFile relation listed its files on the driver when it
         # was created: counting them starts no job and no second listing.
+        decoded = file_metadata(spark, pattern)
         n_files = len(decoded.inputFiles())
 
     meta = decoded.select(

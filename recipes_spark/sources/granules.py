@@ -27,7 +27,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 from datetime import datetime, timedelta
 
 import pandas as pd
@@ -259,10 +259,11 @@ def _meta_rows(pairs) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=_META_COLUMNS)
 
 
-def file_metadata(spark: SparkSession, path_glob: str) -> DataFrame:
+def file_metadata(spark: SparkSession, path_glob: str | Sequence[str]) -> DataFrame:
     """S10+S11: binaryFile scan → one metadata row per decodable file.
-    Undecodable files are dropped (at scale: route to a quarantine
-    table instead, SURVEY §1.2)."""
+    `path_glob` is a glob or a list of paths, as binaryFile `load`
+    takes. Undecodable files are dropped (at scale: route to a
+    quarantine table instead, SURVEY §1.2)."""
     files = spark.read.format("binaryFile").load(path_glob)
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

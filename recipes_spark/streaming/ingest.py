@@ -8,10 +8,10 @@ catalog. Every micro-batch is a transactional-enough unit: re-delivery
 of a batch (at-least-once file source) cannot duplicate rows because
 the upsert anti-joins on the key.
 
-Scale notes: the per-batch rewrite touches only partitions present in
-the batch (dynamic partition overwrite); at 100 TB the store would be
-Delta/Iceberg MERGE, but the capability — idempotent incremental load —
-is identical.
+Scale notes: the per-batch rewrite (plans/catalog.upsert_items) reads
+and replaces only the store files holding a batch key, appending first
+and deleting after; at 100 TB the store would be Delta/Iceberg MERGE,
+but the capability — idempotent incremental load — is identical.
 """
 
 from __future__ import annotations
@@ -44,6 +44,7 @@ from recipes_spark.queries.corpus_ops import (
 from recipes_spark.queries.dataops import (
     _index_commit_oracle_sql as _index_commit_oracle,
 )
+from recipes_spark.plans.catalog import upsert_items
 from recipes_spark.registry import query
 from recipes_spark.streaming.core import stream_events
 
@@ -52,30 +53,6 @@ from recipes_spark.streaming.core import stream_events
 INDEX_COMMIT_NOFLAGS_ORACLE = _index_commit_oracle(flags=False)
 
 _IDS = itertools.count()
-
-
-def upsert_batch(
-    batch: DataFrame, path: str, *, key: str, partition_col: str
-) -> None:
-    """Idempotent keyed upsert into a parquet store partitioned by
-    `partition_col`. New rows win; only touched partitions rewrite."""
-    spark = batch.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    fresh = batch.dropDuplicates([key])
-    try:
-        existing = spark.read.parquet(path)
-        touched = [
-            r[0] for r in fresh.select(partition_col).distinct().collect()
-        ]
-        keep = existing.filter(F.col(partition_col).isin(touched)).join(
-            fresh.select(key), key, "left_anti"
-        )
-        out = fresh.unionByName(keep)
-    except Exception:  # first batch: store does not exist yet
-        out = fresh
-    out.localCheckpoint(eager=True).write.mode("overwrite").partitionBy(
-        partition_col
-    ).parquet(path)
 
 
 def ingest_events(
@@ -92,8 +69,9 @@ def ingest_events(
     )
     q = (
         ev.writeStream.foreachBatch(
-            lambda bdf, _bid: upsert_batch(
-                bdf, catalog_path, key="event_id", partition_col="event_type"
+            lambda bdf, _bid: upsert_items(
+                bdf.sparkSession, bdf, catalog_path,
+                key="event_id", partition_col="event_type",
             )
         )
         .option(

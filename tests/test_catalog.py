@@ -7,8 +7,11 @@ import os
 import tempfile
 
 import pyspark.sql.functions as F
+import pytest
 
-from recipes_spark.plans.catalog import catalog_search, upsert_items
+from recipes_spark.plans.catalog import catalog_search, compact_catalog, upsert_items
+from recipes_spark.plans.merge import merge_into
+from recipes_spark.streaming.ingest import ingest_events
 
 
 def _items(spark, n=50, collection="c-a"):
@@ -127,32 +130,57 @@ def test_upsert_delta_rewrites_only_hit_files(spark):
     assert store.filter(F.col("bbox")[2] == 1.0).collect()[0].id == "item-60"
 
 
-def test_upsert_failed_delete_loses_no_row_and_rerun_converges(spark, monkeypatch):
-    """Add-then-delete: a crash while the hit files are deleted (after
-    the append) leaves both versions of the rewritten rows, never a lost
-    one, and re-running the same batch converges to the store a run
-    without the failure leaves: same rows, no duplicate ids."""
-    import pytest
+def _row_set(rows):
+    return {str(r) for r in rows}
 
-    import recipes_spark.plans.catalog as catalog
 
+def _two_file_store(spark):
+    """50 items of collection c-a in two files (item-0..24, the rest)."""
     first = F.col("id").isin([f"item-{i}" for i in range(25)])
-    changed = _changed(spark, n=50).filter(
-        F.col("id").isin("item-0", "item-1", "item-30", "item-31")
+    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    upsert_items(spark, _items(spark).filter(first), path)
+    upsert_items(spark, _items(spark).filter(~first), path)
+    assert len(_store_files(path)) == 2
+    return path
+
+
+def _batch(spark):
+    """Two changed ids in each file of the two-file store, and two new
+    ids."""
+    return _changed(spark, n=52).filter(
+        F.col("id").isin("item-0", "item-1", "item-30", "item-31", "item-50", "item-51")
     )
 
-    def two_file_store():
-        path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
-        upsert_items(spark, _items(spark).filter(first), path)
-        upsert_items(spark, _items(spark).filter(~first), path)
-        assert len(_store_files(path)) == 2
-        return path
 
-    clean = two_file_store()
-    upsert_items(spark, changed, clean)
+#: Every writer that rewrites the store through catalog.commit_rewrite,
+#: each reading both files of the two-file store.
+_WRITERS = {
+    "upsert": lambda spark, path, batch: upsert_items(spark, batch, path),
+    "merge_update": lambda spark, path, batch: merge_into(
+        spark, path, batch, on="id", partition_col="collection_id",
+    ),
+    "merge_delete": lambda spark, path, batch: merge_into(
+        spark, path, batch, on="id", partition_col="collection_id",
+        when_matched="delete", when_not_matched="ignore",
+    ),
+    "compact": lambda spark, path, batch: compact_catalog(spark, path),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_WRITERS))
+def test_failed_delete_loses_no_row_and_rerun_converges(spark, monkeypatch, writer):
+    """Add-then-delete: a crash while the replaced files are deleted
+    (after the append) leaves both versions of the rewritten rows, never
+    a lost one, and re-running the same write converges to the store a
+    run without the failure leaves: same rows, no duplicate ids."""
+    import recipes_spark.plans.catalog as catalog
+
+    write = _WRITERS[writer]
+    clean = _two_file_store(spark)
+    write(spark, clean, _batch(spark))
     expected = _rows(spark, clean)
 
-    path = two_file_store()
+    path = _two_file_store(spark)
     delete = catalog._delete_files
 
     def crash_after_first(spark, paths):
@@ -162,57 +190,87 @@ def test_upsert_failed_delete_loses_no_row_and_rerun_converges(spark, monkeypatc
 
     monkeypatch.setattr(catalog, "_delete_files", crash_after_first)
     with pytest.raises(RuntimeError, match="injected"):
-        upsert_items(spark, changed, path)
-    left = spark.read.parquet(path)
-    assert {r.id for r in left.select("id").collect()} == {r.id for r in expected}
-    assert left.count() > 50  # the surviving old file duplicates some ids
+        write(spark, path, _batch(spark))
+    left = _rows(spark, path)
+    assert _row_set(expected) <= _row_set(left)
+    assert len(left) > len(expected)  # the surviving old file's copies
 
     monkeypatch.undo()
-    upsert_items(spark, changed, path)
+    write(spark, path, _batch(spark))
     assert _rows(spark, path) == expected
-    assert spark.read.parquet(path).select("id").distinct().count() == 50
+    store = spark.read.parquet(path)
+    assert store.count() == store.select("id").distinct().count()
 
 
-def _fail_finding_files(spark, monkeypatch):
-    import recipes_spark.plans.catalog as catalog
+def _fail_while_planning(spark, monkeypatch):
+    # Every writer plans on the driver (its touched partitions, the
+    # files it reads) before it appends.
+    def fail(self):
+        raise RuntimeError("injected: plan step")
 
-    def fail(store, batch):
-        raise RuntimeError("injected: find step")
-
-    monkeypatch.setattr(catalog, "_files_holding", fail)
-    return _changed(spark)
+    monkeypatch.setattr(type(spark.range(1)), "collect", fail)
 
 
 def _fail_inside_append(spark, monkeypatch):
     # A row whose payload cannot be computed: the append job itself fails.
-    return _changed(spark).withColumn(
-        "end_datetime",
-        F.when(F.col("id") == "item-3", F.raise_error(F.lit("injected: append")))
-        .otherwise(F.col("end_datetime")),
-    )
+    cls = type(spark.range(1))
+    write = cls.write
+
+    def poisoned(self):
+        bad = self.withColumn(
+            "end_datetime",
+            F.when(F.col("id") == "item-3", F.raise_error(F.lit("injected: append")))
+            .otherwise(F.col("end_datetime")),
+        )
+        return write.fget(bad)
+
+    monkeypatch.setattr(cls, "write", property(poisoned))
 
 
-def test_upsert_failure_before_append_leaves_store_unchanged(spark, monkeypatch):
-    """A failure before the append commits (while the hit files are
-    found, or inside the append job) leaves the store's file list and
-    rows exactly as they were."""
-    import pytest
-
-    for make_batch in (_fail_finding_files, _fail_inside_append):
-        path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
-        upsert_items(spark, _items(spark), path)
+@pytest.mark.parametrize("writer", sorted(_WRITERS))
+def test_failure_before_append_leaves_store_unchanged(spark, monkeypatch, writer):
+    """A failure before the append commits (while the writer plans, or
+    inside the append job) leaves the store's file list and rows exactly
+    as they were."""
+    for inject in (_fail_while_planning, _fail_inside_append):
+        path = _two_file_store(spark)
         files, rows = _store_files(path), _rows(spark, path)
+        batch = _batch(spark)
+        inject(spark, monkeypatch)
         with pytest.raises(Exception, match="injected"):
-            upsert_items(spark, make_batch(spark, monkeypatch), path)
+            _WRITERS[writer](spark, path, batch)
         monkeypatch.undo()
         assert _store_files(path) == files
         assert _rows(spark, path) == rows
 
 
+def test_writers_leave_partition_overwrite_mode_alone(spark, sf_dir):
+    """merge_into, ingest_events and compact_catalog leave the session's
+    partitionOverwriteMode as the caller set it, so a later overwrite of
+    a partitioned path still replaces the whole directory."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        tmp = tempfile.mkdtemp(prefix="recipes_test_conf_")
+        path = f"{tmp}/catalog"
+        for _ in range(2):  # first write, then a rewrite
+            merge_into(spark, path, _items(spark), on="id", partition_col="collection_id")
+        ingest_events(spark, sf_dir, f"{tmp}/events")
+        compact_catalog(spark, path)
+        assert spark.conf.get(key) == "static"
+
+        _items(spark, n=5, collection="c-b").write.mode("overwrite").partitionBy(
+            "collection_id"
+        ).parquet(path)
+        assert sorted(d for d in os.listdir(path) if "=" in d) == ["collection_id=c-b"]
+        assert spark.read.parquet(path).count() == 5
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_compact_catalog(spark):
     import glob as _glob
-
-    from recipes_spark.plans.catalog import compact_catalog
 
     path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
     # Fragmented store: 200 rows spread across 40 tiny files.

@@ -152,3 +152,26 @@ def test_runner_uncached_counts_the_files_the_decode_read(spark, monkeypatch):
     assert first["files"] == 7
     assert first["items"] == 6
     assert run_pipeline(spark, cfg) == first
+
+
+def test_runner_cached_decodes_the_manifest_files(spark):
+    """With cache_root, the decode reads the cached manifest's files,
+    not a fresh glob: a granule that lands after the manifest was
+    written is neither counted nor ingested, so `files` and `items`
+    describe the same listing."""
+    import shutil
+
+    tmp = tempfile.mkdtemp(prefix="recipes_runner_cached_")
+    landing = f"{tmp}/landing"
+    staged = stage_granules(7)
+    os.makedirs(landing)
+    names = sorted(f for f in os.listdir(staged) if f.endswith(".nc"))
+    for name in names[:6]:
+        shutil.copy(f"{staged}/{name}", landing)
+    cfg = _config(tmp)
+    cfg["granules"] = f"{landing}/*.nc"
+    first = run_pipeline(spark, cfg)
+    assert (first["files"], first["items"]) == (6, 6)
+
+    shutil.copy(f"{staged}/{names[6]}", landing)
+    assert run_pipeline(spark, cfg) == first

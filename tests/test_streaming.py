@@ -10,7 +10,8 @@ import pyspark.sql.functions as F
 
 from recipes_spark.io import load
 from recipes_spark.streaming.core import run_to_memory, stream_events
-from recipes_spark.streaming.ingest import ingest_events, upsert_batch
+from recipes_spark.plans.catalog import upsert_items
+from recipes_spark.streaming.ingest import ingest_events
 
 SF = "/root/testdata/sf0.001"
 
@@ -78,14 +79,46 @@ def test_t1_ingest_idempotent(spark):
     assert first == second == n_source
 
 
+def test_ingest_into_unreadable_store_raises_and_keeps_every_row(spark):
+    """A store that exists but cannot be read is not a first write. A
+    conflicting partition directory (stray=1/ beside event_type=…/)
+    makes reading it fail: the ingest must raise and leave every
+    original file and row in place, never overwrite partitions with the
+    batch alone."""
+    import glob
+    import os
+    import shutil
+
+    import pytest
+
+    catalog = tempfile.mkdtemp(prefix="recipes_test_stray_") + "/store"
+    ingest_events(spark, SF, catalog)
+    rows = sorted(spark.read.parquet(catalog).collect(), key=lambda r: r.event_id)
+    files = {
+        f: os.path.getsize(f) for f in glob.glob(f"{catalog}/event_type=*/*.parquet")
+    }
+    os.makedirs(f"{catalog}/stray=1")
+    shutil.copy(min(files), f"{catalog}/stray=1/part-00000-stray.parquet")
+
+    with pytest.raises(Exception):
+        ingest_events(spark, SF, catalog)
+    assert {
+        f: os.path.getsize(f) for f in glob.glob(f"{catalog}/event_type=*/*.parquet")
+    } == files
+    after = spark.read.option("basePath", catalog).parquet(
+        *glob.glob(f"{catalog}/event_type=*")
+    )
+    assert sorted(after.collect(), key=lambda r: r.event_id) == rows
+
+
 def test_upsert_new_rows_win(spark):
     """Upserting a changed row with an existing key replaces the old
     row instead of duplicating it."""
     path = tempfile.mkdtemp(prefix="recipes_test_upsert_") + "/store"
     ev = load(spark, SF, "events").limit(100)
-    upsert_batch(ev, path, key="event_id", partition_col="event_type")
+    upsert_items(spark, ev, path, key="event_id", partition_col="event_type")
     changed = ev.limit(10).withColumn("value", F.lit(-1.0))
-    upsert_batch(changed, path, key="event_id", partition_col="event_type")
+    upsert_items(spark, changed, path, key="event_id", partition_col="event_type")
     store = spark.read.parquet(path)
     assert store.count() == 100
     assert store.filter(F.col("value") == -1.0).count() == 10

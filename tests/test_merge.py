@@ -1,6 +1,6 @@
 """MERGE INTO semantics on plain Parquet (SURVEY §4.1 hardness item):
 the full matched/not-matched matrix, key-moves-partition handling, and
-delete-empties-partition cleanup — the contracts a Delta/Iceberg MERGE
+emptied partitions — the contracts a Delta/Iceberg MERGE
 would give, kept storage-agnostic."""
 
 from __future__ import annotations
@@ -69,9 +69,9 @@ def test_merge_key_moves_partition(spark):
 
 def test_merge_update_moves_sole_occupant(spark):
     """An update that moves a key out of a partition it SOLELY occupied
-    must drop the emptied partition directory — dynamic overwrite never
-    rewrites a partition absent from the output, so without the cleanup
-    the old file resurrects the row (key duplicated across partitions)."""
+    must delete that partition's old file, although no new row lands
+    there — else the old file resurrects the row (key duplicated across
+    partitions)."""
     path = tempfile.mkdtemp(prefix="recipes_merge_") + "/store"
     spark.createDataFrame(
         [(1, "a", 10.0), (3, "b", 30.0)], "id long, part string, v double"
@@ -103,7 +103,7 @@ def test_merge_delete_with_condition(spark):
 
 def test_merge_delete_empties_partition(spark):
     """Deleting every row of a partition must not resurrect old files:
-    the emptied partition directory is dropped."""
+    the emptied partition's files are deleted."""
     path = _store(spark)
     src = spark.createDataFrame(
         [(3, "b", 0.0), (4, "b", 0.0)], "id long, part string, v double"

@@ -5,16 +5,18 @@ Postgres, docker-compose.yml:30-44; we keep the CAPABILITY — idempotent
 upsert + search — not the wire format).
 
 Upsert (S12, ToPgStac semantics): copy-on-write at FILE granularity. A
-semi-join on id finds the files of the touched collections that hold a
-batch id; only those are read, their rows without a batch id survive,
-and batch ∪ survivors is appended as one new file per touched
-collection. The hit files are deleted after the append (add, then
-delete: `commit_rewrite`, which compact_catalog and plans/merge.py
-commit through too): a failure in between leaves at worst duplicate
-ids, which a re-run removes, never a lost row (a reader that lists the
-store between the two steps sees those duplicates too). A batch's cost
-follows the batch, not the catalog. Each upsert adds files, so
-compact_catalog is the maintenance step that bounds their count.
+semi-join on id over the store's narrow (id, file) scan finds the files
+that hold a batch id, in any collection (an item whose collection
+changed is found in its old one); only those are read, their rows
+without a batch id survive, and batch ∪ survivors is appended as one
+new file per touched collection. The hit files are deleted after the
+append (add, then delete: `commit_rewrite`, which compact_catalog and
+plans/merge.py commit through too): a failure in between leaves at
+worst duplicate ids, which a re-run removes, never a lost row (a reader
+that lists the store between the two steps sees those duplicates too).
+Apart from the id-column scan, a batch's cost follows the batch, not
+the catalog. Each upsert adds files, so compact_catalog is the
+maintenance step that bounds their count.
 
 Search (§3.3): pure column arithmetic, zero UDFs, but only collection
 equality prunes (partition pruning). The datetime range prunes no row
@@ -198,13 +200,13 @@ def scanned_files(files: DataFrame) -> list[tuple]:
     return sorted((unquote(r[0]), *r[1:]) for r in files.distinct().collect())
 
 
-def _files_holding(store: DataFrame, batch: DataFrame, key: str, part: str) -> list[str]:
-    """Paths of the store files, in the batch's partitions, that hold
-    any batch key."""
-    touched = [r[0] for r in batch.select(part).distinct().collect()]
+def _files_holding(store: DataFrame, batch: DataFrame, key: str) -> list[str]:
+    """Paths of the store files that hold any batch key, in any
+    partition: a key whose partition value changed is found where it
+    was. One narrow (key, file) scan of the whole store, as merge_into
+    scans for moved keys; column pruning keeps the payload out."""
     hits = (
-        store.filter(F.col(part).isin(touched))
-        .select(key, F.col("_metadata.file_path").alias("file"))
+        store.select(key, F.col("_metadata.file_path").alias("file"))
         .join(batch.select(key), key, "left_semi")
         .select("file")
     )
@@ -239,12 +241,14 @@ def upsert_items(
     """S12: idempotent upsert by `key` into the store partitioned by
     `partition_col`. Plain INSERT is not enough (SURVEY §4.1): re-runs
     must not duplicate. New rows win over existing rows with the same
-    key. Only the files holding a batch key are read; their other rows
-    (the survivors) are appended with the batch as one new file per
-    touched partition, and then the hit files are deleted."""
+    key, in whatever partition the existing row sits (a row that moves
+    partition leaves none behind). Only the files holding a batch key
+    are read; their other rows (the survivors) are appended with the
+    batch as one new file per touched partition, and then the hit files
+    are deleted."""
     batch = items.dropDuplicates([key])
     store = read_store(spark, catalog_path)
-    hit = [] if store is None else _files_holding(store, batch, key, partition_col)
+    hit = [] if store is None else _files_holding(store, batch, key)
     out = batch
     if hit:
         # The store's schema pins the partition column's type, which

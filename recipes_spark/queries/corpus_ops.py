@@ -5943,7 +5943,7 @@ def x4_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bigram LM build AND the scoring join, train1 feeds two LM joins
     # AND the train-total — branch-specific pruning defeats
     # ReuseExchange and the executed plan re-tokenized the corpus 8×
-    # per run (tools/executed_scan_probe_r17.py). After the barriers
+    # per run (executed-plan scan count, measured in r17). After the barriers
     # the corpus tokenizes exactly twice (bigram pass + unigram pass),
     # the query's declared shape; at 100 TB stage dt2 to a table (it
     # is the big object — the same caveat as the near-dup store).
@@ -6784,7 +6784,7 @@ def x4_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sweep): dl feeds the stats agg AND the score join, tf feeds the
     # df agg AND the score join, and branch-specific pruning defeats
     # ReuseExchange — the executed plan scanned documents 7× per run
-    # (tools/executed_scan_probe_r17.py). Both frames are doc-count /
+    # (executed-plan scan count, measured in r17). Both frames are doc-count /
     # (doc × query-term)-sized metadata, never corpus text; after the
     # barriers the corpus is tokenized exactly twice (lengths pass +
     # the IN-filtered term pass), its declared two-pass shape.

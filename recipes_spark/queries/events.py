@@ -1290,7 +1290,7 @@ def event_anomaly_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the zero-fill join, the stats agg and the final join each
         # re-derive this base, and branch-specific column pruning
         # defeats ReuseExchange — the executed plan scanned events 6×
-        # per run (tools/executed_scan_probe_r17.py). The base is
+        # per run (executed-plan scan count, measured in r17). The base is
         # (type × hour)-sized metadata, so one barrier buys scans → 1.
         .localCheckpoint(eager=True)
     )

@@ -6,38 +6,6 @@ import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-#: Historical intent-test modules (rounds 7-15): deselected from the
-#: DEFAULT run, opt-in via SPARK_GRAFT_FULL_TESTS=1. Why: the full
-#: suite outgrew the external driver's pytest budget (r16: truncated at
-#: ~86% with zero failures -> `tests_ok: false` with nothing actually
-#: failing), which costs the round its ground truth. The default tier
-#: keeps everything that attests CURRENT behavior end-to-end — the
-#: full oracle suite (every registered query vs DuckDB at the driver's
-#: SF), plan + module fingerprints, operator/property tests, and the
-#: two most recent rounds' intent tests — and defers only the old
-#: rounds' intent tests, whose assertions are behavior the oracle
-#: suite already replays every run. No test is deleted; CI/builders
-#: run the full suite with SPARK_GRAFT_FULL_TESTS=1 before shipping.
-_DEFERRED_FILES = {
-    f"test_intent_round{r}.py"
-    for r in ("7", "7b", "7c", "7d", "7e", "8", "9", "10", "11", "12",
-              "13", "14", "15")
-}
-
-_FULL = os.environ.get("SPARK_GRAFT_FULL_TESTS", "") == "1"
-
-
-def pytest_collection_modifyitems(config, items):
-    if _FULL:
-        return
-    keep, drop = [], []
-    for item in items:
-        name = os.path.basename(str(item.fspath))
-        (drop if name in _DEFERRED_FILES else keep).append(item)
-    if drop:
-        config.hook.pytest_deselected(items=drop)
-        items[:] = keep
-
 # The oracle-match gate runs at the DRIVER's scale factor by default so
 # local green predicts driver green (SF-dependent issues — empty groups,
 # ties, sampling — surface here first). Point it at sf0.001 for faster

@@ -66,6 +66,18 @@ def test_upsert_untouched_partition_preserved(spark):
     assert store.filter(F.col("collection_id") == "c-b").count() == 20
 
 
+def test_upsert_moves_a_key_to_its_new_partition(spark):
+    """An item whose collection changes keeps one row, in the new
+    collection: the upsert finds the old row outside the batch's
+    partitions, and the old file's other rows survive."""
+    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    schema = "id string, v int, collection_id string"
+    upsert_items(spark, spark.createDataFrame([("a", 1, "c1"), ("b", 1, "c1")], schema), path)
+    upsert_items(spark, spark.createDataFrame([("a", 2, "c2")], schema), path)
+    rows = sorted(tuple(r) for r in spark.read.parquet(path).select("id", "v", "collection_id").collect())
+    assert rows == [("a", 2, "c2"), ("b", 1, "c1")]
+
+
 def _store_files(path):
     """{relative path: size} of every data file in the store."""
     return {

@@ -19,6 +19,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "recipes_spark")
@@ -117,3 +118,34 @@ def test_front_and_defer_names_are_registered_and_ordered():
     # first — a new round's names can never displace prior backlog.
     defer_rounds = [_DEFER[n] for n, t in zip(order, tiers) if t == 3]
     assert defer_rounds == sorted(defer_rounds), defer_rounds
+
+
+def _texts(paths):
+    for path in paths:
+        with open(path, encoding="utf-8", errors="replace") as fh:
+            yield fh.read()
+
+
+def _files_under(top, suffix=""):
+    for dirpath, dirnames, filenames in os.walk(os.path.join(REPO, top)):
+        dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+        yield from (os.path.join(dirpath, f) for f in filenames if f.endswith(suffix))
+
+
+def test_every_tool_is_referenced():
+    """A script under tools/ must be run or cited by the Makefile, a
+    test, an engine module or the verify skill: a one-off probe that
+    nothing names is deleted, not kept (perfbench's tracer is the
+    profiling instrument)."""
+    corpus = "\n".join(_texts([
+        os.path.join(REPO, "Makefile"),
+        *_files_under("tests"),
+        *_files_under("recipes_spark", ".py"),
+        *_files_under(os.path.join(".claude", "skills")),
+    ]))
+    tools = sorted(f[:-3] for f in os.listdir(os.path.join(REPO, "tools")) if f.endswith(".py"))
+    unnamed = [
+        t for t in tools
+        if not re.search(rf"\b{t}\.py\b|\b(?:from|import) {t}\b", corpus)
+    ]
+    assert not unnamed, f"tools/ scripts nothing references: {unnamed}"

@@ -13,7 +13,8 @@ verify:
 
 # Full local gate: every registered query vs its oracle at the driver's
 # SF, driver-style canonicalization of every output, plan-shape
-# assertions, recall/error gates for the approximate operators. ~6 min.
+# assertions, recall/error gates for the approximate operators, intent
+# tests. ~21 min on 4 cores.
 test:
 	python -m pytest tests/ -q
 

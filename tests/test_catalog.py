@@ -72,9 +72,11 @@ def test_upsert_moves_a_key_to_its_new_partition(spark):
     partitions, and the old file's other rows survive."""
     path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
     schema = "id string, v int, collection_id string"
-    upsert_items(spark, spark.createDataFrame([("a", 1, "c1"), ("b", 1, "c1")], schema), path)
+    first = spark.createDataFrame([("a", 1, "c1"), ("b", 1, "c1")], schema)
+    upsert_items(spark, first, path)
     upsert_items(spark, spark.createDataFrame([("a", 2, "c2")], schema), path)
-    rows = sorted(tuple(r) for r in spark.read.parquet(path).select("id", "v", "collection_id").collect())
+    store = spark.read.parquet(path).select("id", "v", "collection_id")
+    rows = sorted(tuple(r) for r in store.collect())
     assert rows == [("a", 2, "c2"), ("b", 1, "c1")]
 
 

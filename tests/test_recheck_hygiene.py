@@ -20,6 +20,7 @@ import hashlib
 import json
 import os
 import re
+from pathlib import Path
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "recipes_spark")
@@ -120,12 +121,6 @@ def test_front_and_defer_names_are_registered_and_ordered():
     assert defer_rounds == sorted(defer_rounds), defer_rounds
 
 
-def _texts(paths):
-    for path in paths:
-        with open(path, encoding="utf-8", errors="replace") as fh:
-            yield fh.read()
-
-
 def _files_under(top, suffix=""):
     for dirpath, dirnames, filenames in os.walk(os.path.join(REPO, top)):
         dirnames[:] = [d for d in dirnames if d != "__pycache__"]
@@ -137,12 +132,13 @@ def test_every_tool_is_referenced():
     test, an engine module or the verify skill: a one-off probe that
     nothing names is deleted, not kept (perfbench's tracer is the
     profiling instrument)."""
-    corpus = "\n".join(_texts([
+    paths = [
         os.path.join(REPO, "Makefile"),
         *_files_under("tests"),
         *_files_under("recipes_spark", ".py"),
         *_files_under(os.path.join(".claude", "skills")),
-    ]))
+    ]
+    corpus = "\n".join(Path(p).read_text(errors="replace") for p in paths)
     tools = sorted(f[:-3] for f in os.listdir(os.path.join(REPO, "tools")) if f.endswith(".py"))
     unnamed = [
         t for t in tools

@@ -9,11 +9,14 @@ semi-join on id over the store's narrow (id, file) scan finds the files
 that hold a batch id, in any collection (an item whose collection
 changed is found in its old one); only those are read, their rows
 without a batch id survive, and batch ∪ survivors is appended as one
-new file per touched collection. The hit files are deleted after the
-append (add, then delete: `commit_rewrite`, which compact_catalog and
-plans/merge.py commit through too): a failure in between leaves at
-worst duplicate ids, which a re-run removes, never a lost row (a reader
-that lists the store between the two steps sees those duplicates too).
+new file per touched collection. Both joins take the batch's raw ids,
+so the batch's dedup shuffle runs once, in the write, and the
+survivors' dedup rides the append's shuffle on collection_id. The hit
+files are deleted after the append (add, then delete: `commit_rewrite`,
+which compact_catalog and plans/merge.py commit through too): a failure
+in between leaves at worst duplicate ids, which a re-run removes, never
+a lost row (a reader that lists the store between the two steps sees
+those duplicates too).
 Apart from the id-column scan, a batch's cost follows the batch, not
 the catalog. Each upsert adds files, so compact_catalog is the
 maintenance step that bounds their count.
@@ -245,26 +248,35 @@ def upsert_items(
     partition leaves none behind). Only the files holding a batch key
     are read; their other rows (the survivors) are appended with the
     batch as one new file per touched partition, and then the hit files
-    are deleted."""
-    batch = items.dropDuplicates([key])
+    are deleted.
+
+    Shuffles: the batch is deduplicated by `key` once, in the write; the
+    semi join that finds the hit files and the anti join that drops the
+    batch's keys from them take the batch's raw key column. Survivors
+    are deduplicated by (`partition_col`, `key`) after the append's
+    repartition by `partition_col`, so that dedup adds no shuffle.
+    Spark picks broadcast or shuffle joins by size, so a backfill-sized
+    batch is not forced into a broadcast."""
     store = read_store(spark, catalog_path)
-    hit = [] if store is None else _files_holding(store, batch, key)
-    out = batch
+    hit = [] if store is None else _files_holding(store, items, key)
+    out = items.dropDuplicates([key])
     if hit:
         # The store's schema pins the partition column's type, which
-        # inference over a subset of directories could change. A re-run
-        # after a failed delete finds each survivor in two files: dedup.
+        # inference over a subset of directories could change.
         survivors = (
             spark.read.schema(store.schema)
             .option("basePath", catalog_path)
             .parquet(*hit)
-            .join(batch.select(key), key, "left_anti")
-            .dropDuplicates([key])
+            .join(items.select(key), key, "left_anti")
         )
-        out = batch.unionByName(survivors)
+        out = out.unionByName(survivors)
+    # A re-run after a failed delete finds a survivor in two files of its
+    # partition. Batch keys are unique and disjoint from the survivors',
+    # so this dedup only drops those copies.
     commit_rewrite(
-        spark, catalog_path, out.repartition(partition_col), hit,
-        partition_col=partition_col,
+        spark, catalog_path,
+        out.repartition(partition_col).dropDuplicates([partition_col, key]),
+        hit, partition_col=partition_col,
     )
 
 
@@ -784,6 +796,14 @@ def snapshot_commit(
     )
 
 
+def _manifest_files(spark: SparkSession, man_dir: str) -> list[str]:
+    """The data files a snapshot manifest lists, in manifest order, as
+    Hadoop path strings. A manifest stores each file's
+    `_metadata.file_path`, a URI string, so every entry is decoded as
+    `scanned_files` decodes a scan's paths."""
+    return [unquote(r["file"]) for r in spark.read.parquet(man_dir).collect()]
+
+
 def snapshot_vacuum(
     spark: SparkSession, store_path: str, *, retain_from: int
 ) -> dict:
@@ -810,10 +830,11 @@ def snapshot_vacuum(
         raise ValueError(
             f"retain_from={retain_from} keeps no manifest (have {versions})"
         )
-    refs = set()
-    for v in retained:
-        for r in spark.read.parquet(os.path.join(man_dir, f"v{v}")).collect():
-            refs.add(r["file"].removeprefix("file://").removeprefix("file:"))
+    refs = {
+        f.removeprefix("file://").removeprefix("file:")
+        for v in retained
+        for f in _manifest_files(spark, os.path.join(man_dir, f"v{v}"))
+    }
     deleted = kept = 0
     data_root = os.path.join(store_path, "data")
     for dirpath, _dirs, files in os.walk(data_root):
@@ -878,9 +899,7 @@ def snapshot_read(
         key, per_session = None, None
     if per_session is not None and key in per_session:
         return per_session[key]
-    files = [
-        r["file"] for r in spark.read.parquet(man_dir).collect()
-    ]
+    files = _manifest_files(spark, man_dir)
     if not files:
         raise ValueError(
             f"snapshot v{version} at {store_path} references no data "

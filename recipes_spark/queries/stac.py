@@ -240,9 +240,11 @@ LIMIT 100
 )
 def stac_catalog_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.3: STAC search (collections + datetime interval + bbox +
-    sortby + limit) compiled to one DataFrame plan. On the partitioned
-    store, collection_id pruning skips partitions and the datetime
-    predicates prune row groups."""
+    sortby + limit) compiled to one DataFrame plan. It searches the
+    in-memory `build_items` frame, so no predicate prunes a scan here;
+    on the partitioned store only the collection filter prunes
+    (partitions), and the datetime predicates prune no row group
+    (INT96 timestamps carry no statistics)."""
     items = build_items(_metadata(spark, sf_dir))
     found = catalog_search(
         items,

@@ -8,6 +8,14 @@ Scale notes (100 TB design):
 - shuffle.partitions here is a local-mode default; on a real cluster AQE
   re-plans from `spark.sql.adaptive.coalescePartitions.initialPartitionNum`
   so the static number only caps the initial fan-out.
+- File listing stays on the driver in local mode: a read of more than
+  `spark.sql.sources.parallelPartitionDiscovery.threshold` paths (32 by
+  default) otherwise lists them again in a Spark job with one task per
+  path — 50 tasks for a 50-file ingest batch's glob or manifest list.
+  In local mode those tasks run on the driver JVM's own threads, so the
+  job adds only scheduling and Hadoop-conf serialization. `configure`
+  leaves the threshold alone: a cluster session keeps Spark's parallel
+  listing, which spreads a large listing over its executors.
 - Python workers start from `recipes_spark.pyworker`
   (`spark.python.daemon.module`): it swaps `pyspark.zip` for the
   unpacked copy of the same pyspark and drops the spark-core jar from
@@ -47,6 +55,7 @@ def get_session(app_name: str = "recipes-spark", cpus: str | None = None) -> Spa
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", n)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
         # 24g (was 8g): in local mode the driver heap IS the executor
         # heap for all N threads; at 8g the 16-query bench hit GC
         # pressure in its back half (st2/x2 2x inflated, position-

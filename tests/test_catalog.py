@@ -144,6 +144,33 @@ def test_upsert_delta_rewrites_only_hit_files(spark):
     assert store.filter(F.col("bbox")[2] == 1.0).collect()[0].id == "item-60"
 
 
+def test_upsert_write_shuffles_the_key_only_for_the_batch_dedup(spark, monkeypatch):
+    """The upsert's joins take the batch's raw keys, and the survivors'
+    dedup rides the commit's shuffle on the partition column: the write
+    plan has one Exchange on the key (the batch's own dedup) and one on
+    the partition column."""
+    import re
+
+    import recipes_spark.plans.catalog as catalog
+
+    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    upsert_items(spark, _items(spark), path)
+    written = []
+    commit = catalog.commit_rewrite
+
+    def capture(spark, path, add, remove, *, partition_col):
+        written.append(add)
+        commit(spark, path, add, remove, partition_col=partition_col)
+
+    monkeypatch.setattr(catalog, "commit_rewrite", capture)
+    upsert_items(spark, _changed(spark, n=60), path)
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    keys = re.findall(r"Exchange hashpartitioning\((\w+)#", plan)
+    assert sorted(keys) == ["collection_id", "id"], plan
+    store = spark.read.parquet(path)
+    assert store.count() == 60 == store.select("id").distinct().count()
+
+
 def _row_set(rows):
     return {str(r) for r in rows}
 
@@ -159,10 +186,14 @@ def _two_file_store(spark):
 
 
 def _batch(spark):
-    """Two changed ids in each file of the two-file store, and two new
-    ids."""
+    """Two changed ids in each file of the two-file store, one of each
+    pair moving to collection c-b, and two new ids. Whichever file a
+    failed delete leaves behind still holds the old row of a moved id."""
     return _changed(spark, n=52).filter(
         F.col("id").isin("item-0", "item-1", "item-30", "item-31", "item-50", "item-51")
+    ).withColumn(
+        "collection_id",
+        F.when(F.col("id").isin("item-1", "item-31"), "c-b").otherwise(F.col("collection_id")),
     )
 
 
@@ -711,3 +742,21 @@ def test_search_pages_fields_projection_keeps_cursor(spark):
         assert p.columns == ["id", "collection_id"]
     ids = [r["id"] for p in pages for r in p.collect()]
     assert ids == [f"i{i:03d}" for i in range(49, -1, -1)]
+
+
+def test_snapshot_read_and_vacuum_decode_manifest_paths(spark):
+    """Manifests list `_metadata.file_path` URIs. Under a store path
+    with a space and a `%`, a snapshot still reads its files, and vacuum
+    keeps every file a retained manifest lists."""
+    from recipes_spark.plans.catalog import (
+        snapshot_commit, snapshot_read, snapshot_vacuum,
+    )
+
+    store = tempfile.mkdtemp(prefix="recipes snap 5%_") + "/store"
+    for v in (1, 2):
+        rows = spark.range((v - 1) * 10, v * 10).repartition(2)
+        snapshot_commit(spark, rows, store, v)
+    assert snapshot_read(spark, store, 2).count() == 20
+    stats = snapshot_vacuum(spark, store, retain_from=2)
+    assert (stats["files_deleted"], stats["files_retained"]) == (0, 4)
+    assert sorted(r.id for r in snapshot_read(spark, store, 2).collect()) == list(range(20))

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import functools
+import glob
 import os
 import tempfile
 
@@ -188,6 +189,23 @@ def test_granule_roundtrip(spark):
     assert got.west == expect["west"] and got.north == expect["north"]
     assert got.n_bytes > 100  # header + payload
     assert got.end_datetime > got.start_datetime
+
+
+def test_decode_of_a_large_batch_starts_no_listing_job(spark):
+    """Building the decode of a 40-file glob, or of the same 40 files as
+    a path list, lists them on the driver: no Spark job starts."""
+    root = stage_granules(40)
+    pattern = os.path.join(root, "*.nc")
+    sc = spark.sparkContext
+    for i, source in enumerate((pattern, sorted(glob.glob(pattern)))):
+        group = f"test-decode-listing-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            decoded = file_metadata(spark, source)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(decoded.inputFiles()) == 40
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_undecodable_files_dropped(spark):

@@ -2,7 +2,7 @@
 # harness run, promoted out of the agent harness so they survive any
 # environment (CI, a fresh clone, a reviewer's shell).
 
-.PHONY: verify test bench probes lock
+.PHONY: verify test perftest bench probes lock
 
 # Driver simulation: import __spark_entry__ with a PLAIN SparkSession
 # (hostile non-UTC timezone, no engine tuning), smoke entry(), and
@@ -17,6 +17,13 @@ verify:
 # tests. ~21 min on 4 cores.
 test:
 	python -m pytest tests/ -q
+
+# The benchmark's own tests: generator determinism, metric names and
+# tiny end-to-end runs of both perfbench workloads. `make test`
+# collects only tests/, so run this after touching perfbench/ or an
+# engine path its workloads drive. A few minutes.
+perftest:
+	python -m pytest perfbench/tests -q
 
 # Headline-query benchmark at $$SPARK_GRAFT_SF_DIR (default sf0.1),
 # min-of-5 per query; prints one JSON line.

@@ -184,14 +184,21 @@ def polygon_bbox_intersects(
 
 
 def read_store(spark: SparkSession, path: str) -> DataFrame | None:
-    """The parquet store at `path`, or None when it does not exist yet.
-    Only a genuinely-missing store means "first write": any other
-    analysis failure (corrupt store, permission, schema) raises, so an
-    upsert never skips its dedup against rows it could not read."""
+    """The parquet store at `path`, or None when it holds no row yet:
+    the directory is missing, or it holds no data file to infer a
+    schema from (every earlier write was empty, as after a batch whose
+    files were all quarantined, which leaves only `_SUCCESS`). Any
+    other analysis failure (corrupt store, permission, schema) raises,
+    so an upsert never skips its dedup against rows it could not
+    read."""
     try:
         return spark.read.parquet(path)
     except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
+        msg = str(e)
+        if not any(
+            m in msg for m in
+            ("PATH_NOT_FOUND", "Path does not exist", "UNABLE_TO_INFER_SCHEMA")
+        ):
             raise
         return None
 

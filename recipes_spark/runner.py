@@ -121,7 +121,9 @@ def run_pipeline(spark: SparkSession, config: str | dict) -> dict[str, int]:
         meta, projection=config.get("xstac_kwargs")
     ).localCheckpoint(eager=True)
     upsert_items(spark, items, f"{catalog}/items")
-    n_items = spark.read.parquet(f"{catalog}/items").count()
+    # The items' own schema: no footer read to infer one, and a store
+    # that holds no data file yet counts 0 instead of failing.
+    n_items = spark.read.schema(items.schema).parquet(f"{catalog}/items").count()
 
     # Optional database sink alongside the parquet store — the
     # reference's actual sink shape (ToPgStac → pgstac JSONB upsert).

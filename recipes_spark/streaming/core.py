@@ -1,5 +1,5 @@
-"""Streaming primitives: stage the events table as a file-source
-directory, read it as a stream, run to a memory sink.
+"""Streaming primitives: stage a landing directory, read it as a
+file-source stream, drive the stream to completion.
 
 Why staging: the driver's events.parquet stores TIMESTAMP(NANOS), which
 Spark's (batch or streaming) parquet reader rejects without the
@@ -8,6 +8,11 @@ source no micro-batch structure. Staging batch-loads through
 recipes_spark.io.load (micros conversion applied once) and rewrites as
 N files — the stream then exercises real file discovery and, with
 maxFilesPerTrigger=1, real multi-batch watermark progression.
+
+Every stream in the package is read by `read_staged` and driven by one
+availableNow lifecycle (start, await, stop): `run_to_memory` sinks into
+a memory table, `run_foreach_batch` hands each micro-batch to a body
+(the st* sketch-state and upsert queries in ingest.py).
 
 Scale note: in production the file source watches a manifest/landing
 directory (the reference's hourly-updated HTTP listings, SURVEY §2.10
@@ -57,45 +62,12 @@ def stage_events(
     return root
 
 
-def stage_events_ordered(
-    spark: SparkSession, sf_dir: str, *, chunks: int = 4
-) -> str:
-    """Stage events as `chunks` files split along the GLOBAL
-    (ts, event_id) order — file i holds rows strictly before file i+1.
-    This is the in-order-delivery contract a CDC apply stream assumes
-    (change batches arrive in commit order); mtimes force the file
-    source to read them in that order. Memoized like stage_events."""
-    key = (sf_dir, -1, chunks)
-    if key in _STAGED and os.path.isdir(_STAGED[key]):
-        return _STAGED[key]
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    root = tempfile.mkdtemp(prefix="recipes_stream_cdc_")
-    ev = load(spark, sf_dir, "events")
-    # ntile over the global order: small table at test scale; a real
-    # landing zone is written pre-chunked by the upstream producer.
-    w = Window.orderBy("ts", "event_id")
-    chunked = ev.withColumn("__chunk", F.ntile(chunks).over(w))
-    for i in range(1, chunks + 1):
-        part = os.path.join(root, f"chunk{i:03d}.parquet")
-        chunked.filter(F.col("__chunk") == i).drop("__chunk").coalesce(
-            1
-        ).write.mode("overwrite").parquet(part)
-        t = 1_600_000_000 + i
-        os.utime(part, (t, t))
-        for name in os.listdir(part):
-            os.utime(os.path.join(part, name), (t, t))
-    _STAGED[key] = root
-    return root
-
-
 def stage_ordered(dfs, *, prefix: str) -> str:
     """Write each DataFrame as one single-file parquet chunk with
     strictly increasing mtimes, so a latestFirst=false file-source
     stream delivers them as in-order micro-batches (one per file with
-    maxFilesPerTrigger=1). The shared landing-zone stager for the
-    incremental dedup/near-dup queries (st11/st12)."""
+    maxFilesPerTrigger=1). The one in-order stager: every st* landing
+    zone in ingest.py and stage_events_ordered write through it."""
     root = tempfile.mkdtemp(prefix=prefix)
     for i, df in enumerate(dfs):
         part = os.path.join(root, f"chunk{i:03d}.parquet")
@@ -105,6 +77,54 @@ def stage_ordered(dfs, *, prefix: str) -> str:
         for name in os.listdir(part):
             os.utime(os.path.join(part, name), (t, t))
     return root
+
+
+def stage_events_ordered(
+    spark: SparkSession, sf_dir: str, *, chunks: int = 4
+) -> str:
+    """Stage events as `chunks` files split along the GLOBAL
+    (ts, event_id) order — file i holds rows strictly before file i+1.
+    This is the in-order-delivery contract a CDC apply stream assumes
+    (change batches arrive in commit order); stage_ordered's mtimes
+    force the file source to read them in that order. Memoized like
+    stage_events."""
+    key = (sf_dir, -1, chunks)
+    if key in _STAGED and os.path.isdir(_STAGED[key]):
+        return _STAGED[key]
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    ev = load(spark, sf_dir, "events")
+    # ntile over the global order: small table at test scale; a real
+    # landing zone is written pre-chunked by the upstream producer.
+    w = Window.orderBy("ts", "event_id")
+    chunked = ev.withColumn("__chunk", F.ntile(chunks).over(w))
+    _STAGED[key] = stage_ordered(
+        [
+            chunked.filter(F.col("__chunk") == i).drop("__chunk")
+            for i in range(1, chunks + 1)
+        ],
+        prefix="recipes_stream_cdc_",
+    )
+    return _STAGED[key]
+
+
+def read_staged(
+    spark: SparkSession, staged: str, schema, *,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    """The staged landing directory `staged` as a file-source stream
+    with `schema`: files in mtime order (latestFirst=false, which the
+    stagers' forced mtimes make deterministic), read recursively,
+    `max_files_per_trigger` files per micro-batch (None: all at once)."""
+    reader = (
+        spark.readStream.schema(schema)
+        .option("latestFirst", "false")
+        .option("recursiveFileLookup", "true")
+    )
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(staged)
 
 
 def stream_events(
@@ -117,15 +137,10 @@ def stream_events(
 ) -> DataFrame:
     """events as a file-source stream with the batch schema."""
     staged = stage_events(spark, sf_dir, files=files, copies=copies)
-    schema = load(spark, sf_dir, "events").schema
-    reader = (
-        spark.readStream.schema(schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
+    return read_staged(
+        spark, staged, load(spark, sf_dir, "events").schema,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(staged)
 
 
 #: Target bytes of staged source per state-store partition. Stateful
@@ -144,12 +159,7 @@ _STATE_PARTITION_TARGET_BYTES = 32 << 20
 def adaptive_state_partitions(spark: SparkSession) -> int:
     """Scale-adaptive state-partition count for the memory-sink harness
     streams: staged-source bytes / 32 MB, floor 8, capped at
-    max(session shuffle partitions, 2048). Override with
-    SPARK_GRAFT_STREAM_STATE_PARTITIONS (production clusters size state
-    partitions to state volume and executor count explicitly)."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return max(1, int(env))
+    max(session shuffle partitions, 2048)."""
     total = 0
     for path in _STAGED.values():
         # Staged dirs are immutable once written (stage_* force mtimes
@@ -172,6 +182,16 @@ def adaptive_state_partitions(spark: SparkSession) -> int:
     return min(n, max(current, 2048))
 
 
+def _run_available_now(writer) -> None:
+    """Start `writer` with an availableNow trigger and block until it
+    has processed every file present at start; stop it either way."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+
+
 def run_to_memory(
     sdf: DataFrame, *, output_mode: str, name_hint: str = "stream"
 ) -> DataFrame:
@@ -189,20 +209,29 @@ def run_to_memory(
         "spark.sql.shuffle.partitions", adaptive_state_partitions(spark)
     )
     try:
-        q = (
+        _run_available_now(
             sdf.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
+
+
+def run_foreach_batch(sdf: DataFrame, body) -> None:
+    """Execute a streaming DataFrame to completion (availableNow),
+    calling `body(batch_df, batch_id)` once per micro-batch; an error in
+    `body` stops the query and propagates. The session's shuffle
+    partitions apply. The checkpoint is a fresh temp dir, deleted once
+    the query stops: no run resumes from another's progress."""
+    ckpt = tempfile.mkdtemp(prefix="recipes_stream_ckpt_")
+    try:
+        _run_available_now(
+            sdf.writeStream.foreachBatch(body).option("checkpointLocation", ckpt)
+        )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def cleanup_staged() -> None:

@@ -8,6 +8,13 @@ catalog. Every micro-batch is a transactional-enough unit: re-delivery
 of a batch (at-least-once file source) cannot duplicate rows because
 the upsert anti-joins on the key.
 
+Every stream here is read by streaming/core.read_staged from a staged
+landing zone (st* queries: one file per micro-batch) and driven by
+core.run_foreach_batch. Only the per-batch bodies differ; from st13 on
+they are module-level factories (`*_probe_then_absorb`,
+`*_merge_then_*`, `*_advance_factory`) so each one's retry
+idempotence is testable batch by batch.
+
 Scale notes: the per-batch rewrite (plans/catalog.upsert_items) reads
 and replaces only the store files holding a batch key, appending first
 and deleting after; at 100 TB the store would be Delta/Iceberg MERGE,
@@ -16,7 +23,6 @@ but the capability — idempotent incremental load — is identical.
 
 from __future__ import annotations
 
-import itertools
 import os
 import tempfile
 
@@ -44,15 +50,20 @@ from recipes_spark.queries.corpus_ops import (
 from recipes_spark.queries.dataops import (
     _index_commit_oracle_sql as _index_commit_oracle,
 )
+from recipes_spark.io import load
 from recipes_spark.plans.catalog import upsert_items
 from recipes_spark.registry import query
-from recipes_spark.streaming.core import stream_events
+from recipes_spark.streaming.core import (
+    read_staged,
+    run_foreach_batch,
+    stage_events_ordered,
+    stage_ordered,
+    stream_events,
+)
 
 #: st31's oracle — x3_index_commit's chain without the file-equality
 #: literals (the stream twin's state report has no file side).
 INDEX_COMMIT_NOFLAGS_ORACLE = _index_commit_oracle(flags=False)
-
-_IDS = itertools.count()
 
 
 def ingest_events(
@@ -67,24 +78,13 @@ def ingest_events(
     ev = stream_events(
         spark, sf_dir, max_files_per_trigger=max_files_per_trigger
     )
-    q = (
-        ev.writeStream.foreachBatch(
-            lambda bdf, _bid: upsert_items(
-                bdf.sparkSession, bdf, catalog_path,
-                key="event_id", partition_col="event_type",
-            )
-        )
-        .option(
-            "checkpointLocation",
-            tempfile.mkdtemp(prefix="recipes_ingest_ckpt_"),
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        ev,
+        lambda bdf, _bid: upsert_items(
+            bdf.sparkSession, bdf, catalog_path,
+            key="event_id", partition_col="event_type",
+        ),
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
 
 
 @query(
@@ -120,13 +120,10 @@ def st10_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from recipes_spark.plans.merge import merge_into
-    from recipes_spark.streaming.core import stage_events_ordered
 
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
     store = tempfile.mkdtemp(prefix="recipes_cdc_store_") + "/store"
-    schema = (
-        spark.read.parquet(os.path.join(staged, "chunk001.parquet")).schema
-    )
+    schema = load(spark, sf_dir, "events").schema
 
     def apply_cdc(bdf: DataFrame, _bid: int) -> None:
         w = Window.partitionBy("user_id").orderBy(
@@ -148,23 +145,10 @@ def st10_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             when_matched="update", when_not_matched="insert",
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(apply_cdc)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_cdc_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, schema, max_files_per_trigger=1),
+        apply_cdc,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return spark.read.parquet(store).select(
         "user_id",
         F.col("event_type").alias("last_event_type"),
@@ -241,8 +225,6 @@ def st11_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     (32 bytes/row); the corpus index is only ever touched as a narrow
     digest column anti-joined per micro-batch — batch-sized shuffles,
     corpus-sized scans, never corpus-sized shuffles."""
-    from recipes_spark.io import load
-
     v1 = load(spark, sf_dir, "documents").select("doc_id", "text")
     corpus_idx = v1.select(F.sha2("text", 256).alias("h"))
     batch = (
@@ -282,8 +264,6 @@ def st11_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
 
     # Two chunks (split by derivation arm → ascending doc_id across
     # chunk boundaries) × two copies (full replay) in forced mtime order.
-    from recipes_spark.streaming.core import stage_ordered
-
     chunks = [
         batch.filter(F.col("doc_id") < 3_000_000),
         batch.filter(F.col("doc_id") >= 3_000_000),
@@ -301,29 +281,14 @@ def st11_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         kept.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={bid}"))
 
     stream = (
-        spark.readStream.schema(batch.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+        read_staged(spark, staged, batch.schema, max_files_per_trigger=1)
         # 30-day delay >> the data's time span: nothing is ever late, so
         # every replayed digest is dropped by STATE (the property under
         # test), not by watermark lateness.
         .withWatermark("ingest_ts", "30 days")
         .dropDuplicatesWithinWatermark(["h"])
     )
-    q = (
-        stream.writeStream.foreachBatch(dedup_against_corpus)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st11_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    run_foreach_batch(stream, dedup_against_corpus)
     return spark.read.parquet(out_dir).select("doc_id")
 
 
@@ -361,9 +326,7 @@ def st12_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the corpus store for surviving candidates only. Index growth
     is linear in corpus size but only ever equi-joined, never scanned
     quadratically."""
-    from recipes_spark.io import load
     from recipes_spark.operators.dedup import band_hashes, jaccard_verify
-    from recipes_spark.streaming.core import stage_ordered
 
     # Same word-set tokenization as near_dup_wordset / its oracle;
     # materialized ONCE — the bounds scan, chunk staging, and every
@@ -441,23 +404,11 @@ def st12_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(index_dir, f"batch={bid}")
         )
 
-    q = (
-        spark.readStream.schema("doc_id long, lang string, source string")
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(neardup_batch)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st12_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    schema = "doc_id long, lang string, source string"
+    run_foreach_batch(
+        read_staged(spark, staged, schema, max_files_per_trigger=1),
+        neardup_batch,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return spark.read.parquet(pairs_dir).select("id_a", "id_b", "jaccard")
 
 
@@ -532,13 +483,9 @@ def st13_stream_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     sha256-slice hash) with the same prior-batch visibility rule —
     bit-for-bit, not statistical (m deliberately undersized at 4096 so
     the candidate path is exercised at every test SF)."""
-    from recipes_spark.io import load
-
     m_bits, k = 4096, 2
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
-
-    from recipes_spark.streaming.core import stage_ordered
 
     staged = stage_ordered(chunks, prefix="recipes_st13_landing_")
     out_dir = tempfile.mkdtemp(prefix="recipes_st13_out_") + "/cand"
@@ -547,25 +494,8 @@ def st13_stream_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_dir, state_dir, m_bits=m_bits, k=k
     )
 
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    q = (
-        stream.writeStream.foreachBatch(probe_then_absorb)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st13_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    stream = read_staged(spark, staged, d.schema, max_files_per_trigger=1)
+    run_foreach_batch(stream, probe_then_absorb)
     return spark.read.parquet(out_dir).select("doc_id").orderBy("doc_id")
 
 
@@ -714,9 +644,6 @@ def st14_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the DuckDB oracle replays every counter and estimate — including
     the left-join zero for a bucket no prior term mapped to —
     bit-for-bit with the same prior-batch visibility rule."""
-    from recipes_spark.io import load
-    from recipes_spark.streaming.core import stage_ordered
-
     depth, width, thresh = 4, 1024, 200
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
@@ -727,23 +654,10 @@ def st14_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, out_dir, state_dir, depth=depth, width=width, thresh=thresh
     )
 
-    q = (
-        spark.readStream.schema(d.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(probe_then_absorb)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st14_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, d.schema, max_files_per_trigger=1),
+        probe_then_absorb,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return (
         spark.read.schema(_ST14_OUT_SCHEMA)
         .parquet(out_dir)
@@ -905,9 +819,6 @@ def st17_stream_hist_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every operation is integer (floor cents, truncating div on
     positive values), so the DuckDB oracle replays each batch's merged
     prior histogram and interpolated quantile estimate bit-for-bit."""
-    from recipes_spark.io import load
-    from recipes_spark.streaming.core import stage_ordered
-
     ev = load(spark, sf_dir, "events").select("event_id", "value")
     chunks = [ev.filter(F.pmod("event_id", F.lit(4)) == i) for i in range(4)]
     staged = stage_ordered(chunks, prefix="recipes_st17_landing_")
@@ -915,23 +826,10 @@ def st17_stream_hist_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = tempfile.mkdtemp(prefix="recipes_st17_state_")
     probe_then_absorb = hist_probe_then_absorb(spark, out_dir, state_dir)
 
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(probe_then_absorb)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st17_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, ev.schema, max_files_per_trigger=1),
+        probe_then_absorb,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return (
         spark.read.schema(_ST17_OUT_SCHEMA)
         .parquet(out_dir)
@@ -1048,9 +946,6 @@ def st18_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Retry-idempotent by the family's contract: per-bid overwrites,
     prior state = persisted tables of batches < bid, own candidates
     recomputed from the redelivered batch."""
-    from recipes_spark.io import load
-    from recipes_spark.streaming.core import stage_ordered
-
     d = load(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
@@ -1060,23 +955,10 @@ def st18_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = tempfile.mkdtemp(prefix="recipes_st18_state_")
     merge_then_emit = sample_merge_then_emit(spark, out_dir, state_dir)
 
-    q = (
-        spark.readStream.schema(d.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(merge_then_emit)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st18_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, d.schema, max_files_per_trigger=1),
+        merge_then_emit,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return (
         spark.read.schema(_ST18_OUT_SCHEMA)
         .parquet(out_dir)
@@ -1175,9 +1057,6 @@ def st19_stream_incremental_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the label table is a partitioned parquet keyed by node — the same
     store the catalog upsert maintains — and per-night work is the
     attachment structure, not the corpus."""
-    from recipes_spark.io import load
-    from recipes_spark.streaming.core import stage_ordered
-
     d = load(spark, sf_dir, "documents").select("doc_id")
     n = d.count()
     chunk = -(-n // 4)
@@ -1192,23 +1071,10 @@ def st19_stream_incremental_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = tempfile.mkdtemp(prefix="recipes_st19_state_")
     merge_then_emit = cc_merge_then_emit(spark, out_dir, state_dir)
 
-    q = (
-        spark.readStream.schema(d.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(merge_then_emit)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st19_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, d.schema, max_files_per_trigger=1),
+        merge_then_emit,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return (
         spark.read.schema(_ST19_OUT_SCHEMA)
         .parquet(out_dir)
@@ -1315,32 +1181,15 @@ def st20_stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     Retry-idempotent by the family contract: per-bid state overwrite,
     batch N reads only state N-1, so an at-least-once redelivery of
     batch N recomputes byte-identical state."""
-    from recipes_spark.streaming.core import stage_events_ordered
-
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
-    schema = (
-        spark.read.parquet(os.path.join(staged, "chunk001.parquet")).schema
-    )
+    schema = load(spark, sf_dir, "events").schema
     state_dir = tempfile.mkdtemp(prefix="recipes_st20_state_")
     pattern_advance = pattern_advance_factory(spark, state_dir)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(pattern_advance)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st20_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, schema, max_files_per_trigger=1),
+        pattern_advance,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return (
         spark.read.schema(_ST20_STATE_SCHEMA)
         .parquet(os.path.join(state_dir, "s_3"))
@@ -1471,9 +1320,6 @@ def st21_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: per-batch work is one map-side-combining moment agg plus
     a broadcast join of the tiny state onto the batch — the stream
     never buffers, the state never grows past #types rows."""
-    from recipes_spark.io import load
-    from recipes_spark.streaming.core import stage_ordered
-
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
     chunks = [ev.filter(F.pmod("event_id", F.lit(4)) == i) for i in range(4)]
     staged = stage_ordered(chunks, prefix="recipes_st21_landing_")
@@ -1481,23 +1327,10 @@ def st21_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = tempfile.mkdtemp(prefix="recipes_st21_state_")
     probe_then_absorb = moments_probe_then_absorb(spark, out_dir, state_dir)
 
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(probe_then_absorb)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st21_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, ev.schema, max_files_per_trigger=1),
+        probe_then_absorb,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return (
         spark.read.schema(_ST21_OUT_SCHEMA)
         .parquet(out_dir)
@@ -1648,9 +1481,6 @@ def st22_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary contract every streaming aggregator keeps); retries are
     idempotent by the family's per-bid overwrite + prior-only-read
     rule."""
-    from recipes_spark.io import load
-    from recipes_spark.streaming.core import stage_ordered
-
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "ts")
     bcol = F.expr("unix_micros(ts) div 3600000000")
     lo, hi = (
@@ -1669,23 +1499,10 @@ def st22_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = tempfile.mkdtemp(prefix="recipes_st22_state_")
     cusum_advance = cusum_advance_factory(spark, out_dir, state_dir)
 
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(cusum_advance)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st22_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, ev.schema, max_files_per_trigger=1),
+        cusum_advance,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return (
         spark.read.schema(_ST22_OUT_SCHEMA)
         .parquet(out_dir)
@@ -1795,33 +1612,16 @@ def st23_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract), so the one-row state is sufficient history — the same
     telescoping argument as st20's funnel maxima, applied to an
     argmax instead. Retry-idempotent by the family contract."""
-    from recipes_spark.streaming.core import stage_events_ordered
-
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
-    schema = (
-        spark.read.parquet(os.path.join(staged, "chunk001.parquet")).schema
-    )
+    schema = load(spark, sf_dir, "events").schema
     out_dir = tempfile.mkdtemp(prefix="recipes_st23_out_") + "/credits"
     state_dir = tempfile.mkdtemp(prefix="recipes_st23_state_")
     advance = attribution_advance_factory(spark, out_dir, state_dir)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(advance)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st23_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, schema, max_files_per_trigger=1),
+        advance,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return (
         spark.read.schema(_ST23_OUT_SCHEMA)
         .parquet(out_dir)
@@ -1927,32 +1727,16 @@ def st24_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what makes global distinct queries a kilobyte-merge instead of
     a corpus re-shuffle. Retry-idempotent by the family contract
     (per-bid overwrite, prior-only reads)."""
-    from recipes_spark.io import load
-    from recipes_spark.streaming.core import stage_ordered
-
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
     staged = stage_ordered(chunks, prefix="recipes_st24_landing_")
     state_dir = tempfile.mkdtemp(prefix="recipes_st24_state_")
     merge_then_persist = hll_merge_then_persist(spark, state_dir)
 
-    q = (
-        spark.readStream.schema(d.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(merge_then_persist)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st24_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, d.schema, max_files_per_trigger=1),
+        merge_then_persist,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return (
         spark.read.schema(_ST24_STATE_SCHEMA)
         .parquet(os.path.join(state_dir, "s_3"))
@@ -2080,32 +1864,15 @@ def st25_stream_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: state is one row per type; each batch does one
     event_type-clustered window + two aggregates. Retry-idempotent by
     the family contract (per-bid overwrite, prior-only reads)."""
-    from recipes_spark.streaming.core import stage_events_ordered
-
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
-    schema = (
-        spark.read.parquet(os.path.join(staged, "chunk001.parquet")).schema
-    )
+    schema = load(spark, sf_dir, "events").schema
     state_dir = tempfile.mkdtemp(prefix="recipes_st25_state_")
     twap_advance = twap_advance_factory(spark, state_dir)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(twap_advance)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st25_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, schema, max_files_per_trigger=1),
+        twap_advance,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     st = spark.read.schema(_ST25_STATE_SCHEMA).parquet(
         os.path.join(state_dir, "s_3")
     )
@@ -2235,32 +2002,15 @@ def st26_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch does one map-side-combining aggregate + a grid-sized outer
     join. Retry-idempotent by the family contract (per-bid overwrite,
     prior-only reads)."""
-    from recipes_spark.streaming.core import stage_events_ordered
-
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
-    schema = (
-        spark.read.parquet(os.path.join(staged, "chunk001.parquet")).schema
-    )
+    schema = load(spark, sf_dir, "events").schema
     state_dir = tempfile.mkdtemp(prefix="recipes_st26_state_")
     ohlc_advance = ohlc_advance_factory(spark, state_dir)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(ohlc_advance)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st26_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, schema, max_files_per_trigger=1),
+        ohlc_advance,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     st = spark.read.schema(_ST26_STATE_SCHEMA).parquet(
         os.path.join(state_dir, "s_3")
     )
@@ -2337,32 +2087,16 @@ def st27_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale key it on sha2(line), exactly as the batch docstring says).
     Retry-idempotent by the family contract (per-bid overwrite,
     prior-only reads — asserted by re-invoking a mid-stream batch)."""
-    from recipes_spark.io import load
-    from recipes_spark.streaming.core import stage_ordered
-
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
     staged = stage_ordered(chunks, prefix="recipes_st27_landing_")
     state_dir = tempfile.mkdtemp(prefix="recipes_st27_state_")
     advance = line_count_advance_factory(spark, state_dir)
 
-    q = (
-        spark.readStream.schema(d.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(advance)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st27_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, d.schema, max_files_per_trigger=1),
+        advance,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     freq = spark.read.schema(_ST27_STATE_SCHEMA).parquet(
         os.path.join(state_dir, f"s_{_max_state_bid(state_dir, 's_')}")
     )
@@ -2509,9 +2243,6 @@ def st28_stream_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve phase runs ONCE at the end, not per batch.
     Retry-idempotent by the family contract (per-bid overwrite,
     prior-only reads — asserted by re-invoking a mid-stream batch)."""
-    from recipes_spark.io import load
-    from recipes_spark.streaming.core import stage_ordered
-
     d = load(spark, sf_dir, "documents").select(
         "doc_id", "source", "text", "n_chars"
     )
@@ -2522,23 +2253,10 @@ def st28_stream_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ST28_LAST_STATE_DIR = state_dir
     advance = corpus_pipeline_advance_factory(spark, state_dir)
 
-    q = (
-        spark.readStream.schema(d.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(advance)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st28_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, d.schema, max_files_per_trigger=1),
+        advance,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     return st28_final_report(spark, state_dir)
 
 
@@ -2639,31 +2357,16 @@ def st29_stream_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         _qta_weights_from_stats,
         quality_score_kernel,
     )
-    from recipes_spark.streaming.core import stage_ordered
-
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
     staged = stage_ordered(chunks, prefix="recipes_st29_landing_")
     state_dir = tempfile.mkdtemp(prefix="recipes_st29_state_")
     advance = classifier_stats_advance_factory(spark, state_dir)
 
-    q = (
-        spark.readStream.schema(d.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(advance)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st29_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, d.schema, max_files_per_trigger=1),
+        advance,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     stats = (
         spark.read.schema(_ST29_STATE_SCHEMA)
         .parquet(
@@ -2821,13 +2524,10 @@ def st30_stream_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     per trigger, latestFirst=false); retry-idempotent by per-bid
     overwrite + prior-only reads (gated in
     tests/test_intent_round14.py)."""
-    from recipes_spark.io import load
     from recipes_spark.queries.corpus_ops import (
         _bucket,
         _ordered_sha,
     )
-    from recipes_spark.streaming.core import stage_ordered
-
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     n = d.count()
     span = (n + 3) // 4
@@ -2838,23 +2538,10 @@ def st30_stream_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = tempfile.mkdtemp(prefix="recipes_st30_state_")
     advance = packing_advance_factory(spark, state_dir)
 
-    q = (
-        spark.readStream.schema(d.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(advance)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st30_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, d.schema, max_files_per_trigger=1),
+        advance,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     seqs = spark.read.schema(_ST30_SEQ_SCHEMA).parquet(
         os.path.join(state_dir, f"s_{_max_state_bid(state_dir, 's_')}")
     )
@@ -2957,13 +2644,11 @@ def st31_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     append to the snapshot store — plans/ann_index.py — and state
     reduces to the store pointer; here the rows carry in state so the
     final manifest derives from state alone)."""
-    from recipes_spark.io import load
     from recipes_spark.operators.similarity import (
         train_coarse_centroids_int,
         train_pq_codebooks_int,
     )
     from recipes_spark.queries.dataops import _cell_codes_digest
-    from recipes_spark.streaming.core import stage_ordered
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     coarse = train_coarse_centroids_int(emb, k=16, iters=3, hash_tag="pq:0")
@@ -2973,23 +2658,10 @@ def st31_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = tempfile.mkdtemp(prefix="recipes_st31_state_")
     advance = index_append_advance_factory(spark, state_dir, coarse, books)
 
-    q = (
-        spark.readStream.schema(emb.schema)
-        .option("latestFirst", "false")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(advance)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="recipes_st31_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        read_staged(spark, staged, emb.schema, max_files_per_trigger=1),
+        advance,
     )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
     final = spark.read.schema(_ST31_STATE_SCHEMA).parquet(
         os.path.join(state_dir, f"s_{_max_state_bid(state_dir, 's_')}")
     )

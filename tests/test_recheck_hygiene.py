@@ -145,3 +145,27 @@ def test_every_tool_is_referenced():
         if not re.search(rf"\b{t}\.py\b|\b(?:from|import) {t}\b", corpus)
     ]
     assert not unnamed, f"tools/ scripts nothing references: {unnamed}"
+
+
+def test_stream_lifecycle_lives_in_streaming_core():
+    """One micro-batch driver: under recipes_spark/, only
+    streaming/core.py starts an availableNow query or awaits one, and
+    it builds the one file-source stream reader. Code tokens only, so
+    docstrings and comments may still name them."""
+    import io
+    import tokenize
+
+    found = []
+    for path in _files_under("recipes_spark", ".py"):
+        tokens = tokenize.generate_tokens(io.StringIO(Path(path).read_text()).readline)
+        code = [t.string for t in tokens if t.type in (tokenize.NAME, tokenize.OP)]
+        rel = os.path.relpath(path, REPO)
+        for i, tok in enumerate(code):
+            if tok in ("awaitTermination", "readStream") or (
+                tok == "availableNow" and code[i + 1:i + 3] == ["=", "True"]
+            ):
+                found.append((rel, tok))
+    core = os.path.join("recipes_spark", "streaming", "core.py")
+    assert sorted(found) == [
+        (core, "availableNow"), (core, "awaitTermination"), (core, "readStream"),
+    ], found

@@ -175,3 +175,31 @@ def test_runner_cached_decodes_the_manifest_files(spark):
 
     shutil.copy(f"{staged}/{names[6]}", landing)
     assert run_pipeline(spark, cfg) == first
+
+
+def test_runner_recovers_from_a_fully_quarantined_first_batch(spark):
+    """A first batch whose files are all undecodable commits an items
+    store with no data file. The run reports 0 items, and the next
+    batch upserts into that store instead of failing to read it."""
+    import shutil
+
+    tmp = tempfile.mkdtemp(prefix="recipes_runner_quarantined_")
+    cfg = _config(tmp)
+    del cfg["cache_root"]
+    bad = f"{tmp}/bad"
+    os.makedirs(bad)
+    for i in range(3):
+        with open(f"{bad}/corrupt{i}.nc", "wb") as fh:
+            fh.write(b"not a granule")
+    cfg["granules"] = f"{bad}/*.nc"
+    first = run_pipeline(spark, cfg)
+    assert (first["files"], first["items"]) == (3, 0)
+
+    good = f"{tmp}/good"
+    os.makedirs(good)
+    staged = stage_granules(6)
+    for name in sorted(f for f in os.listdir(staged) if f.endswith(".nc"))[:3]:
+        shutil.copy(f"{staged}/{name}", good)
+    cfg["granules"] = f"{good}/*.nc"
+    second = run_pipeline(spark, cfg)
+    assert (second["files"], second["items"]) == (3, 3)

@@ -735,3 +735,50 @@ def test_st27_cross_batch_threshold_and_retry(spark, tmp_path):
     before = [state(b) for b in range(3)]
     fn(batches[1], 1)  # at-least-once redelivery
     assert [state(b) for b in range(3)] == before
+
+
+def test_run_foreach_batch_in_order_cleans_up_and_propagates(spark, monkeypatch):
+    """The one foreachBatch driver: three staged chunks arrive as three
+    in-order micro-batches, its temp checkpoint is gone once the query
+    stops, and an error in the body propagates with no query left
+    running (and no checkpoint left behind)."""
+    import os
+
+    import pytest
+
+    from recipes_spark.streaming.core import (
+        read_staged,
+        run_foreach_batch,
+        stage_ordered,
+    )
+
+    chunks = [spark.range(10 * i, 10 * i + n) for i, n in enumerate((3, 1, 2))]
+    staged = stage_ordered(chunks, prefix="recipes_test_driver_")
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    seen = []
+
+    def record(bdf, bid):
+        seen.append((bid, sorted(r.id for r in bdf.collect())))
+
+    run_foreach_batch(
+        read_staged(spark, staged, "id long", max_files_per_trigger=1), record
+    )
+    assert seen == [(0, [0, 1, 2]), (1, [10]), (2, [20, 21])]
+    assert len(made) == 1 and not os.path.exists(made[0])
+
+    def fail(bdf, bid):
+        raise ValueError("body failed on purpose")
+
+    with pytest.raises(Exception, match="body failed on purpose"):
+        run_foreach_batch(
+            read_staged(spark, staged, "id long", max_files_per_trigger=1), fail
+        )
+    assert spark.streams.active == []
+    assert len(made) == 2 and not os.path.exists(made[1])

@@ -194,11 +194,8 @@ def read_store(spark: SparkSession, path: str) -> DataFrame | None:
     try:
         return spark.read.parquet(path)
     except AnalysisException as e:
-        msg = str(e)
-        if not any(
-            m in msg for m in
-            ("PATH_NOT_FOUND", "Path does not exist", "UNABLE_TO_INFER_SCHEMA")
-        ):
+        no_rows = ("PATH_NOT_FOUND", "Path does not exist", "UNABLE_TO_INFER_SCHEMA")
+        if not any(m in str(e) for m in no_rows):
             raise
         return None
 

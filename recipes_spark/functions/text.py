@@ -30,10 +30,6 @@ def token_count(col: str | Column) -> Column:
     return F.size(tokens(col))
 
 
-def distinct_tokens(col: str | Column) -> Column:
-    return F.array_distinct(tokens(col))
-
-
 def word_shingles(col: str | Column, n: int = 3) -> Column:
     """Distinct word n-grams: transform over a position sequence +
     slice/concat_ws — vectorized, no explode (the shingle array stays
@@ -86,15 +82,6 @@ def stopword_ratio(col: str | Column, lang: str = "en") -> Column:
     n = F.size(toks)
     hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     return F.when(n > 0, hits / n).otherwise(0.0)
-
-
-def mean_token_len(col: str | Column) -> Column:
-    toks = tokens(col)
-    return F.when(
-        F.size(toks) > 0,
-        F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-        / F.size(toks),
-    ).otherwise(0.0)
 
 
 def quality_score(col: str | Column) -> Column:

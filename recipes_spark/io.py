@@ -153,10 +153,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load(spark, sf_dir, n) for n in (names or TABLES))
-
-
 def _estimated_scan_partitions(df: DataFrame) -> int | None:
     """Scan-task estimate from the plan's input files (Σ ceil(size /
     maxPartitionBytes-default)), or None when the plan is not purely

@@ -49,24 +49,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def minhash_signature(
-    shingles: Column, num_hashes: int = 64
-) -> Column:
-    """MinHash signature as array<bigint>. Each shingle STRING is hashed
-    once (xxhash64 walks the bytes); the `num_hashes` lanes then re-hash
-    that 8-byte base value with a per-lane seed — one mixing round,
-    ~string_len× cheaper than hashing the string per lane. Row-local,
-    all-Catalyst."""
-    base = F.transform(shingles, lambda s: F.xxhash64(s))
-
-    def min_hash(i: int) -> Column:
-        # Closure capture, not a lambda default arg: a 2-param lambda is
-        # interpreted by transform() as (element, index).
-        return F.array_min(F.transform(base, lambda h: F.xxhash64(h, F.lit(i))))
-
-    return F.array(*[min_hash(i) for i in range(num_hashes)])
-
-
 def _band_rows(
     df: DataFrame,
     *,

@@ -243,46 +243,6 @@ def asof_nearest_join(
     )
 
 
-def range_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    left_point: str,
-    right_start: str,
-    right_end: str,
-    bucket_width_seconds: int,
-    extra_cond=None,
-) -> DataFrame:
-    """Point-in-interval join without an equi key: bucketize time so the
-    join has an equi component (bucket id) and the range predicate only
-    filters within-bucket candidates. Intervals are exploded into every
-    bucket they overlap; width should be ≥ the typical interval length
-    so the explosion factor stays near 1.
-
-    This is the scale path for pure range joins — a raw theta join is a
-    broadcast-nested-loop in Spark, O(n·m).
-    """
-    w = bucket_width_seconds
-    lb = left.withColumn(
-        "__bucket", (F.unix_timestamp(F.col(left_point)) / w).cast("long")
-    )
-    rb = right.withColumn(
-        "__buckets",
-        F.sequence(
-            (F.unix_timestamp(F.col(right_start)) / w).cast("long"),
-            (F.unix_timestamp(F.col(right_end)) / w).cast("long"),
-        ),
-    ).withColumn("__bucket", F.explode("__buckets")).drop("__buckets")
-    cond = (
-        (lb["__bucket"] == rb["__bucket"])
-        & (F.col(left_point) >= F.col(right_start))
-        & (F.col(left_point) <= F.col(right_end))
-    )
-    if extra_cond is not None:
-        cond = cond & extra_cond
-    return lb.join(rb, cond).drop("__bucket")
-
-
 def interval_overlap_join(
     a: DataFrame,
     b: DataFrame,

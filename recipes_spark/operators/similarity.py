@@ -1,12 +1,20 @@
 """Similarity search over embedding columns (SURVEY.md §2.12 X3):
-brute-force cosine top-k as the exact baseline, and a random-hyperplane
-LSH bucketed variant as the 100 TB scale path.
+brute-force cosine top-k as the exact baseline; LSH, IVF, PQ/ADC and
+IVF-PQ as the approximate scale paths; MMR as the diversity rerank.
+
+Every approximate operator works on the INTEGER MILLI GRID
+(floor(x · 1000) int64) — the ``*_int`` operators: hyperplane signs,
+k-means training, code assignment and ADC distances are exact integer
+arithmetic, so the candidate set (the only approximate stage) is
+deterministic and a DuckDB oracle replays it bit for bit. Exact cosine
+math on the shortlist decides the final order (_exact_rerank).
 
 Scale design: brute-force is a broadcast of the (small) query set against
-the corpus — no corpus shuffle, embarrassingly parallel, O(Q·N·d) compute
-kept JVM-side via zip_with/aggregate. The LSH variant buckets the corpus
-once (row-local sign-bit sketch), then probes only matching buckets —
-turning top-k into an equi-join, the same banding trick as MinHash.
+the corpus — no corpus shuffle, embarrassingly parallel. The LSH
+operators bucket the corpus once (row-local sign-bit sketch), then probe
+only matching buckets — turning top-k into an equi-join, the same
+banding trick as MinHash. IVF prunes to the probed coarse cells; PQ
+scans m small codes per vector instead of the float vector.
 """
 
 from __future__ import annotations
@@ -14,7 +22,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 
 from recipes_spark.functions.vectors import as_double, cosine
 from recipes_spark.io import scale_partitions
@@ -116,7 +124,8 @@ def _exact_rerank(
 ) -> DataFrame:
     """Exact cosine re-rank of an (id, query_id) shortlist against the
     float vectors (broadcast query side) — the tail shared by the
-    sketch-scan operators (pq_adc_topk, ivf_pq_topk): the approximate
+    approximate operators (lsh_topk_int, ivf_topk_int, pq_adc_topk_int,
+    ivf_pq_search_coded, ivf_pq_residual_topk_int): the approximate
     stage only CHOOSES candidates, exact math always decides the
     final order."""
     qdf = queries.select(
@@ -199,105 +208,6 @@ def brute_force_topk(
         partial_topk, out_schema
     )
     return _rank_topk(partial, query_id_col, id_col, k)
-
-
-def train_centroids(
-    corpus: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    sample: int = 2048,
-    iters: int = 5,
-    seed: int = 42,
-) -> np.ndarray:
-    """IVF coarse quantizer: k-means on a driver-side sample (the
-    standard IVF recipe — training reads a bounded sample, never the
-    corpus; at 100 TB `sample` stays a few hundred thousand rows and
-    the loop is numpy on the driver)."""
-    rows = corpus.select(vec_col).limit(sample).collect()
-    if not rows:
-        raise ValueError("train_centroids: empty training sample")
-    X = np.asarray([r[0] for r in rows], dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    cents = X[rng.choice(len(X), size=n_centroids, replace=False)]
-    for _ in range(iters):
-        # Assign by max cosine (normalize once), recompute means.
-        Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-        Cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-        assign = np.argmax(Xn @ Cn.T, axis=1)
-        for c in range(n_centroids):
-            members = X[assign == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
-    return cents
-
-
-def ivf_assign(vec_col: Column, centroids: np.ndarray) -> Column:
-    """Nearest-centroid id per row — Arrow-batched pandas UDF doing one
-    numpy matmul per batch (vectorized across rows AND centroids)."""
-    Cn = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
-
-    @F.pandas_udf("int")
-    def _assign(vs: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(Xn @ Cn.T, axis=1).astype(np.int32))
-
-    return _assign(vec_col)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF approximate top-k: coarse-quantize the corpus into
-    `n_centroids` inverted lists, probe the `nprobe` lists nearest each
-    query, exact cosine re-rank inside the probed lists only.
-
-    Scale shape: corpus assignment is one narrow pandas-UDF pass (the
-    partition-pruning analog for vectors — at 100 TB the lists become
-    the Parquet partition key so a probe is a partition-pruned scan);
-    the probe join is corpus ⋈ broadcast(query×nprobe); compute drops
-    to ~nprobe/n_centroids of brute force."""
-    cents = train_centroids(
-        corpus, vec_col=vec_col, n_centroids=n_centroids, seed=seed
-    )
-    assigned = scale_partitions(corpus).withColumn(
-        "__list", ivf_assign(F.col(vec_col), cents)
-    )
-
-    # Per-query probe lists: tiny (Q × n_centroids) — driver-side numpy.
-    Cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    probes = []
-    for r in queries.collect():
-        q = np.asarray(r[query_vec_col], dtype=np.float64)
-        qn = q / max(np.linalg.norm(q), 1e-12)
-        for c in np.argsort(-(Cn @ qn))[:nprobe]:
-            probes.append((r[query_id_col], list(map(float, q)), int(c)))
-    spark = corpus.sparkSession
-    probe_df = spark.createDataFrame(
-        probes, f"{query_id_col} long, {query_vec_col} array<double>, __list int"
-    )
-
-    cand = assigned.join(F.broadcast(probe_df), "__list").filter(
-        F.col(id_col) != F.col(query_id_col)
-    )
-    sims = cand.withColumn(
-        "cosine_sim",
-        F.round(
-            cosine(as_double(F.col(vec_col)), F.col(query_vec_col)), 4
-        ),
-    )
-    return _rank_topk(sims, query_id_col, id_col, k)
 
 
 def _hyperplane_buckets(
@@ -434,106 +344,6 @@ def lsh_neardup_pairs(
     )
 
 
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    k: int = 10,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: `n_tables` independent hyperplane sketches;
-    candidates = corpus rows sharing a bucket with the query in ANY
-    table; exact cosine re-rank on candidates only. Recall grows with
-    n_tables; bucket fan-out is 2^n_planes per table.
-
-    Defaults tuned recall-first for moderate-similarity neighbors: at
-    cos≈0.3 (bit-agree p≈0.6) expected recall ≈ 1-(1-p^4)^8 ≈ 0.67;
-    tighten n_planes upward when neighbors are near-duplicates (p→1)
-    to cut candidate volume."""
-    rng = np.random.default_rng(seed)
-    tables = [rng.standard_normal((n_planes, dim)) for _ in range(n_tables)]
-
-    base = scale_partitions(corpus)
-    # Bucket rows carry ids only (numpy-vectorized assignment); corpus
-    # and query vectors re-join just for surviving candidates — see
-    # _hyperplane_buckets / lsh_neardup_pairs for the rationale.
-    cb = _hyperplane_buckets(
-        base, tables=tables, vec_col=vec_col, keep_cols=[id_col]
-    )
-    qb = _hyperplane_buckets(
-        queries, tables=tables, vec_col=query_vec_col, keep_cols=[query_id_col]
-    )
-    cand_ids = (
-        cb.join(F.broadcast(qb), "bucket")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(query_id_col, id_col)
-        .dropDuplicates([query_id_col, id_col])
-        # byte-small id pairs get AQE-coalesced to ~1 partition, which
-        # would serialize the cosine re-rank; round-robin is exempt.
-        .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-    )
-    cand = (
-        cand_ids.join(base.select(id_col, vec_col), id_col)
-        .join(
-            F.broadcast(queries.select(query_id_col, query_vec_col)),
-            query_id_col,
-        )
-        .withColumn(
-            "cosine_sim",
-            F.round(
-                cosine(as_double(F.col(vec_col)), as_double(F.col(query_vec_col))), 4
-            ),
-        )
-    )
-    return _rank_topk(cand, query_id_col, id_col, k)
-
-
-def train_pq_codebooks(
-    corpus: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    m: int = 8,
-    k: int = 16,
-    sample: int = 2048,
-    iters: int = 5,
-    seed: int = 7,
-) -> np.ndarray:
-    """Product-quantization codebooks: split the vector into `m`
-    contiguous subspaces and k-means each on a bounded driver-side
-    sample (the IVF training pattern — training never reads the
-    corpus). Returns array of shape (m, k, dim/m). Deterministic for a
-    fixed seed, so code assignment is reproducible run to run."""
-    rows = corpus.select(vec_col).limit(sample).collect()
-    if not rows:
-        raise ValueError("train_pq_codebooks: empty training sample")
-    X = np.asarray([np.asarray(r[0], dtype=np.float64) for r in rows])
-    dim = X.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    rng = np.random.default_rng(seed)
-    books = np.empty((m, k, sub))
-    for j in range(m):
-        S = X[:, j * sub : (j + 1) * sub]
-        cents = S[rng.choice(len(S), size=k, replace=False)]
-        for _ in range(iters):
-            d2 = ((S[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)
-            for c in range(k):
-                members = S[assign == c]
-                if len(members):
-                    cents[c] = members.mean(axis=0)
-        books[j] = cents
-    return books
-
-
 def train_pq_codebooks_int(
     corpus: DataFrame,
     *,
@@ -544,11 +354,12 @@ def train_pq_codebooks_int(
     sample: int = 2048,
     iters: int = 5,
 ) -> np.ndarray:
-    """Product-quantization codebooks on the INTEGER MILLI GRID — the
-    oracle-replayable twin of train_pq_codebooks. Every arithmetic
-    step is exact and engine-portable, so a SQL oracle can replay the
-    whole training loop (the BPE train→apply discipline applied to
-    vectors):
+    """Product-quantization codebooks on the INTEGER MILLI GRID: split
+    the vector into ``m`` contiguous subspaces and k-means each on a
+    bounded driver-side sample (training never reads the corpus).
+    Every arithmetic step is exact and engine-portable, so a SQL
+    oracle can replay the whole training loop (the BPE train→apply
+    discipline applied to vectors):
 
     - sample: the ``sample`` LOWEST ids (orderBy + limit — a
       deterministic prefix, where .limit(sample) alone is
@@ -794,8 +605,9 @@ def pq_encode_int(
     sse_milli2 BIGINT): big-endian ``code_bits``-per-subspace packed
     codes (the x3_pq_codes driver shape) and the EXACT integer squared
     reconstruction error in milli² units — both bit-portable, so the
-    full corpus encode hash-matches a SQL replay. Same Arrow batch =
-    one numpy distance matrix per subspace shape as pq_encode.
+    full corpus encode hash-matches a SQL replay. One Arrow batch =
+    one exact integer distance matrix per subspace (vectorized across
+    rows and centroids).
 
     ``code_bits`` = 4 (nibble, k ≤ 16) or 8 (byte, k ≤ 256 — the faiss
     production default of 8-bit codes, r13 verdict task 1); any width
@@ -804,8 +616,9 @@ def pq_encode_int(
     ``coarse_milli`` (an m=1 book's (k, dim) centroid matrix) fuses
     the IVF coarse cell assignment — integer-L2 argmin, lowest index
     on ties — into the same pass as an extra ``__list int`` column:
-    one corpus read + Arrow transfer builds the whole IVF-PQ index
-    (pq_encode's coarse_centroids rationale, integer form).
+    one corpus read + Arrow transfer builds the whole IVF-PQ index —
+    at 100 TB the index build is a real job and the vector column is
+    its dominant byte volume.
 
     ``residual=True`` (requires coarse_milli) encodes the RESIDUAL
     Xm − C[cell] instead of the raw vector — true faiss IVFPQ:
@@ -914,75 +727,6 @@ def pq_encode_int(
     )
 
 
-def pq_encode(
-    corpus: DataFrame,
-    books: np.ndarray,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_cols: tuple[str, ...] = (),
-    coarse_centroids: np.ndarray | None = None,
-) -> DataFrame:
-    """Assign PQ codes: one Arrow batch = one numpy distance matrix per
-    subspace (vectorized across rows and centroids), emitting
-    (id, keep_cols…, codes array<int>, mse double) — `m` bytes replacing
-    dim·4 bytes, the memory step that makes billion-vector ANN fit.
-    mse is the per-row reconstruction error (quantization distortion),
-    kept so quality gates can assert distortion bounds. `keep_cols`
-    ride through the Arrow pass so a composed pipeline (ivf_pq_topk's
-    list id) never needs a corpus-size self-join to reattach them.
-
-    `coarse_centroids` fuses the IVF coarse assignment into the SAME
-    kernel (an extra `__list int` output column, max-cosine argmax —
-    identical math to `ivf_assign`): the IVF-PQ index build then reads
-    and Arrow-transfers every vector ONCE instead of once per pass —
-    at 100 TB the index build is a real job and the vector column is
-    its dominant byte volume."""
-    m, k, sub = books.shape
-    in_fields = {f.name: f.dataType.simpleString() for f in corpus.schema.fields}
-    keep_ddl = "".join(f", `{c}` {in_fields[c]}" for c in keep_cols)
-    list_ddl = ", `__list` int" if coarse_centroids is not None else ""
-    Cn = (
-        coarse_centroids
-        / np.linalg.norm(coarse_centroids, axis=1, keepdims=True)
-        if coarse_centroids is not None
-        else None
-    )
-
-    def encode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            codes = np.empty((len(X), m), dtype=np.int32)
-            recon = np.empty_like(X)
-            for j in range(m):
-                S = X[:, j * sub : (j + 1) * sub]
-                d2 = ((S[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
-                recon[:, j * sub : (j + 1) * sub] = books[j][codes[:, j]]
-            mse = ((X - recon) ** 2).mean(axis=1)
-            out = {id_col: pdf[id_col].to_numpy()}
-            for c in keep_cols:
-                out[c] = pdf[c].to_numpy()
-            if Cn is not None:
-                Xn = X / np.maximum(
-                    np.linalg.norm(X, axis=1, keepdims=True), 1e-12
-                )
-                out["__list"] = np.argmax(Xn @ Cn.T, axis=1).astype(np.int32)
-            out["codes"] = list(codes)
-            out["mse"] = mse
-            yield pd.DataFrame(out)
-
-    return scale_partitions(
-        corpus.select(id_col, *keep_cols, vec_col)
-    ).mapInPandas(
-        encode, f"{id_col} long{keep_ddl}{list_ddl}, codes array<int>, mse double"
-    )
-
-
 def lsh_planes_int(
     n_tables: int = 8, n_planes: int = 4, dim: int = 64
 ) -> np.ndarray:
@@ -1067,13 +811,14 @@ def lsh_topk_int(
     n_tables: int = 8,
     dim: int = 64,
 ) -> DataFrame:
-    """lsh_topk on the INTEGER milli grid with hash-signed ±1
-    hyperplanes (lsh_planes_int) — candidate buckets, the only
-    approximate stage, are exact int64 arithmetic and therefore
-    deterministic + SQL-replayable; the re-rank is the
-    sequential-fold exact cosine. Same plan shape as lsh_topk: bucket
-    rows carry ids only, candidates dedupe, vectors re-join for the
-    shortlist."""
+    """Approximate top-k over ``n_tables`` hyperplane sketches on the
+    INTEGER milli grid with hash-signed ±1 hyperplanes (lsh_planes_int):
+    candidates = corpus rows sharing a bucket with the query in ANY
+    table. Candidate buckets, the only approximate stage, are exact
+    int64 arithmetic and therefore deterministic + SQL-replayable; the
+    re-rank is the sequential-fold exact cosine. Bucket rows carry ids
+    only, candidates dedupe, vectors re-join for the shortlist. Recall
+    grows with n_tables; bucket fan-out is 2^n_planes per table."""
     W = lsh_planes_int(n_tables, n_planes, dim)
     cb = _hyperplane_buckets_int(
         corpus, W=W, vec_col=vec_col, id_out=id_col, id_col=id_col
@@ -1116,17 +861,19 @@ def ivf_topk_int(
     iters: int = 5,
     coarse_milli: np.ndarray | None = None,
 ) -> DataFrame:
-    """IVF top-k on the INTEGER milli grid — the oracle-replayable
-    twin of ivf_topk. The coarse quantizer IS the m=1 case of the
+    """IVF top-k on the INTEGER milli grid: coarse-quantize the corpus
+    into ``n_centroids`` inverted lists, probe the ``nprobe`` lists
+    nearest each query, exact cosine re-rank inside the probed lists
+    only. The coarse quantizer IS the m=1 case of the
     integer PQ trainer (one subspace spanning the whole vector), so
     training, corpus cell assignment (pq_encode_int's packed code =
     the cell id) and the per-query probe ranking are all exact int64
     arithmetic; cell pruning — the only approximation — is therefore
     deterministic and SQL-replayable, and the in-cell re-rank is the
-    sequential-fold exact cosine. Coarse metric is milli-grid L2
-    where ivf_topk used cosine: for cell PRUNING the two agree on
-    which cells are near unless vector norms vary wildly (recall
-    gates re-assert quality on this corpus).
+    sequential-fold exact cosine. The coarse metric is milli-grid L2,
+    not cosine: for cell PRUNING the two agree on which cells are near
+    unless vector norms vary wildly (recall gates re-assert quality on
+    this corpus).
 
     ``coarse_milli`` (a (n_centroids, dim) int64 matrix, e.g. from
     train_coarse_centroids_int's distributed trainer) serves the index
@@ -1193,12 +940,13 @@ def pq_adc_topk_int(
     refine: int = 4,
     code_bits: int = 4,
 ) -> DataFrame:
-    """pq_adc_topk on the INTEGER milli grid — same production shape
-    (per-query distance table, m-lookup ADC scan over the codes,
-    shortlist, exact-cosine re-rank of shortlist only), but the ADC
-    distances are exact int64 milli² sums against
-    train_pq_codebooks_int books, so the SHORTLIST — the only
-    approximate stage — is bit-deterministic and SQL-replayable; with
+    """Product-quantization asymmetric-distance (ADC) search on the
+    INTEGER milli grid — the billion-vector production shape: per-query
+    distance table, m-lookup ADC scan over the codes, shortlist,
+    exact-cosine re-rank of the shortlist only. The ADC distances are
+    exact int64 milli² sums against train_pq_codebooks_int books, so
+    the SHORTLIST — the only approximate stage — is bit-deterministic
+    and SQL-replayable; with
     the sequential-fold cosine of the re-rank (bit-comparable to
     DuckDB's list_dot_product) the whole query is oracle-checkable.
     The scan reads ONE packed BIGINT per vector (pq_encode_int's
@@ -1304,9 +1052,9 @@ def ivf_pq_topk_int(
     probe_side: str = "literal",
 ) -> DataFrame:
     """IVF + PQ/ADC + exact re-rank composed on the INTEGER milli grid
-    — ivf_pq_topk's billion-vector plan (coarse cell prune → m-byte
-    ADC scan inside probed cells → exact math on the refine·k
-    shortlist), every approximate stage exact-integer and therefore
+    — the billion-vector plan (coarse cell prune → m-byte ADC scan
+    inside probed cells → exact math on the refine·k shortlist), every
+    approximate stage exact-integer and therefore
     SQL-replayable. One fused encode pass builds the index (cell +
     packed codes, pq_encode_int coarse_milli); the ADC scan is PURE
     CATALYST: each query ships its (m × k_codes) integer distance
@@ -1695,218 +1443,6 @@ def ivf_pq_residual_topk_int(
         .filter(F.col(id_col) != F.col(query_id_col))
         .withColumn("adc_dist", adc)
         .withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= n_keep)
-        .select(id_col, query_id_col)
-    )
-    return _exact_rerank(
-        shortlist,
-        corpus,
-        queries,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-        k=k,
-    )
-
-
-def pq_adc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    books: np.ndarray,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    k: int = 10,
-    refine: int = 4,
-) -> DataFrame:
-    """IVF-PQ-style asymmetric-distance search: per query, build the
-    (m × k_codes) lookup table of subspace distances to every centroid
-    ONCE, score each corpus vector as the sum of m table lookups over
-    its codes (never touching the float vector), keep the batch-local
-    top `refine·k` by approximate distance, then exact-cosine re-rank
-    ONLY those candidates against the broadcast query set. This is the
-    production shape for billion-vector search: the scan reads m bytes
-    per vector, the exact math touches refine·k·partitions rows, and
-    the refinement bound (not the sketch) controls recall."""
-    m, kc, sub = books.shape
-    collected = _collect_queries(queries, query_id_col, query_vec_col)
-    if collected is None:
-        return _empty_topk(corpus.sparkSession, query_id_col, id_col)
-    qids, Q = collected
-    # Distance tables: tables[q][j][c] = ||Q[q, sub_j] - books[j][c]||^2
-    tables = np.empty((len(Q), m, kc))
-    for j in range(m):
-        S = Q[:, j * sub : (j + 1) * sub]
-        tables[:, j, :] = ((S[:, None, :] - books[j][None, :, :]) ** 2).sum(
-            axis=2
-        )
-
-    n_keep = refine * k
-
-    def partial(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.asarray(list(pdf["codes"]), dtype=np.int64)  # (n, m)
-            frames = []
-            for qi, qid in enumerate(qids):
-                # Sum of table lookups — the ADC scan.
-                dist = tables[qi, np.arange(m)[None, :], codes].sum(axis=1)
-                mask = ids != qid
-                cids, cd = ids[mask], dist[mask]
-                order = np.lexsort((cids, cd))[:n_keep]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            id_col: cids[order],
-                            query_id_col: qid,
-                            "adc_dist": cd[order],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    coded = pq_encode(corpus, books, id_col=id_col, vec_col=vec_col).select(
-        id_col, "codes"
-    )
-    cand = coded.mapInPandas(
-        partial, f"{id_col} long, {query_id_col} long, adc_dist double"
-    )
-    wq = Window.partitionBy(query_id_col).orderBy("adc_dist", F.col(id_col))
-    shortlist = (
-        cand.withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= n_keep)
-        .select(id_col, query_id_col)
-    )
-    # Exact re-rank of the shortlist only.
-    return _exact_rerank(
-        shortlist,
-        corpus,
-        queries,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-        k=k,
-    )
-
-
-def ivf_pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    m: int = 8,
-    n_codes: int = 16,
-    refine: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF + PQ composed end-to-end — the billion-vector ANN plan as ONE
-    DataFrame pipeline (the shape SURVEY's north star describes; the
-    reference's catalog search is the metadata analog of this probe):
-
-      1. coarse quantize: every corpus vector lands in one of
-         `n_centroids` inverted lists (`ivf_assign`, one narrow
-         Arrow pass — at 100 TB the list id IS the Parquet partition
-         key, so a probe is a partition-pruned scan);
-      2. PQ-encode the corpus ONCE (`pq_encode`) — the probed scan then
-         reads `m` small codes per vector instead of dim·8 bytes;
-      3. probe: each query visits only its `nprobe` nearest lists
-         (corpus ⋈ broadcast(query→list), an equi-join on the list id —
-         compute drops to ~nprobe/n_centroids of brute force);
-      4. ADC score inside the probed lists: per-query subspace
-         distance tables are built once on the driver (Q·m·n_codes
-         doubles) and shipped in the UDF closure; each candidate costs
-         m table lookups, never touching its float vector;
-      5. shortlist `refine·k` per query by ADC distance, then exact
-         cosine re-rank of ONLY that shortlist against the float
-         vectors (broadcast query side).
-
-    Both trainings read a bounded driver-side sample. Codes are over
-    RAW vectors (IVFFlat-style) rather than residuals — residual
-    encoding buys accuracy at the cost of a second codebook family;
-    `refine` is the recall knob here and the gate in
-    tests/test_similarity.py holds recall@k >= 0.9 against brute force.
-    """
-    cents = train_centroids(
-        corpus, vec_col=vec_col, n_centroids=n_centroids, seed=seed
-    )
-    books = train_pq_codebooks(corpus, vec_col=vec_col, m=m, k=n_codes)
-    mm, kc, sub = books.shape
-
-    # (1)+(2) FUSED: one Arrow pass assigns the coarse list AND encodes
-    # the codes (pq_encode's coarse_centroids) — the vector column is
-    # read and Arrow-transferred once, not once per pass, and no
-    # corpus-size self-join reattaches anything.
-    listed = pq_encode(
-        corpus,
-        books,
-        id_col=id_col,
-        vec_col=vec_col,
-        coarse_centroids=cents,
-    ).select(id_col, "__list", "codes")
-
-    # (3): per-query probe lists + ADC distance tables, driver-side numpy
-    # (bounded: Q × n_centroids and Q × m × n_codes).
-    collected = _collect_queries(queries, query_id_col, query_vec_col)
-    if collected is None:
-        return _empty_topk(corpus.sparkSession, query_id_col, id_col)
-    qids, Q = collected
-    Cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-    probe_lists = np.argsort(-(Qn @ Cn.T), axis=1)[:, :nprobe]
-    tables = np.empty((len(Q), mm, kc))
-    for j in range(mm):
-        S = Q[:, j * sub : (j + 1) * sub]
-        tables[:, j, :] = ((S[:, None, :] - books[j][None, :, :]) ** 2).sum(
-            axis=2
-        )
-    spark = corpus.sparkSession
-    probe_df = spark.createDataFrame(
-        [
-            (int(qid), int(c))
-            for qid, lists in zip(qids, probe_lists)
-            for c in lists
-        ],
-        f"{query_id_col} long, __list int",
-    )
-
-    # (4): candidate = probed-list join; ADC score via one vectorized
-    # lookup per Arrow batch. Only (id, query_id, codes) rows flow —
-    # never the float vectors.
-    qindex = {int(qid): i for i, qid in enumerate(qids)}
-
-    @F.pandas_udf("double")
-    def _adc(qid_ser: pd.Series, codes_ser: pd.Series) -> pd.Series:
-        if not len(qid_ser):
-            return pd.Series(np.empty(0))
-        qi = qid_ser.map(qindex).to_numpy(dtype=np.int64)
-        codes = np.asarray(list(codes_ser), dtype=np.int64)  # (n, m)
-        dist = tables[qi[:, None], np.arange(mm)[None, :], codes].sum(axis=1)
-        return pd.Series(dist)
-
-    cand = (
-        listed.join(F.broadcast(probe_df), "__list")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .withColumn("adc_dist", _adc(F.col(query_id_col), F.col("codes")))
-    )
-
-    # (5): shortlist by ADC, exact re-rank on the shortlist only.
-    n_keep = refine * k
-    wq = Window.partitionBy(query_id_col).orderBy("adc_dist", F.col(id_col))
-    shortlist = (
-        cand.withColumn("__r", F.row_number().over(wq))
         .filter(F.col("__r") <= n_keep)
         .select(id_col, query_id_col)
     )

@@ -306,9 +306,12 @@ def compact_catalog(
     idempotent (same layout), unlike a rand()-based repartition.
     Returns {collection_id: n_files_written}. `collections` limits the
     rewrite to named partitions (incremental maintenance — compact only
-    what last night's ingest touched).
+    what last night's ingest touched). A store with no row yet (see
+    `read_store`) has nothing to compact: {}.
     """
-    store = spark.read.parquet(catalog_path)
+    store = read_store(spark, catalog_path)
+    if store is None:
+        return {}
     if collections:
         store = store.filter(F.col("collection_id").isin(list(collections)))
 

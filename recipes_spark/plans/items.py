@@ -13,8 +13,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 Hook = Callable[[DataFrame], DataFrame]
 
@@ -65,8 +64,7 @@ def geojson_bbox_polygon_sql(w: str, s: str, e: str, n: str) -> str:
     bbox → GeoJSON Polygon via format_string, mirroring
     shapely.geometry.mapping(shapely.box(*bbox)) (avhrr…/recipe.py:59):
     counter-clockwise ring starting at (E, S), closed. The ONE source
-    of the polygon wire format — build_items and the Column wrapper
-    below both render from it."""
+    of the polygon wire format — build_items renders from it."""
     return (
         "format_string('"
         '{"type": "Polygon", "coordinates": [[[%.1f, %.1f], [%.1f, %.1f], '
@@ -75,20 +73,10 @@ def geojson_bbox_polygon_sql(w: str, s: str, e: str, n: str) -> str:
     )
 
 
-def geojson_bbox_polygon(w: str, s: str, e: str, n: str) -> Column:
-    """P4, Column form over column NAMES (see geojson_bbox_polygon_sql)."""
-    return F.expr(geojson_bbox_polygon_sql(_bt(w), _bt(s), _bt(e), _bt(n)))
-
-
 def iso_datetime_sql(col_sql: str) -> str:
     """P1 as a SQL expression string: timestamp → ISO-8601
     (avhrr…/recipe.py:26-29)."""
     return f"date_format({col_sql}, 'yyyy-MM-dd''T''HH:mm:ss')"
-
-
-def iso_datetime(col: str) -> Column:
-    """P1, Column form over a column NAME (see iso_datetime_sql)."""
-    return F.expr(iso_datetime_sql(_bt(col)))
 
 
 def build_items(
@@ -198,10 +186,3 @@ def build_items(
     if postprocess is not None:
         items = postprocess(items)
     return items
-
-
-def items_to_json(items: DataFrame) -> DataFrame:
-    """STAC-JSON export: the whole nested row as one JSON doc per item."""
-    return items.select(
-        "id", F.to_json(F.struct(*[c for c in items.columns])).alias("json")
-    )

@@ -2625,7 +2625,7 @@ def x3_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid by squared L2, ties to the smaller centroid id. Paired
     with `embedding_centroids` (the refit step) this is one full
     distributed k-means iteration — the training loop behind IVF list
-    construction (operators/similarity.ivf_topk).
+    construction (operators/similarity.ivf_topk_int).
 
     Scale shape: centroids are collected (k·dim doubles, bounded by
     design) and inlined as literals, so assignment is ROW-LOCAL map

@@ -232,10 +232,3 @@ def run_foreach_batch(sdf: DataFrame, body) -> None:
         )
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def cleanup_staged() -> None:
-    for path in _STAGED.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _STAGED.clear()
-    _STAGED_BYTES.clear()

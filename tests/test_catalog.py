@@ -345,6 +345,17 @@ def test_compact_catalog(spark):
     )
 
 
+def test_compact_catalog_with_no_data_file(spark):
+    """An upsert of an empty batch (every file quarantined) leaves a
+    store holding only `_SUCCESS`: there is no schema to infer and no
+    row to rewrite, so compaction plans nothing instead of raising."""
+    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    upsert_items(spark, _items(spark, n=0), path)
+    assert "_SUCCESS" in os.listdir(path) and not _store_files(path)
+    assert compact_catalog(spark, path) == {}
+    assert not _store_files(path)
+
+
 def test_catalog_search_filters(spark):
     items = _items(spark).cache()
     hits = catalog_search(

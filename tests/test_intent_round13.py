@@ -373,7 +373,7 @@ def test_power_iteration_matches_lapack_direction(spark, sf_dir):
 
 def test_ivf_distrib_recall_vs_brute(spark, sf_dir):
     """The served composition (distributed-trained coarse book →
-    pq_encode cell assignment → probe → re-rank) must keep retrieval
+    pq_encode_int cell assignment → probe → re-rank) must keep retrieval
     QUALITY, not just parity: recall@10 vs exact brute force ≥ 0.5 at
     nprobe=4 of 16 lists on the fixture (deterministic — every stage
     is exact integer arithmetic)."""

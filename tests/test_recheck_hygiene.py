@@ -147,6 +147,46 @@ def test_every_tool_is_referenced():
     assert not unnamed, f"tools/ scripts nothing references: {unnamed}"
 
 
+def test_every_engine_function_is_named():
+    """A top-level function or class under recipes_spark/ (other than a
+    @query) must be named somewhere outside its own definition — in the
+    engine, tests/, tools/, perfbench/, bench.py or __spark_entry__.py;
+    one that nothing names is deleted, not kept. Raw text, not imports:
+    the ``*_sql`` helpers are named only inside f-string oracles."""
+    import ast
+    from collections import Counter
+
+    paths = [
+        *(p for top in ("recipes_spark", "tests", "tools", "perfbench")
+          for p in _files_under(top, ".py")),
+        os.path.join(REPO, "bench.py"),
+        os.path.join(REPO, "__spark_entry__.py"),
+    ]
+    texts = {p: Path(p).read_text() for p in paths}
+    words = Counter(w for text in texts.values() for w in re.findall(r"\w+", text))
+
+    def is_query(node):
+        return any(
+            isinstance(d, ast.Call)
+            and getattr(d.func, "id", getattr(d.func, "attr", None)) == "query"
+            for d in node.decorator_list
+        )
+
+    unnamed = []
+    for path in _files_under("recipes_spark", ".py"):
+        lines = texts[path].splitlines()
+        for node in ast.parse(texts[path]).body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) or is_query(node):
+                continue
+            start = min([node.lineno, *(d.lineno for d in node.decorator_list)])
+            own = "\n".join(lines[start - 1:node.end_lineno])
+            if words[node.name] == re.findall(r"\w+", own).count(node.name):
+                unnamed.append(f"{os.path.relpath(path, REPO)}:{node.name}")
+    assert not unnamed, f"engine functions nothing names: {sorted(unnamed)}"
+
+
 def test_stream_lifecycle_lives_in_streaming_core():
     """One micro-batch driver: under recipes_spark/, only
     streaming/core.py starts an availableNow query or awaits one, and

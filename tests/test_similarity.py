@@ -9,9 +9,7 @@ import pytest
 from recipes_spark.io import load
 from recipes_spark.operators.similarity import (
     brute_force_topk,
-    ivf_topk,
     lsh_neardup_pairs,
-    lsh_topk,
 )
 
 
@@ -31,28 +29,6 @@ def topk_inputs(spark, sf_dir):
 def _recall(approx_rows, exact: set) -> float:
     hits = sum(1 for r in approx_rows if (r.query_id, r.vec_id) in exact)
     return hits / len(exact)
-
-
-def test_lsh_recall(topk_inputs):
-    emb, queries, exact = topk_inputs
-    got = lsh_topk(emb, queries, k=10).collect()
-    r = _recall(got, exact)
-    assert r >= 0.5, f"LSH recall@10 {r:.2f} < 0.5"
-
-
-def test_ivf_recall(topk_inputs):
-    emb, queries, exact = topk_inputs
-    got = ivf_topk(emb, queries, k=10, n_centroids=16, nprobe=4).collect()
-    r = _recall(got, exact)
-    assert r >= 0.5, f"IVF recall@10 {r:.2f} < 0.5"
-
-
-def test_ivf_full_probe_is_exact(topk_inputs):
-    """nprobe == n_centroids probes every list — must equal brute force
-    exactly (the approximation comes ONLY from list pruning)."""
-    emb, queries, exact = topk_inputs
-    got = ivf_topk(emb, queries, k=10, n_centroids=8, nprobe=8).collect()
-    assert {(r.query_id, r.vec_id) for r in got} == exact
 
 
 def test_lsh_neardup_recall_is_complete(spark, sf_dir):
@@ -105,89 +81,20 @@ def test_lsh_neardup_recall_is_complete(spark, sf_dir):
     )
 
 
-def test_pq_codes_distortion_and_determinism(spark, sf_dir):
-    """PQ gates: codes in [0,k), reconstruction distortion well under
-    the data's own energy (codebooks are useful), and bit-identical
-    across two runs (fixed-seed training)."""
-    import numpy as np
-
-    from recipes_spark.io import load
-    from recipes_spark.operators.similarity import (
-        pq_encode,
-        train_pq_codebooks,
-    )
-
-    e = load(spark, sf_dir, "embeddings")
-    books = train_pq_codebooks(e, m=8, k=16)
-    out = pq_encode(e, books).collect()
-    codes = np.asarray([r.codes for r in out])
-    assert codes.min() >= 0 and codes.max() < 16
-    mse = np.asarray([r.mse for r in out])
-    X = np.asarray([np.asarray(r.embedding, dtype=np.float64)
-                    for r in e.select("embedding").collect()])
-    energy = (X ** 2).mean()
-    assert mse.mean() < energy, (mse.mean(), energy)
-    # Principled gate: 16 centroids/subspace must strictly beat the
-    # degenerate 1-centroid (mean-only) codebook. Near-random synthetic
-    # vectors are barely compressible, so the margin is modest but must
-    # exist if k-means learned anything.
-    mean_books = train_pq_codebooks(e, m=8, k=1, iters=1)
-    mse1 = np.asarray(
-        [r.mse for r in pq_encode(e, mean_books).collect()]
-    ).mean()
-    assert mse.mean() < 0.75 * mse1, (mse.mean(), mse1)
-    again = {r.vec_id: (tuple(r.codes), r.mse)
-             for r in pq_encode(e, train_pq_codebooks(e, m=8, k=16)).collect()}
-    first = {r.vec_id: (tuple(r.codes), r.mse) for r in out}
-    assert first == again
-
-
-def test_pq_adc_recall_vs_brute_force(spark, sf_dir):
-    """ADC shortlist + exact re-rank must recover most of the true
-    top-10 (recall@10 >= 0.6 on near-random synthetic vectors, where
-    PQ sketches are weakest — real clustered embeddings do better).
-    Refinement breadth, not the sketch, is the recall knob."""
-    import pyspark.sql.functions as F
-
-    from recipes_spark.io import load
-    from recipes_spark.operators.similarity import (
-        brute_force_topk,
-        pq_adc_topk,
-        train_pq_codebooks,
-    )
-
-    e = load(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    truth = {}
-    for r in brute_force_topk(e, queries, k=10).collect():
-        truth.setdefault(r.query_id, set()).add(r.vec_id)
-    books = train_pq_codebooks(e, m=8, k=16)
-    got = {}
-    for r in pq_adc_topk(e, queries, books, k=10, refine=8).collect():
-        got.setdefault(r.query_id, set()).add(r.vec_id)
-    recalls = [
-        len(truth[q] & got.get(q, set())) / len(truth[q]) for q in truth
-    ]
-    assert sum(recalls) / len(recalls) >= 0.6, recalls
-
-
 def test_ivf_pq_recall_vs_brute_force(spark, oracle_sf_dir):
     """The composed IVF→PQ/ADC→exact-rerank plan (x3_ivf_pq_topk's
-    operator, same params) must hold mean recall@10 >= 0.9 against
-    brute force at the DRIVER's scale factor — the quality gate that
-    lets the billion-vector shape stand in for exact search. Run on
-    near-uniform synthetic vectors, IVF's weakest case (no cluster
-    structure), hence the generous nprobe; measured headroom at these
-    params: 0.94."""
+    operator, same params: m=4 × 256 byte codes) must hold mean
+    recall@10 >= 0.9 against brute force at the DRIVER's scale factor
+    — the quality gate that lets the billion-vector shape stand in for
+    exact search. Run on near-uniform synthetic vectors, IVF's weakest
+    case (no cluster structure), hence the generous nprobe; measured at
+    sf0.01: 1.0."""
     import pyspark.sql.functions as F
 
     from recipes_spark.io import load
     from recipes_spark.operators.similarity import (
         brute_force_topk,
-        ivf_pq_topk,
+        ivf_pq_topk_int,
     )
 
     e = load(spark, oracle_sf_dir, "embeddings").cache()
@@ -199,45 +106,42 @@ def test_ivf_pq_recall_vs_brute_force(spark, oracle_sf_dir):
         (r.query_id, r.vec_id)
         for r in brute_force_topk(e, queries, k=10).collect()
     }
-    got = ivf_pq_topk(
-        e, queries, k=10, n_centroids=16, nprobe=14, refine=16
+    got = ivf_pq_topk_int(
+        e, queries, k=10, n_centroids=16, nprobe=14, refine=16,
+        m=4, k_codes=256, code_bits=8,
     ).collect()
     r = sum(1 for row in got if (row.query_id, row.vec_id) in exact) / len(exact)
     assert r >= 0.9, f"IVF+PQ recall@10 {r:.2f} < 0.9"
 
 
-def test_fused_assign_encode_matches_two_pass(spark, sf_dir):
-    """pq_encode(coarse_centroids=...) fuses the IVF assignment into
-    the encode kernel (one Arrow pass over the vectors instead of two —
-    measured ~2.3x on the sf0.1 index build). The fusion is a pure
-    execution change: (list, codes) must be BIT-identical to the
-    two-pass ivf_assign → pq_encode(keep_cols) composition."""
-    import pyspark.sql.functions as F
 
-    from recipes_spark.io import load, scale_partitions
+def test_fused_assign_encode_matches_two_pass(spark, sf_dir):
+    """pq_encode_int(coarse_milli=...) fuses the IVF cell assignment
+    into the encode kernel (one Arrow pass over the vectors instead of
+    two). The fusion is a pure execution change: (cell, codes, sse)
+    must be BIT-identical to two separate encodes — the m=1 coarse
+    book (whose packed code IS the cell id) and the PQ books."""
+    from recipes_spark.io import load
     from recipes_spark.operators.similarity import (
-        ivf_assign,
-        pq_encode,
-        train_centroids,
-        train_pq_codebooks,
+        pq_encode_int,
+        train_pq_codebooks_int,
     )
 
     e = load(spark, sf_dir, "embeddings")
-    cents = train_centroids(e)
-    books = train_pq_codebooks(e, m=8, k=16)
-    two = pq_encode(
-        scale_partitions(e.select("vec_id", "embedding")).withColumn(
-            "__list", ivf_assign(F.col("embedding"), cents)
-        ),
-        books,
-        keep_cols=("__list",),
-    ).select("vec_id", "__list", "codes")
-    fused = pq_encode(e, books, coarse_centroids=cents).select(
-        "vec_id", "__list", "codes"
-    )
-    a = {r["vec_id"]: (r["__list"], tuple(r["codes"])) for r in two.collect()}
-    b = {r["vec_id"]: (r["__list"], tuple(r["codes"])) for r in fused.collect()}
-    assert a == b
+    cents = train_pq_codebooks_int(e, m=1, k=16)[0]
+    books = train_pq_codebooks_int(e, m=8, k=16)
+    cells = {r.vec_id: r.codes_packed for r in pq_encode_int(e, cents[None]).collect()}
+    two = {
+        r.vec_id: (cells[r.vec_id], r.codes_packed, r.sse_milli2)
+        for r in pq_encode_int(e, books).collect()
+    }
+    fused = {
+        r.vec_id: (r["__list"], r.codes_packed, r.sse_milli2)
+        for r in pq_encode_int(e, books, coarse_milli=cents).collect()
+    }
+    assert fused == two
+    assert len(set(cells.values())) == 16  # every cell is exercised
+
 
 
 def test_mmr_diversifies_and_stays_relevant(spark, sf_dir):
@@ -303,35 +207,40 @@ def test_mmr_diversifies_and_stays_relevant(spark, sf_dir):
 
 def test_pq_int_distortion_and_determinism(spark, sf_dir):
     """The integer milli-grid PQ path (x3_pq_codes' round-12 oracled
-    form): distortion must stay in the float trainer's class (the
-    0.001 grid is noise next to 16-centroid quantization error), the
-    packed codes must carry valid nibbles, and two full train+encode
-    runs must be bit-identical — the determinism the oracle replay
-    depends on."""
+    form): reconstruction distortion well under the data's own energy
+    (the codebooks are useful), the packed codes carry valid nibbles,
+    and two full train+encode runs are bit-identical — the determinism
+    the oracle replay depends on."""
     import numpy as np
 
     from recipes_spark.io import load
     from recipes_spark.operators.similarity import (
-        pq_encode,
         pq_encode_int,
-        train_pq_codebooks,
         train_pq_codebooks_int,
     )
+
+    def mean_mse(rows):
+        # Integer SSE (milli² over 64 dims) → per-dim MSE in data units.
+        sse = np.asarray([r.sse_milli2 for r in rows], dtype=np.float64)
+        return sse.mean() / (64 * 1e6)
 
     e = load(spark, sf_dir, "embeddings")
     books = train_pq_codebooks_int(e, m=8, k=16)
     out = pq_encode_int(e, books).collect()
     packed = np.asarray([r.codes_packed for r in out], dtype=np.int64)
     assert packed.min() >= 0 and packed.max() < (1 << 32)
-    # Integer SSE (milli² over 64 dims) → per-dim MSE in data units.
-    mse_int = np.asarray(
-        [r.sse_milli2 for r in out], dtype=np.float64
-    ).mean() / (64 * 1e6)
-    fbooks = train_pq_codebooks(e, m=8, k=16)
-    mse_float = np.asarray(
-        [r.mse for r in pq_encode(e, fbooks).collect()]
-    ).mean()
-    assert mse_int < 1.5 * mse_float + 1e-6, (mse_int, mse_float)
+    mse_int = mean_mse(out)
+    X = np.asarray([np.asarray(r.embedding, dtype=np.float64)
+                    for r in e.select("embedding").collect()])
+    energy = (X ** 2).mean()
+    assert mse_int < energy, (mse_int, energy)
+    # Principled gate: 16 centroids/subspace must strictly beat the
+    # degenerate 1-centroid (mean-only) codebook. Near-random synthetic
+    # vectors are barely compressible, so the margin is modest but must
+    # exist if k-means learned anything.
+    mean_books = train_pq_codebooks_int(e, m=8, k=1, iters=1)
+    mse1 = mean_mse(pq_encode_int(e, mean_books).collect())
+    assert mse_int < 0.75 * mse1, (mse_int, mse1)
     again = {
         r.vec_id: (r.codes_packed, r.sse_milli2)
         for r in pq_encode_int(e, train_pq_codebooks_int(e, m=8, k=16)).collect()
@@ -341,11 +250,10 @@ def test_pq_int_distortion_and_determinism(spark, sf_dir):
 
 
 def test_pq_adc_int_recall_vs_brute_force(spark, sf_dir):
-    """x3_pq_adc_topk's integer form must hold the same recall class
-    as the float ADC it replaced (recall@10 >= 0.6 on near-random
-    synthetic vectors at refine=8; the registered query's refine=4 is
-    the oracle's exact-replay target, this gate is the quality
-    floor)."""
+    """x3_pq_adc_topk's operator must recover most of the true top-10
+    (recall@10 >= 0.6 on near-random synthetic vectors at refine=8; the
+    registered query's refine=4 is the oracle's exact-replay target,
+    this gate is the quality floor)."""
     import pyspark.sql.functions as F
 
     from recipes_spark.io import load
@@ -375,8 +283,8 @@ def test_pq_adc_int_recall_vs_brute_force(spark, sf_dir):
 
 def test_int_ann_legs_recall_and_exactness(topk_inputs):
     """Round-12 integer ANN legs (the oracled forms behind
-    x3_lsh_topk / x3_ivf_topk / x3_ivf_pq_topk): each must hold the
-    same recall class as the float leg it replaced, and int-IVF at
+    x3_lsh_topk / x3_ivf_topk / x3_ivf_pq_topk): each must hold its
+    recall floor against brute force, and int-IVF at
     nprobe == n_centroids must equal brute force exactly (pruning is
     the ONLY approximation)."""
     from recipes_spark.operators.similarity import (

@@ -253,19 +253,20 @@ def probe_epoch_shuffle(spark: SparkSession) -> dict:
 
 
 def probe_ann_10x(spark: SparkSession) -> dict:
-    """IVF-PQ index build + query at 1x and 10x the vector corpus
-    (embeddings replicated with shifted ids): the build (fused
+    """Integer IVF-PQ index build + query at 1x and 10x the vector
+    corpus (embeddings replicated with shifted ids; one distributed-
+    trained coarse book serves build and query): the build (fused
     assign+encode Arrow pass) should scale linearly; query latency
     should grow sub-linearly because the probe only scans nprobe/n_c
-    of the lists and the ADC scan reads m bytes per candidate."""
+    of the lists and the ADC scan reads m codes per candidate."""
     import math
 
     from recipes_spark.io import load
     from recipes_spark.operators.similarity import (
-        ivf_pq_topk,
-        pq_encode,
-        train_centroids,
-        train_pq_codebooks,
+        ivf_pq_topk_int,
+        pq_encode_int,
+        train_coarse_centroids_int,
+        train_pq_codebooks_int,
     )
 
     e1 = load(spark, SF_DIR, "embeddings").select("vec_id", "embedding").cache()
@@ -282,12 +283,12 @@ def probe_ann_10x(spark: SparkSession) -> dict:
     n10 = e10.count()
     out = {"probe": "ann_10x", "vectors_1x": n1, "vectors_10x": n10}
     for tag, corpus in (("1x", e1), ("10x", e10)):
-        cents = train_centroids(corpus)
-        books = train_pq_codebooks(corpus, m=8, k=16)
+        cents = train_coarse_centroids_int(corpus, k=16)
+        books = train_pq_codebooks_int(corpus, m=8, k=16)
         t = min(
             _timed(
-                lambda: pq_encode(
-                    corpus, books, coarse_centroids=cents
+                lambda: pq_encode_int(
+                    corpus, books, coarse_milli=cents
                 ).count()
             )
             for _ in range(3)
@@ -299,8 +300,9 @@ def probe_ann_10x(spark: SparkSession) -> dict:
         )
         t = min(
             _timed(
-                lambda: ivf_pq_topk(
-                    corpus, queries, k=10, n_centroids=16, nprobe=4, refine=4
+                lambda: ivf_pq_topk_int(
+                    corpus, queries, k=10, n_centroids=16, nprobe=4, refine=4,
+                    coarse_milli=cents,
                 ).count()
             )
             for _ in range(3)
@@ -1040,7 +1042,7 @@ def probe_ann_recall_10x(spark: SparkSession) -> dict:
     originals, so their perturbed twins crowd the true top-10 at 10x —
     the adversarial densification case for list pruning."""
     from recipes_spark.io import load
-    from recipes_spark.operators.similarity import brute_force_topk, ivf_topk
+    from recipes_spark.operators.similarity import brute_force_topk, ivf_topk_int
 
     e1 = load(spark, SF_DIR, "embeddings").select("vec_id", "embedding").cache()
     n1 = e1.count()
@@ -1073,7 +1075,7 @@ def probe_ann_recall_10x(spark: SparkSession) -> dict:
         }
         for nprobe in (1, 2, 4, 8):
             t0 = time.perf_counter()
-            got = ivf_topk(
+            got = ivf_topk_int(
                 corpus, queries, k=10, n_centroids=16, nprobe=nprobe
             ).collect()
             wall = time.perf_counter() - t0

@@ -85,9 +85,11 @@ def stopword_ratio(col: str | Column, lang: str = "en") -> Column:
 
 
 def quality_score(col: str | Column) -> Column:
-    """Composite doc-quality heuristic in [0,1]: rewards stopword
-    presence and moderate token length, penalizes punctuation/digit
-    noise. Deterministic + SQL-expressible → oracle-checkable."""
+    """Composite doc-quality heuristic in [0,1]: 0.4·stopword ratio +
+    0.3·(1 − punctuation ratio) + 0.3·(1 − digit ratio), clamped and
+    rounded to 4 digits — rewards stopword presence, penalizes
+    punctuation/digit noise. Deterministic + SQL-expressible →
+    oracle-checkable."""
     return F.round(
         F.greatest(
             F.least(

@@ -90,7 +90,13 @@ def merge_into(
 
     in_touched = target.filter(F.col(partition_col).isin(touched))
     # Every old file of the touched partitions is replaced, so a
-    # partition the merge empties loses its rows with them.
+    # partition the merge empties loses its rows with them. Unlike
+    # upsert_items, which rewrites only the files holding a batch key,
+    # this is partition-granular on purpose: in delete and ignore modes
+    # the appended file holds no source key, so a re-run after a failed
+    # delete would never re-read the surviving old file and its rows
+    # would stay duplicated. The merge_delete case of test_catalog's
+    # failed-delete re-run test pins this.
     files = in_touched.select(F.col("_metadata.file_path"))
     remove = [f for f, in scanned_files(files)]
 

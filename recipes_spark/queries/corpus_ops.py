@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from recipes_spark.io import load, scale_partitions
 from recipes_spark.registry import query
+from recipes_spark.session import scratch_dir
 
 # Deterministic synthetic PII injection: the corpus text is clean, so
 # every 5th doc gets an email and every 7th a phone appended — the same
@@ -1607,53 +1608,6 @@ def x4_vocab_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Age bound for x6_jsonl_roundtrip scratch dirs: generous vs any single
-# test/bench run (~minutes), small vs "forever" on a long-lived host.
-_JSONL_MAX_AGE_S = 6 * 3600
-
-
-def _scratch_dir(kind: str, sf_dir: str) -> str:
-    """STABLE scratch dir per (kind, process, source dir) with
-    dead-owner reaping — shared by the export/re-ingest round-trip
-    queries (jsonl, csv). Not mkdtemp-per-call: returned DataFrames
-    are lazy, so written shards must outlive the building function,
-    and a per-call dir would leave one corpus copy per run. The pid in
-    the tag keeps CONCURRENT runs from clobbering each other's shards;
-    dead owners' dirs are reaped first (a dead pid cannot hold a lazy
-    plan), and dir AGE is the backstop for recycled pids: any dir
-    older than _JSONL_MAX_AGE_S goes regardless of the kill(0) probe —
-    no legitimate lazy plan survives that long."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    base = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    tmp = tempfile.gettempdir()
-    prefix = f"recipes_{kind}_{base}_"
-    for entry in os.listdir(tmp):
-        if not entry.startswith(prefix):
-            continue
-        full = os.path.join(tmp, entry)
-        try:
-            expired = time.time() - os.stat(full).st_mtime > _JSONL_MAX_AGE_S
-        except OSError:
-            expired = False  # raced with another reaper — already gone
-        if expired:
-            shutil.rmtree(full, ignore_errors=True)
-            continue
-        try:
-            owner = int(entry.rsplit("_", 1)[1])
-            os.kill(owner, 0)  # raises if the owning process is gone
-        except (ValueError, ProcessLookupError):
-            shutil.rmtree(full, ignore_errors=True)
-        except PermissionError:
-            pass  # pid alive under another uid — age bound covers it
-    return os.path.join(tmp, f"{prefix}{os.getpid()}")
-
-
-
 @query(
     "x6_jsonl_roundtrip",
     oracle="""
@@ -1686,9 +1640,7 @@ def x6_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     d = load(spark, sf_dir, "documents")
-    # Scratch-path lifecycle (stable per process+source, dead-owner
-    # reaping): see _scratch_dir.
-    out = os.path.join(_scratch_dir("jsonl", sf_dir), "docs")
+    out = os.path.join(scratch_dir("jsonl"), "docs")
     d.repartition(8).write.mode("overwrite").json(out)
     back = spark.read.schema(
         "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
@@ -1746,7 +1698,7 @@ def x6_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(chr(10)),
         F.col("lang"),
     )
-    out = os.path.join(_scratch_dir("csv", sf_dir), "docs")
+    out = os.path.join(scratch_dir("csv"), "docs")
     (
         d.select("doc_id", gnarly.alias("gnarly"), "n_chars")
         .repartition(8)
@@ -3164,11 +3116,6 @@ def _two_level_shard_digest(seq_rows: DataFrame, suffix: str = "") -> DataFrame:
     )
 
 
-#: Test/debug hook: absolute path of the snapshot store the most recent
-#: x6_release_materialize call committed (the _ST28_LAST_STATE_DIR
-#: pattern) — lets tests inspect the physical layout and tamper-check.
-_LAST_RELEASE_STORE: list = []
-
 _RELEASE_ORACLE = f"""
 WITH base AS ({_PACKING_SHARDS_ORACLE})
 SELECT shard, n_seqs, n_tokens, shard_sha,
@@ -3212,9 +3159,6 @@ def x6_release_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     computation feed both the manifest and the write (the mapInPandas
     self-join rule); at 100 TB that materialization is the release
     staging table itself."""
-    import shutil
-    import tempfile
-
     from recipes_spark.operators.prefix import partitioned_prefix_sum
     from recipes_spark.plans.catalog import snapshot_commit, snapshot_read
 
@@ -3277,16 +3221,7 @@ def x6_release_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     manifest = _two_level_shard_digest(ids_sha(seqs))
 
-    # Reclaim the previous invocation's store before creating the next
-    # one: each run writes a full packed-release copy, so bench loops /
-    # idempotency re-runs would otherwise leak multi-GB /tmp dirs
-    # (ADVICE r13). Keeping only the LATEST store preserves the
-    # tamper-check hook's contract.
-    for prev in _LAST_RELEASE_STORE:
-        shutil.rmtree(prev, ignore_errors=True)
-    store = tempfile.mkdtemp(prefix="recipes_release_")
-    _LAST_RELEASE_STORE.clear()
-    _LAST_RELEASE_STORE.append(store)
+    store = scratch_dir("release")
     snapshot_commit(
         spark,
         # shard duplicated as the partition key: partitionBy consumes
@@ -3339,10 +3274,6 @@ def _seq_ids_sha(df: DataFrame) -> DataFrame:
             256,
         ).alias("ids_sha"),
     )
-
-
-#: Test/debug hook: store of the most recent x6_release_increment run.
-_LAST_INCR_STORE: list = []
 
 
 def _incr_two_level_sql(src: str, suffix: str) -> str:
@@ -3461,9 +3392,6 @@ def x6_release_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare, not a data read. The base's digest pyramid is computed
     once and reused — in production it would be read back from the
     v1 manifest table rather than recomputed."""
-    import shutil
-    import tempfile
-
     from recipes_spark.operators.prefix import partitioned_prefix_sum
     from recipes_spark.plans.catalog import snapshot_commit, snapshot_read
 
@@ -3526,11 +3454,7 @@ def x6_release_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset = base_seqs.agg(F.max("seq_id")).collect()[0][0] + 1
     delta_seqs = pack(d.filter(~is_base), int(offset))
 
-    for prev in _LAST_INCR_STORE:
-        shutil.rmtree(prev, ignore_errors=True)
-    store = tempfile.mkdtemp(prefix="recipes_release_incr_")
-    _LAST_INCR_STORE.clear()
-    _LAST_INCR_STORE.append(store)
+    store = scratch_dir("release_incr")
     for version, seqs in ((1, base_seqs), (2, delta_seqs)):
         snapshot_commit(
             spark,
@@ -3590,9 +3514,6 @@ def x6_release_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("shard")
     )
 
-
-#: Test/debug hook: store of the most recent x6_release_resume run.
-_LAST_RESUME_STORE: list = []
 
 _RELEASE_RESUME_ORACLE = f"""
 WITH tok AS MATERIALIZED (
@@ -3662,9 +3583,6 @@ def x6_release_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     digested), and each shard verifies independently — the property
     that lets a 1000-worker training job restart without a full
     release audit."""
-    import shutil
-    import tempfile
-
     from recipes_spark.operators.prefix import partitioned_prefix_sum
     from recipes_spark.plans.catalog import snapshot_commit, snapshot_read
 
@@ -3711,11 +3629,7 @@ def x6_release_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    for prev in _LAST_RESUME_STORE:
-        shutil.rmtree(prev, ignore_errors=True)
-    store = tempfile.mkdtemp(prefix="recipes_release_resume_")
-    _LAST_RESUME_STORE.clear()
-    _LAST_RESUME_STORE.append(store)
+    store = scratch_dir("release_resume")
     snapshot_commit(
         spark,
         seqs.withColumn("shard_key", F.col("shard")).repartition(
@@ -6050,7 +5964,7 @@ def x6_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     d = load(spark, sf_dir, "documents")
-    out = os.path.join(_scratch_dir("orc", sf_dir), "docs")
+    out = os.path.join(scratch_dir("orc"), "docs")
     (
         d.select(
             "doc_id",
@@ -8019,10 +7933,7 @@ def x6_release_index_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ann_index_load_books,
     )
     from recipes_spark.plans.catalog import snapshot_commit, snapshot_read
-    from recipes_spark.queries.dataops import (
-        _ann_scratch_store,
-        x2_best_survivor,
-    )
+    from recipes_spark.queries.dataops import x2_best_survivor
 
     keep = (
         x2_best_survivor(spark, sf_dir)
@@ -8030,7 +7941,7 @@ def x6_release_index_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .localCheckpoint(eager=True)
     )
-    root = _ann_scratch_store("e2e")
+    root = scratch_dir("ann_index_e2e")
     # --- release pyramid over the KEPT documents -------------------
     d = scale_partitions(load(spark, sf_dir, "documents")).join(
         F.broadcast(keep), "doc_id"

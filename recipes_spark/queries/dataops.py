@@ -33,6 +33,7 @@ from recipes_spark.operators.dedup import (
 )
 from recipes_spark.operators.similarity import brute_force_topk
 from recipes_spark.registry import query
+from recipes_spark.session import scratch_dir
 
 # ---------------------------------------------------------------------------
 # Deduplication.
@@ -3689,50 +3690,6 @@ def x3_ivf_pq_residual_topk(
     ).withColumnRenamed("rank", "rnk")
 
 
-#: Test/debug hook: store of the most recent persisted-ANN-index run
-#: (x3_index_commit / x3_index_search / x3_index_append each keep their
-#: own latest store inspectable, reclaiming the previous one — the
-#: release-store pattern).
-_LAST_ANN_STORES: dict = {}
-
-
-def _cleanup_ann_stores() -> None:
-    """atexit hook: reclaim the FINAL store per kind (the swap in
-    _ann_scratch_store only reclaims on the NEXT invocation, so without
-    this the last run of each kind leaked at process exit — r15
-    ADVICE)."""
-    import shutil
-
-    for path in _LAST_ANN_STORES.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _LAST_ANN_STORES.clear()
-
-
-import atexit as _atexit  # noqa: E402
-
-_atexit.register(_cleanup_ann_stores)
-
-
-def _ann_scratch_store(kind: str) -> str:
-    """Fresh scratch store for `kind`, reclaiming the previous run's.
-
-    CAVEAT (deliberate): the swap invalidates any still-live DataFrame
-    whose plan reads the PREVIOUS store — re-running a query of the
-    same kind while lazily holding the old run's result is
-    use-after-free on the store files. Registered queries materialize
-    their digests before returning, so only interactive/debug use can
-    hit this; collect what you need before re-running."""
-    import shutil
-    import tempfile
-
-    prev = _LAST_ANN_STORES.pop(kind, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    store = tempfile.mkdtemp(prefix=f"recipes_ann_index_{kind}_")
-    _LAST_ANN_STORES[kind] = store
-    return store
-
-
 def _cell_codes_digest(coded: DataFrame, suffix: str = "") -> DataFrame:
     """(cell, n_vecs{suffix}, codes_sha{suffix}) from (vec_id,
     codes_packed, __list) rows — the per-cell index manifest digest
@@ -3849,7 +3806,7 @@ def x3_index_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     coded = pq_encode_int(
         emb, books, coarse_milli=cents, code_bits=8
     ).localCheckpoint(eager=True)
-    store = _ann_scratch_store("commit")
+    store = scratch_dir("ann_index_commit")
     ann_index_commit(
         spark, emb, store, 1, cents, books, code_bits=8, coded=coded
     )
@@ -3911,7 +3868,7 @@ def x3_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     cents = train_coarse_centroids_int(emb, k=16, iters=3, hash_tag="pq:0")
     books = train_pq_codebooks_int(emb, m=4, k=256)
-    store = _ann_scratch_store("search")
+    store = scratch_dir("ann_index_search")
     ann_index_commit(spark, emb, store, 1, cents, books, code_bits=8)
     coarse_l, books_l = ann_index_load_books(spark, store)
     coded = ann_index_codes(spark, store, 1)
@@ -4072,7 +4029,7 @@ def x3_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_coded = pq_encode_int(
         base, books, coarse_milli=cents, code_bits=8
     ).localCheckpoint(eager=True)
-    store = _ann_scratch_store("append")
+    store = scratch_dir("ann_index_append")
     ann_index_commit(
         spark, base, store, 1, cents, books, code_bits=8, coded=base_coded
     )
@@ -4187,7 +4144,7 @@ def x3_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_coded = pq_encode_int(
         base, books, coarse_milli=cents, code_bits=8
     ).localCheckpoint(eager=True)
-    store = _ann_scratch_store("compact")
+    store = scratch_dir("ann_index_compact")
     ann_index_commit(
         spark, base, store, 1, cents, books, code_bits=8, coded=base_coded
     )
@@ -4286,7 +4243,7 @@ def x3_index_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     cents = train_coarse_centroids_int(emb, k=16, iters=3, hash_tag="pq:0")
     books = train_pq_codebooks_int(emb, m=4, k=256)
-    store = _ann_scratch_store("filtered")
+    store = scratch_dir("ann_index_filtered")
     ann_index_commit(
         spark, emb, store, 1, cents, books, code_bits=8,
         attrs=emb.select("vec_id", "label"),
@@ -4383,7 +4340,7 @@ def x3_index_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     cents = train_coarse_centroids_int(emb, k=16, iters=3, hash_tag="pq:0")
     books = train_pq_codebooks_int(emb, m=4, k=256)
-    store = _ann_scratch_store("radius")
+    store = scratch_dir("ann_index_radius")
     ann_index_commit(spark, emb, store, 1, cents, books, code_bits=8)
     coarse_l, _books_l = ann_index_load_books(spark, store)
     coded = ann_index_codes(spark, store, 1)
@@ -4484,7 +4441,7 @@ def x3_index_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     cents = train_coarse_centroids_int(emb, k=16, iters=3, hash_tag="pq:0")
     books = train_pq_codebooks_int(emb, m=4, k=256)
-    store = _ann_scratch_store("cellstats")
+    store = scratch_dir("ann_index_cellstats")
     ann_index_commit(spark, emb, store, 1, cents, books, code_bits=8)
     counts = (
         ann_index_codes(spark, store, 1)
@@ -4666,7 +4623,7 @@ def x3_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     coded = pq_encode_int(
         emb, books, coarse_milli=cents, code_bits=8
     ).localCheckpoint(eager=True)
-    store = _ann_scratch_store("delete")
+    store = scratch_dir("ann_index_delete")
     ann_index_commit(
         spark, emb, store, 1, cents, books, code_bits=8, coded=coded
     )
@@ -4841,7 +4798,7 @@ def x3_index_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     coded = pq_encode_int(
         emb, books, coarse_milli=cents, code_bits=8
     ).localCheckpoint(eager=True)
-    store = _ann_scratch_store("delete_where")
+    store = scratch_dir("ann_index_delete_where")
     ann_index_commit(
         spark, emb, store, 1, cents, books, code_bits=8, coded=coded,
         attrs=emb.select("vec_id", "label"),
@@ -4992,7 +4949,7 @@ def x3_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     coded_v1 = pq_encode_int(
         emb, books, coarse_milli=cents, code_bits=8
     ).localCheckpoint(eager=True)
-    store = _ann_scratch_store("upsert")
+    store = scratch_dir("ann_index_upsert")
     ann_index_commit(
         spark, emb, store, 1, cents, books, code_bits=8, coded=coded_v1
     )
@@ -5136,7 +5093,7 @@ def x3_index_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     coded = pq_encode_int(
         emb, books, coarse_milli=cents, code_bits=8
     ).localCheckpoint(eager=True)
-    store = _ann_scratch_store("delete_mor")
+    store = scratch_dir("ann_index_delete_mor")
     ann_index_commit(
         spark, emb, store, 1, cents, books, code_bits=8, coded=coded,
         attrs=emb.select("vec_id", "label"),
@@ -5319,7 +5276,7 @@ def x3_index_mmr_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     cents = train_coarse_centroids_int(emb, k=16, iters=3, hash_tag="pq:0")
     books = train_pq_codebooks_int(emb, m=4, k=256)
-    store = _ann_scratch_store("mmr_search")
+    store = scratch_dir("ann_index_mmr_search")
     ann_index_commit(spark, emb, store, 1, cents, books, code_bits=8)
     coarse_l, books_l = ann_index_load_books(spark, store)
     coded = ann_index_codes(spark, store, 1)
@@ -5447,7 +5404,7 @@ def x4_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     cents = train_coarse_centroids_int(emb, k=16, iters=3, hash_tag="pq:0")
     books = train_pq_codebooks_int(emb, m=4, k=256)
-    store = _ann_scratch_store("hybrid")
+    store = scratch_dir("ann_index_hybrid")
     ann_index_commit(spark, emb, store, 1, cents, books, code_bits=8)
     coarse_l, books_l = ann_index_load_books(spark, store)
     coded = ann_index_codes(spark, store, 1)
@@ -5619,7 +5576,7 @@ def x3_index_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    root = _ann_scratch_store("retrain")
+    root = scratch_dir("ann_index_retrain")
     stores = {1: os.path.join(root, "gen1"), 2: os.path.join(root, "gen2")}
     trained = {}
     for gen, src in ((1, old), (2, emb)):

@@ -5,14 +5,13 @@ then project the surviving store so DuckDB can replay the set logic."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from recipes_spark.io import load
 from recipes_spark.plans.merge import merge_into
 from recipes_spark.registry import query
+from recipes_spark.session import scratch_dir
 
 
 @query(
@@ -58,7 +57,7 @@ def merge_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         (-180 + (F.col("o_orderkey") % 340)).cast("double").alias("west"),
     )
-    store = tempfile.mkdtemp(prefix="recipes_merge_e2e_") + "/items"
+    store = scratch_dir("merge_e2e") + "/items"
 
     init = meta.filter(F.col("k") % 3 != 0)
     init.write.mode("overwrite").partitionBy("collection_id").parquet(store)

@@ -13,14 +13,13 @@ operator.
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from recipes_spark.plans.catalog import catalog_search, upsert_items
 from recipes_spark.plans.items import build_items
 from recipes_spark.registry import query
+from recipes_spark.session import scratch_dir
 from recipes_spark.sources.granules import file_metadata, stage_granules
 
 _QW, _QS, _QE, _QN = -60.0, -40.0, 20.0, 30.0
@@ -63,7 +62,7 @@ def stac_e2e_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     items = build_items(meta)
 
-    catalog = tempfile.mkdtemp(prefix="recipes_e2e_catalog_") + "/items"
+    catalog = scratch_dir("e2e_catalog") + "/items"
     upsert_items(spark, items, catalog)
     upsert_items(spark, items, catalog)  # idempotency under oracle watch
     stored = spark.read.parquet(catalog)

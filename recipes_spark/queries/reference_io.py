@@ -7,7 +7,6 @@ registry; oracles where SQL can express the result.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -15,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from recipes_spark.functions.encoding import fix_surrogates
 from recipes_spark.io import TABLES, load
 from recipes_spark.registry import query
+from recipes_spark.session import scratch_dir
 from recipes_spark.sources.granules import file_metadata, stage_granules
 from recipes_spark.sources.listing import (
     cached_glob,
@@ -49,7 +49,7 @@ def s6_cached_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6: memoized listing — first call materializes the sha256-keyed
     manifest parquet, second call reads it back (cache hit). Returns
     the cache-hit read, which must equal the direct listing."""
-    cache_root = tempfile.mkdtemp(prefix="recipes_listing_cache_")
+    cache_root = scratch_dir("listing_cache")
     pattern = f"{sf_dir}/*.parquet"
     cached_glob(spark, pattern, cache_root=cache_root)  # miss: writes
     hit = cached_glob(spark, pattern, cache_root=cache_root)  # hit: reads

@@ -342,14 +342,14 @@ def join_bucketed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct / whole-number quantities) so the oracle compare is
     FP-order-free."""
     import re as _re
-    import tempfile as _tempfile
 
     from recipes_spark.operators.bucketing import bucketed_join, write_bucketed
+    from recipes_spark.session import scratch_dir
 
     tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir).strip("_")
     lt, rt = f"bx_lineitem_{tag}", f"bx_orders_{tag}"
     if not (spark.catalog.tableExists(lt) and spark.catalog.tableExists(rt)):
-        root = _tempfile.mkdtemp(prefix="recipes_bucketed_")
+        root = scratch_dir("bucketed")
         write_bucketed(
             load(spark, sf_dir, "lineitem").select(
                 "l_orderkey", F.col("l_quantity").cast("long").alias("qty")

@@ -21,6 +21,7 @@ from recipes_spark.plans.catalog import (
 )
 from recipes_spark.plans.items import build_items
 from recipes_spark.registry import query
+from recipes_spark.session import scratch_dir
 
 # Shared DuckDB derivation of the flat metadata rows (mirrors _metadata).
 _ORACLE_META = """
@@ -424,16 +425,13 @@ def catalog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     format performs; data files are immutable once committed, so
     snapshot reads are plain pruned parquet scans."""
     import os
-    import shutil
 
     from recipes_spark.plans.catalog import snapshot_commit, snapshot_read
-    from recipes_spark.queries.corpus_ops import _scratch_dir
 
     # Fresh store per invocation: a re-run replays commit 1, which the
     # optimistic-concurrency guard would (rightly) reject against the
     # previous run's surviving manifests.
-    store = os.path.join(_scratch_dir("timetravel", sf_dir), "store")
-    shutil.rmtree(store, ignore_errors=True)
+    store = os.path.join(scratch_dir("timetravel"), "store")
     m = _metadata(spark, sf_dir)
     snapshot_commit(spark, m.filter(F.col("west") < 50), store, 1)
     snapshot_commit(spark, m.filter(F.col("west") >= 50), store, 2)
@@ -497,13 +495,10 @@ def catalog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     table formats amortize it by storing the schema in the manifest;
     the data files are never rewritten for an additive change."""
     import os
-    import shutil
 
     from recipes_spark.plans.catalog import snapshot_commit, snapshot_read
-    from recipes_spark.queries.corpus_ops import _scratch_dir
 
-    store = os.path.join(_scratch_dir("schemaevo", sf_dir), "store")
-    shutil.rmtree(store, ignore_errors=True)
+    store = os.path.join(scratch_dir("schemaevo"), "store")
     m = _metadata(spark, sf_dir)
     v1 = m.filter(F.col("west") < 50).select("item_id", "collection_id")
     v2 = m.filter(F.col("west") >= 50).select(
@@ -772,12 +767,10 @@ def catalog_compact_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite is content-preserving: no row lost, duplicated, or moved
     across collections. File-count reduction itself is asserted in
     tests/test_catalog.py::test_compact_catalog."""
-    import tempfile as _tempfile
-
     from recipes_spark.plans.catalog import compact_catalog
 
     items = build_items(_metadata(spark, sf_dir))
-    path = _tempfile.mkdtemp(prefix="recipes_compact_") + "/catalog"
+    path = scratch_dir("compact") + "/catalog"
     items.repartition(16).write.partitionBy("collection_id").parquet(path)
     compact_catalog(spark, path, target_file_bytes=4 << 20)
     store = spark.read.parquet(path)
@@ -946,17 +939,14 @@ def catalog_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-only manifests reference everything — which is why replace
     commits and GC ship as one feature here."""
     import os
-    import shutil
 
     from recipes_spark.plans.catalog import (
         snapshot_commit,
         snapshot_read,
         snapshot_vacuum,
     )
-    from recipes_spark.queries.corpus_ops import _scratch_dir
 
-    store = os.path.join(_scratch_dir("vacuum", sf_dir), "store")
-    shutil.rmtree(store, ignore_errors=True)
+    store = os.path.join(scratch_dir("vacuum"), "store")
     m = _metadata(spark, sf_dir)
     snapshot_commit(spark, m.filter(F.col("west") < 50).repartition(2), store, 1)
     snapshot_commit(spark, m.filter(F.col("west") >= 50).repartition(2), store, 2)

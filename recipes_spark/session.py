@@ -21,15 +21,70 @@ Scale notes (100 TB design):
   unpacked copy of the same pyspark and drops the spark-core jar from
   the workers' `sys.path`, so a task no longer re-reads those archives'
   directories. The executors must be able to import `recipes_spark`.
+- Scratch space: every directory the engine writes for itself (staged
+  stream input, checkpoints, round-trip exports, snapshot and ANN
+  stores) comes from `scratch_dir`, under one per-process root that is
+  removed when the process exits.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
 DEFAULT_LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+_ROOT_PREFIX = "recipes_scratch_"
+#: This process's scratch root, made on first use.
+_root: str | None = None
+#: Newest directory `scratch_dir` returned for each name — the test and
+#: debug hook for inspecting what the latest run of a query wrote.
+LATEST: dict[str, str] = {}
+
+
+def scratch_dir(name: str) -> str:
+    """A fresh, empty directory named after `name`, under this process's
+    scratch root `<tempdir>/recipes_scratch_<pid>_*`. Nothing in it is
+    deleted before the process exits — a returned lazy DataFrame may
+    still read its files — and an exit hook then removes the whole
+    root. The first call also removes the roots of processes that no
+    longer run (killed before their hook ran)."""
+    global _root
+    if _root is None:
+        _reap_dead_roots()
+        _root = tempfile.mkdtemp(prefix=f"{_ROOT_PREFIX}{os.getpid()}_")
+        atexit.register(_remove_root, os.getpid(), _root)
+    path = tempfile.mkdtemp(prefix=f"{name}_", dir=_root)
+    LATEST[name] = path
+    return path
+
+
+def _remove_root(pid: int, path: str) -> None:
+    """Exit hook: remove the scratch root, only in the process that made
+    it: a forked child inherits the hook, but the root stays its
+    parent's to remove."""
+    if os.getpid() == pid:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _reap_dead_roots() -> None:
+    """Remove every scratch root whose owner pid no longer runs. A root
+    whose pid is alive is kept, whatever its age: it may belong to a
+    live process."""
+    tmp = tempfile.gettempdir()
+    for entry in os.listdir(tmp):
+        if not entry.startswith(_ROOT_PREFIX):
+            continue
+        try:
+            os.kill(int(entry[len(_ROOT_PREFIX):].split("_", 1)[0]), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
+        except (ValueError, PermissionError):
+            pass  # not a root we named, or alive under another uid
 
 
 def configure(builder: SparkSession.Builder) -> SparkSession.Builder:

@@ -26,13 +26,14 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 from collections.abc import Iterator, Sequence
 from datetime import datetime, timedelta
 
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from recipes_spark.session import scratch_dir
 
 GRANULE_MAGIC = b"RSPKGRAN1\n"
 
@@ -66,11 +67,11 @@ def granule_meta(i: int, start: str = "2024-01-01 00:00:00") -> dict:
 
 def stage_granules(n: int = 24) -> str:
     """Write n synthetic granule files (JSON header + deterministic
-    payload padding) into a memoized temp dir; returns the dir."""
+    payload padding) into a memoized scratch dir; returns the dir."""
     key = ("default", n)
     if key in _STAGED and os.path.isdir(_STAGED[key]):
         return _STAGED[key]
-    root = tempfile.mkdtemp(prefix="recipes_granules_")
+    root = scratch_dir("granules")
     for i in range(n):
         meta = granule_meta(i)
         header = json.dumps(meta).encode()

@@ -26,11 +26,11 @@ from __future__ import annotations
 import itertools
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from recipes_spark.io import load
+from recipes_spark.session import scratch_dir
 
 _STAGED: dict[tuple[str, int, int], str] = {}
 #: Memoized recursive byte totals of staged dirs (immutable once
@@ -42,14 +42,14 @@ _IDS = itertools.count()
 def stage_events(
     spark: SparkSession, sf_dir: str, *, files: int = 4, copies: int = 1
 ) -> str:
-    """Rewrite events as `files` parquet files per copy under a temp dir;
+    """Rewrite events as `files` parquet files per copy under a scratch dir;
     memoized per (sf_dir, files, copies). With copies=2 every event_id
     appears twice (dedup-operator input). File mtimes are forced into
     write order so latestFirst=false reads them deterministically."""
     key = (sf_dir, files, copies)
     if key in _STAGED and os.path.isdir(_STAGED[key]):
         return _STAGED[key]
-    root = tempfile.mkdtemp(prefix="recipes_stream_events_")
+    root = scratch_dir("stream_events")
     ev = load(spark, sf_dir, "events")
     for copy in range(copies):
         part = os.path.join(root, f"copy{copy}")
@@ -62,13 +62,13 @@ def stage_events(
     return root
 
 
-def stage_ordered(dfs, *, prefix: str) -> str:
+def stage_ordered(dfs, *, name: str) -> str:
     """Write each DataFrame as one single-file parquet chunk with
     strictly increasing mtimes, so a latestFirst=false file-source
     stream delivers them as in-order micro-batches (one per file with
     maxFilesPerTrigger=1). The one in-order stager: every st* landing
     zone in ingest.py and stage_events_ordered write through it."""
-    root = tempfile.mkdtemp(prefix=prefix)
+    root = scratch_dir(name)
     for i, df in enumerate(dfs):
         part = os.path.join(root, f"chunk{i:03d}.parquet")
         df.coalesce(1).write.mode("overwrite").parquet(part)
@@ -104,7 +104,7 @@ def stage_events_ordered(
             chunked.filter(F.col("__chunk") == i).drop("__chunk")
             for i in range(1, chunks + 1)
         ],
-        prefix="recipes_stream_cdc_",
+        name="stream_cdc",
     )
     return _STAGED[key]
 
@@ -223,9 +223,9 @@ def run_foreach_batch(sdf: DataFrame, body) -> None:
     """Execute a streaming DataFrame to completion (availableNow),
     calling `body(batch_df, batch_id)` once per micro-batch; an error in
     `body` stops the query and propagates. The session's shuffle
-    partitions apply. The checkpoint is a fresh temp dir, deleted once
+    partitions apply. The checkpoint is a fresh scratch dir, deleted once
     the query stops: no run resumes from another's progress."""
-    ckpt = tempfile.mkdtemp(prefix="recipes_stream_ckpt_")
+    ckpt = scratch_dir("stream_ckpt")
     try:
         _run_available_now(
             sdf.writeStream.foreachBatch(body).option("checkpointLocation", ckpt)

@@ -24,7 +24,6 @@ but the capability — idempotent incremental load — is identical.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -53,6 +52,7 @@ from recipes_spark.queries.dataops import (
 from recipes_spark.io import load
 from recipes_spark.plans.catalog import upsert_items
 from recipes_spark.registry import query
+from recipes_spark.session import scratch_dir
 from recipes_spark.streaming.core import (
     read_staged,
     run_foreach_batch,
@@ -122,7 +122,7 @@ def st10_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from recipes_spark.plans.merge import merge_into
 
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
-    store = tempfile.mkdtemp(prefix="recipes_cdc_store_") + "/store"
+    store = scratch_dir("cdc_store") + "/store"
     schema = load(spark, sf_dir, "events").schema
 
     def apply_cdc(bdf: DataFrame, _bid: int) -> None:
@@ -171,7 +171,7 @@ def st1_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     a fresh catalog, then aggregate the catalog. Upsert-by-key makes the
     result independent of batch boundaries — it must equal a plain
     per-type aggregate of the source, which is the oracle."""
-    catalog = tempfile.mkdtemp(prefix="recipes_ingest_catalog_") + "/store"
+    catalog = scratch_dir("ingest_catalog") + "/store"
     ingest_events(spark, sf_dir, catalog)
     return (
         spark.read.parquet(catalog)
@@ -268,9 +268,9 @@ def st11_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         batch.filter(F.col("doc_id") < 3_000_000),
         batch.filter(F.col("doc_id") >= 3_000_000),
     ]
-    staged = stage_ordered(chunks * 2, prefix="recipes_st11_landing_")
+    staged = stage_ordered(chunks * 2, name="st11_landing")
 
-    out_dir = tempfile.mkdtemp(prefix="recipes_st11_out_") + "/kept"
+    out_dir = scratch_dir("st11_out") + "/kept"
 
     def dedup_against_corpus(bdf: DataFrame, bid: int) -> None:
         kept = bdf.join(corpus_idx, "h", "left_anti").select("doc_id")
@@ -357,10 +357,10 @@ def st12_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         if hi[i] is not None:
             c = c.filter(F.col("doc_id") <= hi[i])
         chunk_dfs.append(c.select("doc_id", "lang", "source"))
-    staged = stage_ordered(chunk_dfs, prefix="recipes_st12_landing_")
+    staged = stage_ordered(chunk_dfs, name="st12_landing")
 
-    index_dir = tempfile.mkdtemp(prefix="recipes_st12_index_") + "/bands"
-    pairs_dir = tempfile.mkdtemp(prefix="recipes_st12_pairs_") + "/pairs"
+    index_dir = scratch_dir("st12_index") + "/bands"
+    pairs_dir = scratch_dir("st12_pairs") + "/pairs"
     band_cols = ["doc_id", "lang", "source", "bhash"]
 
     def neardup_batch(bdf: DataFrame, bid: int) -> None:
@@ -487,9 +487,9 @@ def st13_stream_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
 
-    staged = stage_ordered(chunks, prefix="recipes_st13_landing_")
-    out_dir = tempfile.mkdtemp(prefix="recipes_st13_out_") + "/cand"
-    state_dir = tempfile.mkdtemp(prefix="recipes_st13_state_")
+    staged = stage_ordered(chunks, name="st13_landing")
+    out_dir = scratch_dir("st13_out") + "/cand"
+    state_dir = scratch_dir("st13_state")
     probe_then_absorb = bloom_probe_then_absorb(
         out_dir, state_dir, m_bits=m_bits, k=k
     )
@@ -647,9 +647,9 @@ def st14_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth, width, thresh = 4, 1024, 200
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
-    staged = stage_ordered(chunks, prefix="recipes_st14_landing_")
-    out_dir = tempfile.mkdtemp(prefix="recipes_st14_out_") + "/hot"
-    state_dir = tempfile.mkdtemp(prefix="recipes_st14_state_")
+    staged = stage_ordered(chunks, name="st14_landing")
+    out_dir = scratch_dir("st14_out") + "/hot"
+    state_dir = scratch_dir("st14_state")
     probe_then_absorb = cms_probe_then_absorb(
         spark, out_dir, state_dir, depth=depth, width=width, thresh=thresh
     )
@@ -821,9 +821,9 @@ def st17_stream_hist_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior histogram and interpolated quantile estimate bit-for-bit."""
     ev = load(spark, sf_dir, "events").select("event_id", "value")
     chunks = [ev.filter(F.pmod("event_id", F.lit(4)) == i) for i in range(4)]
-    staged = stage_ordered(chunks, prefix="recipes_st17_landing_")
-    out_dir = tempfile.mkdtemp(prefix="recipes_st17_out_") + "/quantiles"
-    state_dir = tempfile.mkdtemp(prefix="recipes_st17_state_")
+    staged = stage_ordered(chunks, name="st17_landing")
+    out_dir = scratch_dir("st17_out") + "/quantiles"
+    state_dir = scratch_dir("st17_state")
     probe_then_absorb = hist_probe_then_absorb(spark, out_dir, state_dir)
 
     run_foreach_batch(
@@ -950,9 +950,9 @@ def st18_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "n_chars"
     )
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
-    staged = stage_ordered(chunks, prefix="recipes_st18_landing_")
-    out_dir = tempfile.mkdtemp(prefix="recipes_st18_out_") + "/sample"
-    state_dir = tempfile.mkdtemp(prefix="recipes_st18_state_")
+    staged = stage_ordered(chunks, name="st18_landing")
+    out_dir = scratch_dir("st18_out") + "/sample"
+    state_dir = scratch_dir("st18_state")
     merge_then_emit = sample_merge_then_emit(spark, out_dir, state_dir)
 
     run_foreach_batch(
@@ -1066,9 +1066,9 @@ def st19_stream_incremental_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i in range(4)
     ]
-    staged = stage_ordered(chunks, prefix="recipes_st19_landing_")
-    out_dir = tempfile.mkdtemp(prefix="recipes_st19_out_") + "/labels"
-    state_dir = tempfile.mkdtemp(prefix="recipes_st19_state_")
+    staged = stage_ordered(chunks, name="st19_landing")
+    out_dir = scratch_dir("st19_out") + "/labels"
+    state_dir = scratch_dir("st19_state")
     merge_then_emit = cc_merge_then_emit(spark, out_dir, state_dir)
 
     run_foreach_batch(
@@ -1183,7 +1183,7 @@ def st20_stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch N recomputes byte-identical state."""
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
     schema = load(spark, sf_dir, "events").schema
-    state_dir = tempfile.mkdtemp(prefix="recipes_st20_state_")
+    state_dir = scratch_dir("st20_state")
     pattern_advance = pattern_advance_factory(spark, state_dir)
 
     run_foreach_batch(
@@ -1322,9 +1322,9 @@ def st21_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     never buffers, the state never grows past #types rows."""
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
     chunks = [ev.filter(F.pmod("event_id", F.lit(4)) == i) for i in range(4)]
-    staged = stage_ordered(chunks, prefix="recipes_st21_landing_")
-    out_dir = tempfile.mkdtemp(prefix="recipes_st21_out_") + "/anomalies"
-    state_dir = tempfile.mkdtemp(prefix="recipes_st21_state_")
+    staged = stage_ordered(chunks, name="st21_landing")
+    out_dir = scratch_dir("st21_out") + "/anomalies"
+    state_dir = scratch_dir("st21_state")
     probe_then_absorb = moments_probe_then_absorb(spark, out_dir, state_dir)
 
     run_foreach_batch(
@@ -1494,9 +1494,9 @@ def st22_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i in range(4)
     ]
-    staged = stage_ordered(chunks, prefix="recipes_st22_landing_")
-    out_dir = tempfile.mkdtemp(prefix="recipes_st22_out_") + "/alarms"
-    state_dir = tempfile.mkdtemp(prefix="recipes_st22_state_")
+    staged = stage_ordered(chunks, name="st22_landing")
+    out_dir = scratch_dir("st22_out") + "/alarms"
+    state_dir = scratch_dir("st22_state")
     cusum_advance = cusum_advance_factory(spark, out_dir, state_dir)
 
     run_foreach_batch(
@@ -1614,8 +1614,8 @@ def st23_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax instead. Retry-idempotent by the family contract."""
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
     schema = load(spark, sf_dir, "events").schema
-    out_dir = tempfile.mkdtemp(prefix="recipes_st23_out_") + "/credits"
-    state_dir = tempfile.mkdtemp(prefix="recipes_st23_state_")
+    out_dir = scratch_dir("st23_out") + "/credits"
+    state_dir = scratch_dir("st23_state")
     advance = attribution_advance_factory(spark, out_dir, state_dir)
 
     run_foreach_batch(
@@ -1729,8 +1729,8 @@ def st24_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-bid overwrite, prior-only reads)."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
-    staged = stage_ordered(chunks, prefix="recipes_st24_landing_")
-    state_dir = tempfile.mkdtemp(prefix="recipes_st24_state_")
+    staged = stage_ordered(chunks, name="st24_landing")
+    state_dir = scratch_dir("st24_state")
     merge_then_persist = hll_merge_then_persist(spark, state_dir)
 
     run_foreach_batch(
@@ -1866,7 +1866,7 @@ def st25_stream_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the family contract (per-bid overwrite, prior-only reads)."""
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
     schema = load(spark, sf_dir, "events").schema
-    state_dir = tempfile.mkdtemp(prefix="recipes_st25_state_")
+    state_dir = scratch_dir("st25_state")
     twap_advance = twap_advance_factory(spark, state_dir)
 
     run_foreach_batch(
@@ -2004,7 +2004,7 @@ def st26_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior-only reads)."""
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
     schema = load(spark, sf_dir, "events").schema
-    state_dir = tempfile.mkdtemp(prefix="recipes_st26_state_")
+    state_dir = scratch_dir("st26_state")
     ohlc_advance = ohlc_advance_factory(spark, state_dir)
 
     run_foreach_batch(
@@ -2089,8 +2089,8 @@ def st27_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior-only reads — asserted by re-invoking a mid-stream batch)."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
-    staged = stage_ordered(chunks, prefix="recipes_st27_landing_")
-    state_dir = tempfile.mkdtemp(prefix="recipes_st27_state_")
+    staged = stage_ordered(chunks, name="st27_landing")
+    state_dir = scratch_dir("st27_state")
     advance = line_count_advance_factory(spark, state_dir)
 
     run_foreach_batch(
@@ -2109,12 +2109,6 @@ def st27_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ST28_LINES_SCHEMA = "doc_id bigint, source string, idx int, line string"
 _ST28_SRC_SCHEMA = "source string, n_docs long"
-
-#: State dir of the most recent st28_stream_corpus_pipeline run in this
-#: process — a test/inspection hook (ADVICE r11: tests used to locate
-#: the dir by mtime-globbing the global tempdir, racy under parallel
-#: runs or leftover dirs from prior sessions).
-_ST28_LAST_STATE_DIR: str | None = None
 
 
 def corpus_pipeline_advance_factory(spark: SparkSession, state_dir: str):
@@ -2247,10 +2241,8 @@ def st28_stream_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "text", "n_chars"
     )
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
-    staged = stage_ordered(chunks, prefix="recipes_st28_landing_")
-    state_dir = tempfile.mkdtemp(prefix="recipes_st28_state_")
-    global _ST28_LAST_STATE_DIR
-    _ST28_LAST_STATE_DIR = state_dir
+    staged = stage_ordered(chunks, name="st28_landing")
+    state_dir = scratch_dir("st28_state")
     advance = corpus_pipeline_advance_factory(spark, state_dir)
 
     run_foreach_batch(
@@ -2359,8 +2351,8 @@ def st29_stream_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
-    staged = stage_ordered(chunks, prefix="recipes_st29_landing_")
-    state_dir = tempfile.mkdtemp(prefix="recipes_st29_state_")
+    staged = stage_ordered(chunks, name="st29_landing")
+    state_dir = scratch_dir("st29_state")
     advance = classifier_stats_advance_factory(spark, state_dir)
 
     run_foreach_batch(
@@ -2534,8 +2526,8 @@ def st30_stream_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = [
         d.filter(F.floor(F.col("doc_id") / span) == i) for i in range(4)
     ]
-    staged = stage_ordered(chunks, prefix="recipes_st30_landing_")
-    state_dir = tempfile.mkdtemp(prefix="recipes_st30_state_")
+    staged = stage_ordered(chunks, name="st30_landing")
+    state_dir = scratch_dir("st30_state")
     advance = packing_advance_factory(spark, state_dir)
 
     run_foreach_batch(
@@ -2654,8 +2646,8 @@ def st31_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse = train_coarse_centroids_int(emb, k=16, iters=3, hash_tag="pq:0")
     books = train_pq_codebooks_int(emb, m=4, k=256)
     chunks = [emb.filter(F.pmod("vec_id", F.lit(4)) == i) for i in range(4)]
-    staged = stage_ordered(chunks, prefix="recipes_st31_landing_")
-    state_dir = tempfile.mkdtemp(prefix="recipes_st31_state_")
+    staged = stage_ordered(chunks, name="st31_landing")
+    state_dir = scratch_dir("st31_state")
     advance = index_append_advance_factory(spark, state_dir, coarse, books)
 
     run_foreach_batch(

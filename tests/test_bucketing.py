@@ -3,8 +3,6 @@ side (the 100 TB fact-fact join strategy, SURVEY.md §4.2)."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from recipes_spark.io import load
@@ -13,11 +11,12 @@ from recipes_spark.operators.bucketing import (
     has_shuffle,
     write_bucketed,
 )
+from recipes_spark.session import scratch_dir
 
 
 @pytest.fixture(scope="module")
 def bucketed_tables(spark, sf_dir):
-    root = tempfile.mkdtemp(prefix="recipes_buckets_")
+    root = scratch_dir("buckets")
     spark.sql("CREATE DATABASE IF NOT EXISTS bucketed_test")
     write_bucketed(
         load(spark, sf_dir, "orders"),

@@ -4,13 +4,13 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
 
 from recipes_spark.plans.catalog import catalog_search, compact_catalog, upsert_items
 from recipes_spark.plans.merge import merge_into
+from recipes_spark.session import scratch_dir
 from recipes_spark.streaming.ingest import ingest_events
 
 
@@ -34,7 +34,7 @@ def _items(spark, n=50, collection="c-a"):
 
 
 def test_upsert_idempotent(spark):
-    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    path = scratch_dir("test_stac") + "/catalog"
     items = _items(spark)
     upsert_items(spark, items, path)
     first = spark.read.parquet(path).count()
@@ -43,7 +43,7 @@ def test_upsert_idempotent(spark):
 
 
 def test_upsert_new_version_wins(spark):
-    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    path = scratch_dir("test_stac") + "/catalog"
     upsert_items(spark, _items(spark), path)
     updated = _items(spark, n=10).withColumn(
         "bbox", F.array(F.lit(0.0), F.lit(0.0), F.lit(1.0), F.lit(1.0))
@@ -55,7 +55,7 @@ def test_upsert_new_version_wins(spark):
 
 
 def test_upsert_untouched_partition_preserved(spark):
-    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    path = scratch_dir("test_stac") + "/catalog"
     upsert_items(spark, _items(spark, collection="c-a"), path)
     other = _items(spark, n=20, collection="c-b").withColumn(
         "id", F.concat(F.lit("other-"), F.col("id"))
@@ -70,7 +70,7 @@ def test_upsert_moves_a_key_to_its_new_partition(spark):
     """An item whose collection changes keeps one row, in the new
     collection: the upsert finds the old row outside the batch's
     partitions, and the old file's other rows survive."""
-    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    path = scratch_dir("test_stac") + "/catalog"
     schema = "id string, v int, collection_id string"
     first = spark.createDataFrame([("a", 1, "c1"), ("b", 1, "c1")], schema)
     upsert_items(spark, first, path)
@@ -105,7 +105,7 @@ def test_upsert_delta_rewrites_only_hit_files(spark):
     a multi-file store rewrites only the file that held it. Every other
     file keeps its name and size, and the rows written are at most the
     changed row plus the hit file's other rows."""
-    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    path = scratch_dir("test_stac") + "/catalog"
     for lo in (0, 50, 100):  # one new file per batch of new ids
         ids = [f"item-{i}" for i in range(lo, lo + 50)]
         upsert_items(spark, _items(spark, n=150).filter(F.col("id").isin(ids)), path)
@@ -153,7 +153,7 @@ def test_upsert_write_shuffles_the_key_only_for_the_batch_dedup(spark, monkeypat
 
     import recipes_spark.plans.catalog as catalog
 
-    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    path = scratch_dir("test_stac") + "/catalog"
     upsert_items(spark, _items(spark), path)
     written = []
     commit = catalog.commit_rewrite
@@ -178,7 +178,7 @@ def _row_set(rows):
 def _two_file_store(spark):
     """50 items of collection c-a in two files (item-0..24, the rest)."""
     first = F.col("id").isin([f"item-{i}" for i in range(25)])
-    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    path = scratch_dir("test_stac") + "/catalog"
     upsert_items(spark, _items(spark).filter(first), path)
     upsert_items(spark, _items(spark).filter(~first), path)
     assert len(_store_files(path)) == 2
@@ -297,7 +297,7 @@ def test_writers_leave_partition_overwrite_mode_alone(spark, sf_dir):
     prior = spark.conf.get(key)
     spark.conf.set(key, "static")
     try:
-        tmp = tempfile.mkdtemp(prefix="recipes_test_conf_")
+        tmp = scratch_dir("test_conf")
         path = f"{tmp}/catalog"
         for _ in range(2):  # first write, then a rewrite
             merge_into(spark, path, _items(spark), on="id", partition_col="collection_id")
@@ -317,7 +317,7 @@ def test_writers_leave_partition_overwrite_mode_alone(spark, sf_dir):
 def test_compact_catalog(spark):
     import glob as _glob
 
-    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    path = scratch_dir("test_stac") + "/catalog"
     # Fragmented store: 200 rows spread across 40 tiny files.
     _items(spark, n=200).repartition(40).write.partitionBy(
         "collection_id"
@@ -349,7 +349,7 @@ def test_compact_catalog_with_no_data_file(spark):
     """An upsert of an empty batch (every file quarantined) leaves a
     store holding only `_SUCCESS`: there is no schema to infer and no
     row to rewrite, so compaction plans nothing instead of raising."""
-    path = tempfile.mkdtemp(prefix="recipes_test_stac_") + "/catalog"
+    path = scratch_dir("test_stac") + "/catalog"
     upsert_items(spark, _items(spark, n=0), path)
     assert "_SUCCESS" in os.listdir(path) and not _store_files(path)
     assert compact_catalog(spark, path) == {}
@@ -763,7 +763,7 @@ def test_snapshot_read_and_vacuum_decode_manifest_paths(spark):
         snapshot_commit, snapshot_read, snapshot_vacuum,
     )
 
-    store = tempfile.mkdtemp(prefix="recipes snap 5%_") + "/store"
+    store = scratch_dir("snap 5%") + "/store"
     for v in (1, 2):
         rows = spark.range((v - 1) * 10, v * 10).repartition(2)
         snapshot_commit(spark, rows, store, v)

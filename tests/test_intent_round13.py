@@ -433,7 +433,7 @@ def test_release_materialize_idempotent_rerun(spark, sf_dir):
     parquet under a snapshot manifest."""
     import os
 
-    from recipes_spark.queries.corpus_ops import _LAST_RELEASE_STORE
+    from recipes_spark.session import LATEST
 
     runs = []
     for _ in range(2):
@@ -446,7 +446,7 @@ def test_release_materialize_idempotent_rerun(spark, sf_dir):
         assert pdf["digests_match"].all(), pdf
         runs.append(pdf)
     assert runs[0].equals(runs[1])
-    store = _LAST_RELEASE_STORE[0]
+    store = LATEST["release"]
     assert os.path.isdir(os.path.join(store, "_manifests", "v1"))
     shard_dirs = [
         d

@@ -268,8 +268,8 @@ def test_release_increment_physical_append(spark, sf_dir):
     (the append never rewrites them)."""
     import os
 
-    from recipes_spark.queries.corpus_ops import _LAST_INCR_STORE
     from recipes_spark.registry import all_queries
+    from recipes_spark.session import LATEST
 
     pdf = (
         all_queries()["x6_release_increment"](spark, sf_dir)
@@ -282,7 +282,7 @@ def test_release_increment_physical_append(spark, sf_dir):
     assert pdf["digest_changed_iff_touched"].all(), pdf
     assert pdf["touched"].sum() >= 1
     assert (pdf["n_seqs_v2"] >= pdf["n_seqs_v1"].fillna(0)).all()
-    store = _LAST_INCR_STORE[0]
+    store = LATEST["release_incr"]
     touched = {int(s) for s in pdf[pdf["touched"] == 1]["shard"]}
     v2_dirs = {
         int(d.split("=")[1])
@@ -622,8 +622,8 @@ def test_release_resume_bounds_verification(spark, sf_dir):
     work — the remainder is non-empty but strictly smaller than the
     full release (chunks below the cursor are never read or
     digested), per shard."""
-    from recipes_spark.queries.corpus_ops import _LAST_RESUME_STORE
     from recipes_spark.registry import all_queries
+    from recipes_spark.session import LATEST
 
     qs = all_queries()
     rows = qs["x6_release_resume"](spark, sf_dir).collect()
@@ -635,7 +635,7 @@ def test_release_resume_bounds_verification(spark, sf_dir):
 
     import pyspark.sql.functions as FF
 
-    store = _LAST_RESUME_STORE[0]
+    store = LATEST["release_resume"]
     full = (
         spark.read.parquet(os.path.join(store, "data", "v1"))
         .select("shard", "chunk")

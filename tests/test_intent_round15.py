@@ -19,13 +19,13 @@ def test_index_commit_contract(spark, sf_dir):
     plan-side encode (files_match), the model round-trips bit-exactly
     (books_match), and the store physically holds cell-partitioned
     codes under a books/codes substore pair."""
-    from recipes_spark.queries.dataops import _LAST_ANN_STORES
+    from recipes_spark.session import LATEST
 
     rows = all_queries()["x3_index_commit"](spark, sf_dir).collect()
     assert rows, "empty index manifest"
     assert all(bool(r["files_match"]) for r in rows), rows
     assert all(bool(r["books_match"]) for r in rows), rows
-    store = _LAST_ANN_STORES["commit"]
+    store = LATEST["ann_index_commit"]
     assert os.path.isdir(os.path.join(store, "books", "_manifests", "v1"))
     cells = {
         d
@@ -66,7 +66,7 @@ def test_index_append_layout_and_grown_recall(spark, sf_dir):
         ann_index_codes,
         ann_index_load_books,
     )
-    from recipes_spark.queries.dataops import _LAST_ANN_STORES
+    from recipes_spark.session import LATEST
 
     rows = all_queries()["x3_index_append"](spark, sf_dir).collect()
     assert rows
@@ -75,7 +75,7 @@ def test_index_append_layout_and_grown_recall(spark, sf_dir):
     assert all(bool(r["digest_changed_iff_touched"]) for r in rows), rows
     touched = {int(r["cell"]) for r in rows if r["touched"]}
     assert touched
-    store = _LAST_ANN_STORES["append"]
+    store = LATEST["ann_index_append"]
     v2_cells = {
         int(d.split("=")[1])
         for d in os.listdir(os.path.join(store, "codes", "data", "v2"))
@@ -295,14 +295,14 @@ def test_index_compact_layout_and_serving(spark, sf_dir):
         ann_index_codes,
         ann_index_load_books,
     )
-    from recipes_spark.queries.dataops import _LAST_ANN_STORES
+    from recipes_spark.session import LATEST
 
     rows = all_queries()["x3_index_compact"](spark, sf_dir).collect()
     assert rows
     assert all(bool(r["files_match"]) for r in rows), rows
     assert all(bool(r["vacuumed"]) for r in rows), rows
     assert all(bool(r["history_fenced"]) for r in rows), rows
-    store = _LAST_ANN_STORES["compact"]
+    store = LATEST["ann_index_compact"]
     data_root = os.path.join(store, "codes", "data")
     v3 = os.path.join(data_root, "v3")
     per_cell = {
@@ -359,7 +359,7 @@ def test_index_filtered_search_pushdown_and_recall(spark, sf_dir):
     (brute force over the label ∈ {2, 5} subset)."""
     from recipes_spark.operators.similarity import brute_force_topk
     from recipes_spark.plans.ann_index import ann_index_codes
-    from recipes_spark.queries.dataops import _LAST_ANN_STORES
+    from recipes_spark.session import LATEST
 
     qs = all_queries()
     got_rows = qs["x3_index_filtered_search"](spark, sf_dir).collect()
@@ -385,7 +385,7 @@ def test_index_filtered_search_pushdown_and_recall(spark, sf_dir):
     recall = len(got & exact) / len(exact)
     assert recall >= 0.9, f"filtered recall@10 {recall:.3f} < 0.9"
     # Pushed predicate: the codes scan itself carries the label filter.
-    store = _LAST_ANN_STORES["filtered"]
+    store = LATEST["ann_index_filtered"]
     sdf = ann_index_codes(spark, store, 1, extra=("label",)).filter(
         F.col("label").isin(2, 5)
     )
@@ -430,11 +430,11 @@ def test_index_filtered_append_and_missing_attrs(spark, sf_dir):
         ann_index_codes,
         ann_index_load_books,
     )
-    from recipes_spark.queries.dataops import _LAST_ANN_STORES
+    from recipes_spark.session import LATEST
 
     qs = all_queries()
     qs["x3_index_filtered_search"](spark, sf_dir).collect()
-    store = _LAST_ANN_STORES["filtered"]
+    store = LATEST["ann_index_filtered"]
     emb = load(spark, sf_dir, "embeddings")
     twins = emb.filter(F.col("vec_id") < 5).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),

@@ -24,7 +24,7 @@ def test_index_delete_contract_and_layout(spark, sf_dir):
     REFERENCE in the v2 manifest (zero new bytes); v2's data dir holds
     only touched-cell partitions; some cells were actually touched
     (the dedup fixture has non-survivors at every SF)."""
-    from recipes_spark.queries.dataops import _LAST_ANN_STORES
+    from recipes_spark.session import LATEST
 
     rows = all_queries()["x3_index_delete"](spark, sf_dir).collect()
     assert rows and any(r["touched"] == 1 for r in rows)
@@ -37,7 +37,7 @@ def test_index_delete_contract_and_layout(spark, sf_dir):
     for r in rows:
         assert r["n_v2"] == r["n_v1"] - r["n_deleted"]
         assert (r["n_deleted"] > 0) == (r["touched"] == 1)
-    store = _LAST_ANN_STORES["delete"]
+    store = LATEST["ann_index_delete"]
     v2_cells = {
         d
         for d in os.listdir(os.path.join(store, "codes", "data", "v2"))
@@ -63,15 +63,13 @@ def test_index_delete_absent_from_every_serve(spark, sf_dir):
         ann_index_delete,
         ann_index_load_books,
     )
-    from recipes_spark.queries.dataops import (
-        _ann_scratch_store,
-        x2_best_survivor,
-    )
+    from recipes_spark.queries.dataops import x2_best_survivor
+    from recipes_spark.session import scratch_dir
 
     emb = load(spark, sf_dir, "embeddings")
     cents = train_coarse_centroids_int(emb, k=16, iters=3, hash_tag="pq:0")
     books = train_pq_codebooks_int(emb, m=4, k=256)
-    store = _ann_scratch_store("delete_serve_test")
+    store = scratch_dir("ann_index_delete_serve_test")
     ann_index_commit(
         spark, emb, store, 1, cents, books, code_bits=8,
         attrs=emb.select("vec_id", "label"),
@@ -127,12 +125,12 @@ def test_index_delete_no_matching_tombstones(spark, sf_dir):
         ann_index_commit,
         ann_index_delete,
     )
-    from recipes_spark.queries.dataops import _ann_scratch_store
+    from recipes_spark.session import scratch_dir
 
     emb = load(spark, sf_dir, "embeddings")
     cents = train_coarse_centroids_int(emb, k=16, iters=3, hash_tag="pq:0")
     books = train_pq_codebooks_int(emb, m=4, k=256)
-    store = _ann_scratch_store("delete_noop_test")
+    store = scratch_dir("ann_index_delete_noop_test")
     ann_index_commit(spark, emb, store, 1, cents, books, code_bits=8)
     ghost = spark.createDataFrame([(10**9,)], "vec_id long")
     touched = ann_index_delete(spark, store, 2, ghost)
@@ -166,7 +164,7 @@ def test_index_delete_where_purges_predicate(spark, sf_dir):
     predicate survives anywhere in v2, attrs still ride (a filtered
     search on v2 still works), and the report flags all hold."""
     from recipes_spark.plans.ann_index import ann_index_codes
-    from recipes_spark.queries.dataops import _LAST_ANN_STORES
+    from recipes_spark.session import LATEST
 
     rows = all_queries()["x3_index_delete_where"](spark, sf_dir).collect()
     assert rows and any(r["touched"] == 1 for r in rows)
@@ -175,7 +173,7 @@ def test_index_delete_where_purges_predicate(spark, sf_dir):
         "deleted_absent", "digest_changed_iff_touched",
     ):
         assert all(bool(r[flag]) for r in rows), (flag, rows)
-    store = _LAST_ANN_STORES["delete_where"]
+    store = LATEST["ann_index_delete_where"]
     v2 = ann_index_codes(spark, store, 2, extra=("label",))
     assert v2.filter(F.col("label").isin(2, 5)).count() == 0
     assert v2.filter(F.col("label") == 0).count() > 0
@@ -193,13 +191,13 @@ def test_index_delete_mor_serve_equivalence(spark, sf_dir):
         ann_index_load_books,
         ann_index_tombstones,
     )
-    from recipes_spark.queries.dataops import _LAST_ANN_STORES
+    from recipes_spark.session import LATEST
 
     rows = all_queries()["x3_index_delete_mor"](spark, sf_dir).collect()
     assert rows and any(r["touched"] == 1 for r in rows)
     for flag in ("sidecar_match", "mor_equals_fold", "fold_files_match"):
         assert all(bool(r[flag]) for r in rows), (flag, rows)
-    store = _LAST_ANN_STORES["delete_mor"]
+    store = LATEST["ann_index_delete_mor"]
     emb = load(spark, sf_dir, "embeddings")
     coarse_l, books_l = ann_index_load_books(spark, store)
     queries = emb.filter(F.col("vec_id") < 5).select(
@@ -237,7 +235,7 @@ def test_index_upsert_currency_and_flow(spark, sf_dir):
         train_pq_codebooks_int,
     )
     from recipes_spark.plans.ann_index import ann_index_codes
-    from recipes_spark.queries.dataops import _LAST_ANN_STORES
+    from recipes_spark.session import LATEST
 
     rows = all_queries()["x3_index_upsert"](spark, sf_dir).collect()
     assert rows and any(r["touched"] == 1 for r in rows)
@@ -253,7 +251,7 @@ def test_index_upsert_currency_and_flow(spark, sf_dir):
         assert r["n_v2"] == r["n_v1"] + r["n_in"] - r["n_out"]
     # currency: the v2 rows for changed ids carry the REVERSED
     # vectors' codes, and v1 still holds the originals
-    store = _LAST_ANN_STORES["upsert"]
+    store = LATEST["ann_index_upsert"]
     cents = train_coarse_centroids_int(emb, k=16, iters=3, hash_tag="pq:0")
     books = train_pq_codebooks_int(emb, m=4, k=256)
     changed = emb.filter(F.col("vec_id") % 7 == 3)
@@ -363,7 +361,7 @@ def test_index_retrain_cutover(spark, sf_dir):
     comparison (new wins ties), exactly one generation is promoted,
     both served from their committed stores, and the losing family is
     physically reclaimed with a fenced read."""
-    from recipes_spark.queries.dataops import _LAST_ANN_STORES
+    from recipes_spark.session import LATEST
 
     rows = {
         r["gen"]: r
@@ -376,7 +374,7 @@ def test_index_retrain_cutover(spark, sf_dir):
     assert bool(g1["served_from_store"]) and bool(g2["served_from_store"])
     assert bool(g1["loser_fenced"]) and bool(g2["loser_fenced"])
     assert g1["n_train"] < g2["n_train"]
-    root = _LAST_ANN_STORES["retrain"]
+    root = LATEST["ann_index_retrain"]
     loser = "gen1" if g2["promoted"] else "gen2"
     winner = "gen2" if g2["promoted"] else "gen1"
     assert not os.path.isdir(os.path.join(root, loser))

@@ -5,15 +5,14 @@ would give, kept storage-agnostic."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 
 from recipes_spark.plans.merge import merge_into
+from recipes_spark.session import scratch_dir
 
 
 def _store(spark):
-    path = tempfile.mkdtemp(prefix="recipes_merge_") + "/store"
+    path = scratch_dir("merge") + "/store"
     base = spark.createDataFrame(
         [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0), (4, "b", 40.0)],
         "id long, part string, v double",
@@ -72,7 +71,7 @@ def test_merge_update_moves_sole_occupant(spark):
     must delete that partition's old file, although no new row lands
     there — else the old file resurrects the row (key duplicated across
     partitions)."""
-    path = tempfile.mkdtemp(prefix="recipes_merge_") + "/store"
+    path = scratch_dir("merge") + "/store"
     spark.createDataFrame(
         [(1, "a", 10.0), (3, "b", 30.0)], "id long, part string, v double"
     ).write.mode("overwrite").partitionBy("part").parquet(path)
@@ -131,7 +130,7 @@ def test_merge_matched_ignore_keeps_target(spark):
 
 
 def test_merge_first_write(spark):
-    path = tempfile.mkdtemp(prefix="recipes_merge_fw_") + "/store"
+    path = scratch_dir("merge_fw") + "/store"
     src = spark.createDataFrame([(1, "a", 1.0)], "id long, part string, v double")
     counts = merge_into(
         spark, path, src, on="id", partition_col="part",

@@ -82,13 +82,12 @@ def test_partition_pruning_on_partitioned_store(spark, sf_dir):
     """The catalog-store layout (partitionBy date/collection) must prune
     at plan time: an equality filter on the partition column appears in
     PartitionFilters and the scan reads one partition, not all."""
-    import tempfile
-
     import pyspark.sql.functions as F
 
     from recipes_spark.io import load
+    from recipes_spark.session import scratch_dir
 
-    path = tempfile.mkdtemp(prefix="recipes_prune_") + "/events_by_day"
+    path = scratch_dir("prune") + "/events_by_day"
     ev = load(spark, sf_dir, "events").withColumn(
         "day", F.to_date("ts")
     )

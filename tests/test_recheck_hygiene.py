@@ -187,18 +187,24 @@ def test_every_engine_function_is_named():
     assert not unnamed, f"engine functions nothing names: {sorted(unnamed)}"
 
 
+def _code_tokens(path):
+    """NAME and OP tokens of a Python file: code only, so docstrings and
+    comments do not count."""
+    import io
+    import tokenize
+
+    tokens = tokenize.generate_tokens(io.StringIO(Path(path).read_text()).readline)
+    return [t.string for t in tokens if t.type in (tokenize.NAME, tokenize.OP)]
+
+
 def test_stream_lifecycle_lives_in_streaming_core():
     """One micro-batch driver: under recipes_spark/, only
     streaming/core.py starts an availableNow query or awaits one, and
     it builds the one file-source stream reader. Code tokens only, so
     docstrings and comments may still name them."""
-    import io
-    import tokenize
-
     found = []
     for path in _files_under("recipes_spark", ".py"):
-        tokens = tokenize.generate_tokens(io.StringIO(Path(path).read_text()).readline)
-        code = [t.string for t in tokens if t.type in (tokenize.NAME, tokenize.OP)]
+        code = _code_tokens(path)
         rel = os.path.relpath(path, REPO)
         for i, tok in enumerate(code):
             if tok in ("awaitTermination", "readStream") or (
@@ -209,3 +215,16 @@ def test_stream_lifecycle_lives_in_streaming_core():
     assert sorted(found) == [
         (core, "availableNow"), (core, "awaitTermination"), (core, "readStream"),
     ], found
+
+
+def test_scratch_dirs_come_from_session():
+    """One owner for scratch space: under recipes_spark/, only
+    session.py makes a temp directory (scratch_dir); every other module
+    asks it for one, so each directory is removed with its process's
+    scratch root. Code tokens only."""
+    found = sorted(
+        os.path.relpath(path, REPO)
+        for path in _files_under("recipes_spark", ".py")
+        if "mkdtemp" in _code_tokens(path)
+    )
+    assert found == [os.path.join("recipes_spark", "session.py")], found

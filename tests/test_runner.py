@@ -5,11 +5,11 @@ barrier, memoized discovery, item assembly, idempotent upsert."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import yaml
 
 from recipes_spark.runner import run_pipeline
+from recipes_spark.session import scratch_dir
 from recipes_spark.sources.granules import stage_granules
 
 
@@ -35,7 +35,7 @@ def _files(root: str) -> dict[str, tuple[int, int]]:
 
 
 def test_runner_end_to_end_and_idempotent(spark):
-    tmp = tempfile.mkdtemp(prefix="recipes_runner_")
+    tmp = scratch_dir("runner")
     cfg = _config(tmp)
     first = run_pipeline(spark, cfg)
     assert first["collections"] > 0
@@ -52,7 +52,7 @@ def test_runner_end_to_end_and_idempotent(spark):
 
 
 def test_runner_rewrites_collections_only_when_yaml_changes(spark):
-    tmp = tempfile.mkdtemp(prefix="recipes_runner_cols_")
+    tmp = scratch_dir("runner_cols")
     cfg = _config(tmp)
     with open(cfg["collections"]) as fh:
         docs = [d for d in yaml.safe_load_all(fh) if d]
@@ -76,7 +76,7 @@ def test_runner_rewrites_collections_only_when_yaml_changes(spark):
 
 
 def test_runner_from_yaml_file(spark):
-    tmp = tempfile.mkdtemp(prefix="recipes_runner_yaml_")
+    tmp = scratch_dir("runner_yaml")
     path = f"{tmp}/config.yaml"
     with open(path, "w") as fh:
         yaml.safe_dump(_config(tmp), fh)
@@ -93,7 +93,7 @@ def test_runner_xstac_and_database_sink(spark):
 
     import pyspark.sql.functions as F
 
-    tmp = tempfile.mkdtemp(prefix="recipes_runner_db_")
+    tmp = scratch_dir("runner_db")
     cfg = _config(tmp)
     cfg["xstac_kwargs"] = {
         "reference_system": "epsg:4326",
@@ -140,7 +140,7 @@ def test_runner_uncached_counts_the_files_the_decode_read(spark, monkeypatch):
         raise AssertionError("the uncached runner must not list twice")
 
     monkeypatch.setattr(listing, "glob_listing", no_listing)
-    tmp = tempfile.mkdtemp(prefix="recipes_runner_uncached_")
+    tmp = scratch_dir("runner_uncached")
     landing = f"{tmp}/landing"
     shutil.copytree(stage_granules(6), landing)
     with open(f"{landing}/corrupt.nc", "wb") as fh:
@@ -161,7 +161,7 @@ def test_runner_cached_decodes_the_manifest_files(spark):
     describe the same listing."""
     import shutil
 
-    tmp = tempfile.mkdtemp(prefix="recipes_runner_cached_")
+    tmp = scratch_dir("runner_cached")
     landing = f"{tmp}/landing"
     staged = stage_granules(7)
     os.makedirs(landing)
@@ -183,7 +183,7 @@ def test_runner_recovers_from_a_fully_quarantined_first_batch(spark):
     batch upserts into that store instead of failing to read it."""
     import shutil
 
-    tmp = tempfile.mkdtemp(prefix="recipes_runner_quarantined_")
+    tmp = scratch_dir("runner_quarantined")
     cfg = _config(tmp)
     del cfg["cache_root"]
     bad = f"{tmp}/bad"

@@ -6,8 +6,8 @@ from __future__ import annotations
 import functools
 import glob
 import os
-import tempfile
 
+from recipes_spark.session import scratch_dir
 from recipes_spark.sources.granules import (
     file_metadata,
     granule_meta,
@@ -83,7 +83,7 @@ def test_glob_listing_fsspec_parity(spark):
 
 
 def test_cached_glob_materializes_and_hits(spark, sf_dir):
-    cache_root = tempfile.mkdtemp(prefix="recipes_test_cache_")
+    cache_root = scratch_dir("test_cache")
     pattern = f"{sf_dir}/*.parquet"
     first = cached_glob(spark, pattern, cache_root=cache_root)
     n = first.count()
@@ -209,7 +209,7 @@ def test_decode_of_a_large_batch_starts_no_listing_job(spark):
 
 
 def test_undecodable_files_dropped(spark):
-    root = tempfile.mkdtemp(prefix="recipes_test_badfiles_")
+    root = scratch_dir("test_badfiles")
     with open(os.path.join(root, "junk.nc"), "wb") as fh:
         fh.write(b"this is not a granule")
     meta = file_metadata(spark, os.path.join(root, "*.nc"))
@@ -235,7 +235,7 @@ def test_timestamp_flavors_load_identically(spark):
         datetime.datetime(2024, 1, 1, 12, 0, 0, 250_000),
         datetime.datetime(2024, 6, 30, 23, 59, 59, 999_999),
     ]
-    root = tempfile.mkdtemp(prefix="recipes_test_tsflavors_")
+    root = scratch_dir("test_tsflavors")
     flavors = {
         "ntz": pa.timestamp("us"),          # isAdjustedToUTC=false
         "ltz": pa.timestamp("us", "UTC"),   # isAdjustedToUTC=true
@@ -286,7 +286,7 @@ def test_netcdf_classic_metadata_decode(spark):
     """S11 real-codec branch: a hand-written CDF-1 file with the
     reference's OSISAF-style global attributes decodes through the pure
     stdlib NetCDF classic parser (no xarray in this container)."""
-    root = tempfile.mkdtemp(prefix="recipes_test_cdf1_")
+    root = scratch_dir("test_cdf1")
     with open(os.path.join(root, "osisaf_20240101.nc"), "wb") as fh:
         fh.write(
             _cdf1_bytes(
@@ -328,7 +328,7 @@ def test_url_metadata_over_local_http(spark):
     # Copy the staged granules into a fresh dir: stage_granules memoizes
     # per (key, n), so adding a file to its dir would leak into any other
     # test that staged the same count.
-    root = tempfile.mkdtemp(prefix="recipes_test_http_")
+    root = scratch_dir("test_http")
     for name in os.listdir(stage_granules(6)):
         shutil.copy(os.path.join(stage_granules(6), name), root)
     with open(os.path.join(root, "osisaf_cdf1.nc"), "wb") as fh:
@@ -405,7 +405,7 @@ def test_netcdf_xarray_roundtrip_decode(spark):
     xr = pytest.importorskip(
         "xarray", reason="xarray/h5netcdf not installed in this container"
     )
-    root = tempfile.mkdtemp(prefix="recipes_test_nc4_")
+    root = scratch_dir("test_nc4")
     path = os.path.join(root, "granule.nc")
     ds = xr.Dataset(
         attrs={

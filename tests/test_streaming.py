@@ -4,13 +4,12 @@ ingest idempotency."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pyspark.sql.functions as F
 
 from recipes_spark.io import load
 from recipes_spark.streaming.core import run_to_memory, stream_events
 from recipes_spark.plans.catalog import upsert_items
+from recipes_spark.session import LATEST, scratch_dir
 from recipes_spark.streaming.ingest import ingest_events
 
 SF = "/root/testdata/sf0.001"
@@ -70,7 +69,7 @@ def test_t2_complete_mode_batching_invariant(spark):
 def test_t1_ingest_idempotent(spark):
     """Running the full ingest twice into the same catalog leaves counts
     unchanged (ToPgStac re-run semantics, SURVEY §4.1)."""
-    catalog = tempfile.mkdtemp(prefix="recipes_test_catalog_") + "/store"
+    catalog = scratch_dir("test_catalog") + "/store"
     ingest_events(spark, SF, catalog)
     first = spark.read.parquet(catalog).count()
     ingest_events(spark, SF, catalog)
@@ -91,7 +90,7 @@ def test_ingest_into_unreadable_store_raises_and_keeps_every_row(spark):
 
     import pytest
 
-    catalog = tempfile.mkdtemp(prefix="recipes_test_stray_") + "/store"
+    catalog = scratch_dir("test_stray") + "/store"
     ingest_events(spark, SF, catalog)
     rows = sorted(spark.read.parquet(catalog).collect(), key=lambda r: r.event_id)
     files = {
@@ -114,7 +113,7 @@ def test_ingest_into_unreadable_store_raises_and_keeps_every_row(spark):
 def test_upsert_new_rows_win(spark):
     """Upserting a changed row with an existing key replaces the old
     row instead of duplicating it."""
-    path = tempfile.mkdtemp(prefix="recipes_test_upsert_") + "/store"
+    path = scratch_dir("test_upsert") + "/store"
     ev = load(spark, SF, "events").limit(100)
     upsert_items(spark, ev, path, key="event_id", partition_col="event_type")
     changed = ev.limit(10).withColumn("value", F.lit(-1.0))
@@ -137,11 +136,10 @@ def test_crafted_late_row_dropped_after_eviction(spark):
       count=1. Files are forced into order via mtime +
       maxFilesPerTrigger=1."""
     import os
-    import tempfile
 
     from recipes_spark.streaming.core import run_to_memory
 
-    root = tempfile.mkdtemp(prefix="recipes_late_")
+    root = scratch_dir("late")
     f1 = [
         (1, "2024-01-01 10:00:00"), (2, "2024-01-01 10:10:00"),
         (3, "2024-01-01 10:20:00"), (4, "2024-01-01 10:30:00"),
@@ -575,11 +573,9 @@ def test_st28_matches_batch_composition_and_telescopes(spark, sf_dir):
     )
     assert got == want and len(got) > 0
 
-    # The module hook, not an mtime-glob over the global tempdir
+    # The scratch hook, not an mtime-glob over the global tempdir
     # (ADVICE r11: the glob is racy under parallel runs / leftovers).
-    from recipes_spark.streaming import ingest
-
-    state_dir = ingest._ST28_LAST_STATE_DIR
+    state_dir = LATEST.get("st28_state")
     assert state_dir is not None
     src = {
         r["source"]: r["n_docs"]
@@ -746,6 +742,7 @@ def test_run_foreach_batch_in_order_cleans_up_and_propagates(spark, monkeypatch)
 
     import pytest
 
+    from recipes_spark.streaming import core
     from recipes_spark.streaming.core import (
         read_staged,
         run_foreach_batch,
@@ -753,15 +750,14 @@ def test_run_foreach_batch_in_order_cleans_up_and_propagates(spark, monkeypatch)
     )
 
     chunks = [spark.range(10 * i, 10 * i + n) for i, n in enumerate((3, 1, 2))]
-    staged = stage_ordered(chunks, prefix="recipes_test_driver_")
+    staged = stage_ordered(chunks, name="test_driver")
     made = []
-    mkdtemp = tempfile.mkdtemp
 
-    def recording_mkdtemp(*args, **kwargs):
-        made.append(mkdtemp(*args, **kwargs))
+    def recording_scratch_dir(name):
+        made.append(scratch_dir(name))
         return made[-1]
 
-    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    monkeypatch.setattr(core, "scratch_dir", recording_scratch_dir)
     seen = []
 
     def record(bdf, bid):

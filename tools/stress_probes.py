@@ -457,11 +457,11 @@ def probe_zorder_pruning(spark: SparkSession, n_files: int = 32) -> dict:
     must return the same row count."""
     import glob as _glob
     import shutil
-    import tempfile
 
     import pyarrow.parquet as _pq
 
     from recipes_spark.io import load
+    from recipes_spark.session import scratch_dir
 
     ev = load(spark, SF_DIR, "events")
     vq = F.least(F.lit(255), F.floor(F.col("value") / 2)).cast("long")
@@ -479,7 +479,7 @@ def probe_zorder_pruning(spark: SparkSession, n_files: int = 32) -> dict:
         zval = term if zval is None else zval + term
     q = q.withColumn("zval", zval)
 
-    root = tempfile.mkdtemp(prefix="recipes_zorder_probe_")
+    root = scratch_dir("zorder_probe")
     paths = {"random": f"{root}/random", "zorder": f"{root}/zorder"}
     q.repartition(n_files).drop("zval").write.parquet(paths["random"])
     q.repartitionByRange(n_files, "zval").drop("zval").write.parquet(
@@ -782,7 +782,8 @@ def probe_partition_pruning(spark: SparkSession) -> dict:
     controlled fragmentation."""
     import glob
     import shutil
-    import tempfile
+
+    from recipes_spark.session import scratch_dir
 
     n = 1_500_000
     rows = spark.range(n).select(
@@ -790,13 +791,13 @@ def probe_partition_pruning(spark: SparkSession) -> dict:
         (F.col("id") % 30).alias("day"),
         ((F.col("id") * 48271) % 10_000).alias("v"),
     )
-    flat = tempfile.mkdtemp(prefix="recipes_prune_flat_")
-    part = tempfile.mkdtemp(prefix="recipes_prune_part_")
+    flat = scratch_dir("prune_flat")
+    part = scratch_dir("prune_part")
     rows.repartition(32).write.mode("overwrite").parquet(flat)
     rows.repartition(32).write.mode("overwrite").partitionBy("day").parquet(
         part
     )
-    tidy = tempfile.mkdtemp(prefix="recipes_prune_tidy_")
+    tidy = scratch_dir("prune_tidy")
     rows.repartition("day").write.mode("overwrite").partitionBy("day").parquet(
         tidy
     )
@@ -1098,9 +1099,8 @@ def _stage_docs_sfdir(
     duplication vanishes while each replica keeps the 1x corpus's OWN
     duplicate structure, so per-stage WORK scales 10× without the
     dedup stages degenerately emptying the corpus."""
-    import tempfile
-
     from recipes_spark.io import load
+    from recipes_spark.session import scratch_dir
 
     d = load(spark, SF_DIR, "documents")
     reps = spark.range(reps_n).select(F.col("id").cast("long").alias("rep"))
@@ -1123,7 +1123,7 @@ def _stage_docs_sfdir(
         "source",
         "n_chars",
     )
-    out = tempfile.mkdtemp(prefix="recipes_docs10x_")
+    out = scratch_dir("docs10x")
     big.repartition(32).write.mode("overwrite").parquet(
         out + "/documents.parquet"
     )
@@ -1446,9 +1446,8 @@ def probe_stream_pipeline_batches(spark: SparkSession) -> dict:
     re-ran history), late batches would grow ~linearly with
     accumulated state; vocabulary-scaled state keeps the tail batch
     near the head batch."""
-    import tempfile
-
     from recipes_spark.io import load
+    from recipes_spark.session import scratch_dir
     from recipes_spark.streaming.ingest import (
         corpus_pipeline_advance_factory,
         st28_final_report,
@@ -1460,7 +1459,7 @@ def probe_stream_pipeline_batches(spark: SparkSession) -> dict:
         d = load(spark, sfd, "documents").select(
             "doc_id", "source", "text", "n_chars"
         )
-        state_dir = tempfile.mkdtemp(prefix="recipes_probe_st28_")
+        state_dir = scratch_dir("probe_st28")
         fn = corpus_pipeline_advance_factory(spark, state_dir)
         walls = []
         for bid in range(8):
@@ -1615,15 +1614,15 @@ def probe_dp_grid_10x(spark: SparkSession) -> dict:
     pseudo-random grid coords) under the same user, so every
     trajectory genuinely densifies 10×."""
     import os
-    import tempfile
 
     from recipes_spark.io import load
     from recipes_spark.registry import all_queries
+    from recipes_spark.session import scratch_dir
 
     q = all_queries()["g1_trajectory_simplify"]
     out = {"probe": "dp_grid_10x"}
     ev = load(spark, SF_DIR, "events")
-    big_dir = tempfile.mkdtemp(prefix="recipes_dp10x_")
+    big_dir = scratch_dir("dp10x")
     reps = spark.range(10).select(F.col("id").alias("rep"))
     big = (
         ev.crossJoin(reps)
@@ -1665,14 +1664,14 @@ def probe_dp_chunked_dense(spark: SparkSession, reps_n: int = 100) -> dict:
     length. Same densification protocol as dp_grid_10x (fresh
     pseudo-random grid coords per replica under the same user)."""
     import os
-    import tempfile
 
     from recipes_spark.io import load
     from recipes_spark.registry import all_queries
+    from recipes_spark.session import scratch_dir
 
     q = all_queries()
     ev = load(spark, SF_DIR, "events")
-    big_dir = tempfile.mkdtemp(prefix="recipes_dpchunk_")
+    big_dir = scratch_dir("dpchunk")
     reps = spark.range(reps_n).select(F.col("id").alias("rep"))
     (
         ev.crossJoin(reps)

@@ -6219,8 +6219,6 @@ def x6_balanced_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplies only the minority classes and shuffles nothing — at
     training time the k column rides into the dataloader instead of
     materializing copies."""
-    from recipes_spark.functions.portable_hash import sha_slice_bucket
-
     d = load(spark, sf_dir, "documents").select("doc_id", "lang")
     # Checkpointed (langs-sized): c feeds BOTH the broadcast join and
     # the target max — un-materialized, the corpus count subtree

@@ -4604,15 +4604,12 @@ def x3_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's UPSERT store semantics (re-runs REPLACE rows —
     avhrr…/recipe.py:85,137) — removal is the half of mutability the
     upsert sink implies but never ships."""
-    import os as _os
-
     from recipes_spark.operators.similarity import (
         pq_encode_int,
         train_coarse_centroids_int,
         train_pq_codebooks_int,
     )
     from recipes_spark.plans.ann_index import (
-        ann_index_codes,
         ann_index_commit,
         ann_index_delete,
     )

@@ -11,7 +11,7 @@ file:///synthetic/avhrr.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from recipes_spark.io import load
 from recipes_spark.registry import query

@@ -15,7 +15,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 #: URL template from avhrr…/recipe.py:32-42 —
 #: {root}/{year}/{doy:03d}/{yyyyMMddHHmmss}-{const}_{yyyyMMdd}_{HHmmss}-v02.0-fv01.0.nc

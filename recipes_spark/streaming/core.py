@@ -14,6 +14,18 @@ availableNow lifecycle (start, await, stop): `run_to_memory` sinks into
 a memory table, `run_foreach_batch` hands each micro-batch to a body
 (the st* sketch-state and upsert queries in ingest.py).
 
+State between micro-batches: a body that carries state or emits
+output keeps it as numbered generations, `<root>/<family><bid>`
+(`s_3`, `l_3`, `batch=3`). `save_gen` overwrites the body's own
+generation; `read_prior` and `read_all_prior` read only generations
+before it. foreachBatch is at-least-once, so a redelivered batch N
+reads exactly the state its first run read and overwrites exactly what
+that run wrote: its state and output come out byte-identical, even
+after later batches have run. At batch 0 the reads return an empty
+frame of the family's schema; at batch N>0 a missing generation
+raises, so lost state is never taken for empty. Once the stream has
+drained, `read_latest` reads the final generation.
+
 Scale note: in production the file source watches a manifest/landing
 directory (the reference's hourly-updated HTTP listings, SURVEY §2.10
 T1); staging here stands in for that landing zone. Memory sinks are
@@ -232,3 +244,57 @@ def run_foreach_batch(sdf: DataFrame, body) -> None:
         )
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _gen_path(root: str, family: str, bid: int) -> str:
+    return os.path.join(root, f"{family}{bid}")
+
+
+def save_gen(df: DataFrame, root: str, family: str, bid: int) -> None:
+    """Overwrite generation `bid` of `family` under `root`."""
+    df.write.mode("overwrite").parquet(_gen_path(root, family, bid))
+
+
+def read_prior(
+    spark: SparkSession, root: str, family: str, bid: int, schema
+) -> DataFrame:
+    """Generation `bid - 1` of `family`, or an empty frame of `schema`
+    at batch 0."""
+    if bid == 0:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(_gen_path(root, family, bid - 1))
+
+
+def read_all_prior(
+    spark: SparkSession, root: str, family: str, bid: int, schema
+) -> DataFrame:
+    """The union of generations `0..bid - 1` of `family`, or an empty
+    frame of `schema` at batch 0."""
+    if bid == 0:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(
+        *(_gen_path(root, family, j) for j in range(bid))
+    )
+
+
+def latest_gen(root: str, family: str) -> int:
+    """The highest generation of `family` present under `root`; raises
+    FileNotFoundError when there is none."""
+    names = os.listdir(root) if os.path.isdir(root) else []
+    gens = [
+        int(n[len(family):])
+        for n in names
+        if n.startswith(family) and n[len(family):].isdigit()
+    ]
+    if not gens:
+        raise FileNotFoundError(f"no {family}<bid> generation under {root}")
+    return max(gens)
+
+
+def read_latest(
+    spark: SparkSession, root: str, family: str, schema
+) -> DataFrame:
+    """The highest generation of `family` present under `root`."""
+    return spark.read.schema(schema).parquet(
+        _gen_path(root, family, latest_gen(root, family))
+    )

@@ -13,7 +13,10 @@ landing zone (st* queries: one file per micro-batch) and driven by
 core.run_foreach_batch. Only the per-batch bodies differ; from st13 on
 they are module-level factories (`*_probe_then_absorb`,
 `*_merge_then_*`, `*_advance_factory`) so each one's retry
-idempotence is testable batch by batch.
+idempotence is testable batch by batch. Every state and output
+generation a body writes or reads goes through core's state store
+(`save_gen`, `read_prior`, `read_all_prior`, `read_latest`), whose
+module docstring states the retry contract.
 
 Scale notes: the per-batch rewrite (plans/catalog.upsert_items) reads
 and replaces only the store files holding a batch key, appending first
@@ -54,8 +57,13 @@ from recipes_spark.plans.catalog import upsert_items
 from recipes_spark.registry import query
 from recipes_spark.session import scratch_dir
 from recipes_spark.streaming.core import (
+    latest_gen,
+    read_all_prior,
+    read_latest,
+    read_prior,
     read_staged,
     run_foreach_batch,
+    save_gen,
     stage_events_ordered,
     stage_ordered,
     stream_events,
@@ -273,12 +281,13 @@ def st11_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     out_dir = scratch_dir("st11_out") + "/kept"
 
     def dedup_against_corpus(bdf: DataFrame, bid: int) -> None:
-        kept = bdf.join(corpus_idx, "h", "left_anti").select("doc_id")
-        # Per-batch OVERWRITE subdir: foreachBatch is at-least-once and
-        # a retried batch re-emits the same rows (the dedup state it
-        # reads is the checkpointed pre-batch version) — an append sink
-        # would duplicate them.
-        kept.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={bid}"))
+        # A retried batch re-emits the same rows (the dedup state it
+        # reads is the checkpointed pre-batch version): overwrite its
+        # generation, never append.
+        save_gen(
+            bdf.join(corpus_idx, "h", "left_anti").select("doc_id"),
+            out_dir, "batch=", bid,
+        )
 
     stream = (
         read_staged(spark, staged, batch.schema, max_files_per_trigger=1)
@@ -290,6 +299,10 @@ def st11_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     run_foreach_batch(stream, dedup_against_corpus)
     return spark.read.parquet(out_dir).select("doc_id")
+
+
+#: st12's band-hash index rows, as band_hashes writes them.
+_ST12_BANDS_SCHEMA = "doc_id long, lang string, source string, bhash long"
 
 
 @query(
@@ -361,7 +374,6 @@ def st12_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     index_dir = scratch_dir("st12_index") + "/bands"
     pairs_dir = scratch_dir("st12_pairs") + "/pairs"
-    band_cols = ["doc_id", "lang", "source", "bhash"]
 
     def neardup_batch(bdf: DataFrame, bid: int) -> None:
         ids = bdf.select("doc_id", "lang", "source")
@@ -375,14 +387,11 @@ def st12_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             set_col="s",
             carry_cols=("lang", "source"),
         )
-        # Existence check, NOT a broad try/except around the read: a
-        # corrupt index at batch N>0 must raise (silently treating it
-        # as "first batch" would drop every cross-batch pair).
-        if os.path.isdir(index_dir):
-            older = spark.read.parquet(index_dir).select(*band_cols)
-            probe = older.unionByName(bands)
-        else:
-            probe = bands
+        # A missing index generation at batch N>0 raises: taking it for
+        # empty would drop every cross-batch pair.
+        probe = read_all_prior(
+            spark, index_dir, "batch=", bid, _ST12_BANDS_SCHEMA
+        ).unionByName(bands)
         cand = (
             bands.withColumnRenamed("doc_id", "id_b")
             .join(
@@ -393,16 +402,11 @@ def st12_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("id_a", "id_b")
             .dropDuplicates(["id_a", "id_b"])
         )
-        verified = jaccard_verify(cand, d, id_col="doc_id", set_col="s")
-        # Per-batch OVERWRITE subdirs (batch=<id> partition layout), not
-        # blind appends: foreachBatch is at-least-once, and a retried
-        # batch must replace its own prior output, never duplicate it.
-        verified.write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"batch={bid}")
+        save_gen(
+            jaccard_verify(cand, d, id_col="doc_id", set_col="s"),
+            pairs_dir, "batch=", bid,
         )
-        bands.write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={bid}")
-        )
+        save_gen(bands, index_dir, "batch=", bid)
 
     schema = "doc_id long, lang string, source string"
     run_foreach_batch(
@@ -416,28 +420,27 @@ def bloom_probe_then_absorb(
     out_dir: str, state_dir: str, *, m_bits: int, k: int
 ):
     """st13's per-micro-batch body as a module-level factory so the
-    batch-transactionality claim is TESTABLE: each invocation rebuilds
-    its prior state as the OR of all PRIOR batches' persisted bitmaps
-    and overwrites its own outputs, so re-invoking batch N (an
-    at-least-once retry) reloads exactly the pre-N state and re-emits
-    identical candidates — pinned by
-    tests/test_streaming.py::test_sketch_state_batches_are_retry_idempotent."""
+    retry contract (streaming/core.py) is testable: prior state is the
+    OR of all PRIOR batches' persisted bitmaps — pinned by
+    tests/test_streaming.py::test_sketch_state_batches_are_retry_idempotent.
+    The bitmaps are raw bytes, not DataFrames, so they keep their own
+    `bloom_<bid>.bin` files."""
     import numpy as np
 
     from recipes_spark.operators.dedup import bloom_build, bloom_members
 
+    def bitmap(j: int) -> str:
+        return os.path.join(state_dir, f"bloom_{j}.bin")
+
     def probe_then_absorb(bdf: DataFrame, bid: int) -> None:
         prior = np.zeros(m_bits // 8, dtype=np.uint8)
         for j in range(bid):
-            with open(os.path.join(state_dir, f"bloom_{j}.bin"), "rb") as fh:
+            with open(bitmap(j), "rb") as fh:
                 prior |= np.frombuffer(fh.read(), dtype=np.uint8)
         cand = bloom_members(bdf, "text", prior.tobytes(), m_bits=m_bits, k=k)
-        cand.select("doc_id").write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={bid}")
-        )
-        own = bloom_build(bdf, "text", m_bits=m_bits, k=k)
-        with open(os.path.join(state_dir, f"bloom_{bid}.bin"), "wb") as fh:
-            fh.write(own)
+        save_gen(cand.select("doc_id"), out_dir, "batch=", bid)
+        with open(bitmap(bid), "wb") as fh:
+            fh.write(bloom_build(bdf, "text", m_bits=m_bits, k=k))
 
     return probe_then_absorb
 
@@ -474,11 +477,6 @@ def st13_stream_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the index replaced by m/8 bytes of mergeable bloom state, the shape
     an ingest keeps when the corpus digest index no longer fits a join.
 
-    Batch-transactionality: the bitmap is persisted per batch id
-    (overwrite) and each batch rebuilds its input state as the OR of
-    all PRIOR batches' persisted bitmaps — so an at-least-once retry of
-    batch N reloads exactly the pre-N state and re-emits identical
-    output (same idempotence argument as st11's per-batch subdirs).
     The DuckDB oracle replays the exact bit positions (portable
     sha256-slice hash) with the same prior-batch visibility rule —
     bit-for-bit, not statistical (m deliberately undersized at 4096 so
@@ -503,6 +501,9 @@ def st13_stream_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: batch-0 empty frame and the query's schema'd read-back, so the two
 #: cannot drift.
 _ST14_OUT_SCHEMA = "bid int, term string, prior_est long"
+
+#: st14's per-batch counter table, as cms_counters writes it.
+_ST14_STATE_SCHEMA = "dep int, b long, c long"
 
 
 def st14_term_counts(bdf: DataFrame) -> DataFrame:
@@ -553,35 +554,25 @@ def cms_probe_then_absorb(
 ):
     """st14's per-micro-batch body as a module-level factory (see
     bloom_probe_then_absorb): prior state is the SUM-merge of all
-    PRIOR batches' persisted counter tables, own outputs are
-    overwrites — so a retry of batch N is byte-identical. Pinned by
+    PRIOR batches' persisted counter tables. Batch 0 has no prior and
+    emits nothing. Pinned by
     tests/test_streaming.py::test_sketch_state_batches_are_retry_idempotent."""
-    from recipes_spark.operators.sketches import (
-        cms_counters,
-        cms_estimate,
-        cms_merge,
-    )
+    from recipes_spark.operators.sketches import cms_counters, cms_merge
 
     def probe_then_absorb(bdf: DataFrame, bid: int) -> None:
         tc = st14_term_counts(bdf)
         if bid > 0:
             prior = cms_merge(
-                *[
-                    spark.read.parquet(os.path.join(state_dir, f"c_{j}"))
-                    for j in range(bid)
-                ]
+                read_all_prior(spark, state_dir, "c_", bid, _ST14_STATE_SCHEMA)
             )
             hot = st14_hot_terms(
                 tc, prior, bid, depth=depth, width=width, thresh=thresh
             )
         else:
             hot = spark.createDataFrame([], _ST14_OUT_SCHEMA)
-        hot.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={bid}")
-        )
-        cms_counters(tc, depth=depth, width=width).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(state_dir, f"c_{bid}"))
+        save_gen(hot, out_dir, "batch=", bid)
+        counters = cms_counters(tc, depth=depth, width=width)
+        save_gen(counters, state_dir, "c_", bid)
 
     return probe_then_absorb
 
@@ -636,11 +627,7 @@ def st14_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth*width counter table per batch, merged by SUM — never a
     term dictionary.
 
-    Batch-transactionality mirrors st13: counters are persisted per
-    batch id (overwrite), and each batch rebuilds its prior state as
-    the merge of all PRIOR batches' persisted tables, so an
-    at-least-once retry of batch N reloads exactly the pre-N state and
-    re-emits identical output. The sha256-slice buckets are portable,
+    The sha256-slice buckets are portable,
     so the DuckDB oracle replays every counter and estimate — including
     the left-join zero for a bucket no prior term mapped to —
     bit-for-bit with the same prior-batch visibility rule."""
@@ -669,6 +656,9 @@ def st14_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: st17's output schema — shared by the factory's batch-0 empty frame
 #: and the schema'd read-back (the st14 convention).
 _ST17_OUT_SCHEMA = "bid int, n_prior long, p50_cents long, p90_cents long"
+
+#: st17's per-batch histogram table, as st17_value_hist writes it.
+_ST17_STATE_SCHEMA = "bucket long, c long"
 
 #: One histogram bucket = $10 of event value, in cents.
 _ST17_WIDTH = 1000
@@ -737,29 +727,20 @@ def st17_prior_quantiles(prior: DataFrame, bid: int) -> DataFrame:
 def hist_probe_then_absorb(spark: SparkSession, out_dir: str, state_dir: str):
     """st17's per-micro-batch body (the st13/st14 sketch-state shape):
     prior state = SUM-merge of all PRIOR batches' persisted histogram
-    tables; own outputs are per-bid overwrites, so an at-least-once
-    retry of batch N reloads exactly the pre-N state and re-emits
-    identical output."""
+    tables. Batch 0 has no prior and emits nothing."""
 
     def probe_then_absorb(bdf: DataFrame, bid: int) -> None:
-        hist = st17_value_hist(bdf)
         if bid > 0:
             prior = (
-                spark.read.parquet(
-                    *[os.path.join(state_dir, f"h_{j}") for j in range(bid)]
-                )
+                read_all_prior(spark, state_dir, "h_", bid, _ST17_STATE_SCHEMA)
                 .groupBy("bucket")
                 .agg(F.sum("c").cast("long").alias("c"))
             )
             out = st17_prior_quantiles(prior, bid)
         else:
             out = spark.createDataFrame([], _ST17_OUT_SCHEMA)
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={bid}")
-        )
-        hist.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"h_{bid}")
-        )
+        save_gen(out, out_dir, "batch=", bid)
+        save_gen(st17_value_hist(bdf), state_dir, "h_", bid)
 
     return probe_then_absorb
 
@@ -814,8 +795,6 @@ def st17_stream_hist_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     with per-batch state that is O(#buckets) rows regardless of event
     volume — the value stream itself is never retained.
 
-    Batch-transactionality mirrors st13/st14: per-bid overwrites +
-    prior-only visibility make at-least-once retries byte-identical.
     Every operation is integer (floor cents, truncating div on
     positive values), so the DuckDB oracle replays each batch's merged
     prior histogram and interpolated quantile estimate bit-for-bit."""
@@ -841,6 +820,9 @@ def st17_stream_hist_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: st18's output schema (st14 convention: shared by batch-0 empty frame
 #: and schema'd read-back).
 _ST18_OUT_SCHEMA = "bid int, source string, doc_id long, priority long"
+
+#: st18's per-batch candidate table, as st18_batch_candidates writes it.
+_ST18_STATE_SCHEMA = "source string, doc_id long, priority long"
 
 
 def st18_batch_candidates(bdf: DataFrame) -> DataFrame:
@@ -871,19 +853,14 @@ def sample_merge_then_emit(spark: SparkSession, out_dir: str, state_dir: str):
     """st18's per-micro-batch body: merge own candidates with all PRIOR
     batches' persisted candidate tables, emit the RUNNING top-5 per
     source (batches 0..bid inclusive — a live sample, so batch 0 emits
-    too), persist own candidates. Overwrite-by-bid + prior-only state
-    reads make at-least-once retries byte-identical (st13/st14/st17's
-    transactionality contract)."""
+    too), persist own candidates."""
     from pyspark.sql import Window
 
     def merge_then_emit(bdf: DataFrame, bid: int) -> None:
         own = st18_batch_candidates(bdf)
-        pool = own
-        if bid > 0:
-            prior = spark.read.parquet(
-                *[os.path.join(state_dir, f"s_{j}") for j in range(bid)]
-            )
-            pool = pool.unionByName(prior)
+        pool = own.unionByName(
+            read_all_prior(spark, state_dir, "s_", bid, _ST18_STATE_SCHEMA)
+        )
         w = Window.partitionBy("source").orderBy("priority", "doc_id")
         out = (
             pool.withColumn("rn", F.row_number().over(w))
@@ -895,12 +872,8 @@ def sample_merge_then_emit(spark: SparkSession, out_dir: str, state_dir: str):
                 "priority",
             )
         )
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={bid}")
-        )
-        own.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"s_{bid}")
-        )
+        save_gen(out, out_dir, "batch=", bid)
+        save_gen(own, state_dir, "s_", bid)
 
     return merge_then_emit
 
@@ -942,10 +915,7 @@ def st18_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per prefix. State per batch = its own top-5 per source (mergeable
     top-k: truncation is lossless for the union's top-5), so state
     size is k x sources x batches rows — never the corpus.
-
-    Retry-idempotent by the family's contract: per-bid overwrites,
-    prior state = persisted tables of batches < bid, own candidates
-    recomputed from the redelivered batch."""
+    Retry-idempotent by the state contract of streaming/core.py."""
     d = load(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
@@ -970,6 +940,9 @@ def st18_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: st19's output schema (family convention).
 _ST19_OUT_SCHEMA = "bid int, node long, component long"
 
+#: st19's label table, as connected_components writes it.
+_ST19_STATE_SCHEMA = "node long, component long"
+
 
 def _chain_edges(nodes: DataFrame) -> DataFrame:
     """st19's deterministic near-dup graph over the PRESENT node set:
@@ -991,16 +964,13 @@ def cc_merge_then_emit(spark: SparkSession, out_dir: str, state_dir: str):
     those labels (new nodes default to themselves; confluence
     guarantees the result equals a full recompute), persist the new
     label table under this bid, emit the full running labeling.
-    Per-bid overwrites + prior-only reads = the family's
-    retry-idempotence contract."""
+    Batch 0 has no labels to seed with."""
     from recipes_spark.operators.dedup import connected_components
 
     def merge_then_emit(bdf: DataFrame, bid: int) -> None:
         new_nodes = bdf.select(F.col("doc_id").alias("node"))
         if bid > 0:
-            prior = spark.read.parquet(
-                os.path.join(state_dir, f"l_{bid - 1}")
-            )
+            prior = read_prior(spark, state_dir, "l_", bid, _ST19_STATE_SCHEMA)
             nodes = prior.select("node").unionByName(new_nodes).distinct()
             labels = connected_components(
                 nodes, _chain_edges(nodes), initial_labels=prior
@@ -1010,13 +980,12 @@ def cc_merge_then_emit(spark: SparkSession, out_dir: str, state_dir: str):
                 new_nodes, _chain_edges(new_nodes)
             )
         labels = labels.localCheckpoint(eager=True)
-        labels.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"l_{bid}")
-        )
-        labels.select(
-            F.lit(bid).cast("int").alias("bid"), "node", "component"
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={bid}")
+        save_gen(labels, state_dir, "l_", bid)
+        save_gen(
+            labels.select(
+                F.lit(bid).cast("int").alias("bid"), "node", "component"
+            ),
+            out_dir, "batch=", bid,
         )
 
     return merge_then_emit
@@ -1052,8 +1021,8 @@ def st19_stream_incremental_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle checks per prefix (id-prefix arrival truncates runs, so the
     component id is the run minimum at every prefix).
 
-    Retry-idempotent by the family contract: label tables persist per
-    bid (overwrite), each batch reads only bid-1's table. At 100 TB
+    Each batch reads only bid-1's label table (the retry contract of
+    streaming/core.py). At 100 TB
     the label table is a partitioned parquet keyed by node — the same
     store the catalog upsert maintains — and per-night work is the
     attachment structure, not the corpus."""
@@ -1103,20 +1072,14 @@ def pattern_advance_factory(spark: SparkSession, state_dir: str):
     prefixes (stage_events_ordered's CDC contract), the carried
     maxima are always <= every in-batch timestamp, so the seeded
     running max telescopes exactly like one global pass: the final
-    state IS the batch answer. Per-bid overwrites + prior-only reads =
-    the family's retry-idempotence contract."""
+    state IS the batch answer."""
 
     def pattern_advance(bdf: DataFrame, bid: int) -> None:
         e = bdf.select(
             "user_id", "event_type", "event_id",
             F.unix_micros("ts").alias("us"),
         )
-        if bid > 0:
-            st = spark.read.schema(_ST20_STATE_SCHEMA).parquet(
-                os.path.join(state_dir, f"s_{bid - 1}")
-            )
-        else:
-            st = spark.createDataFrame([], _ST20_STATE_SCHEMA)
+        st = read_prior(spark, state_dir, "s_", bid, _ST20_STATE_SCHEMA)
         j = e.join(st, "user_id", "left")
         w = (
             Window.partitionBy("user_id")
@@ -1156,9 +1119,7 @@ def pattern_advance_factory(spark: SparkSession, state_dir: str):
             .cast("long").alias("nc"),
         )
         carried = st.join(e.select("user_id").distinct(), "user_id", "left_anti")
-        advanced.unionByName(carried).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"s_{bid}")
-        )
+        save_gen(advanced.unionByName(carried), state_dir, "s_", bid)
 
     return pattern_advance
 
@@ -1177,10 +1138,8 @@ def st20_stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     same state in applyInPandasWithState / a keyed store; the
     telescoping argument (carried max <= all later timestamps) is
     what makes per-batch advancement exact rather than approximate.
-
-    Retry-idempotent by the family contract: per-bid state overwrite,
-    batch N reads only state N-1, so an at-least-once redelivery of
-    batch N recomputes byte-identical state."""
+    Batch N reads only state N-1 (streaming/core.py's retry
+    contract)."""
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
     schema = load(spark, sf_dir, "events").schema
     state_dir = scratch_dir("st20_state")
@@ -1191,8 +1150,7 @@ def st20_stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         pattern_advance,
     )
     return (
-        spark.read.schema(_ST20_STATE_SCHEMA)
-        .parquet(os.path.join(state_dir, "s_3"))
+        read_latest(spark, state_dir, "s_", _ST20_STATE_SCHEMA)
         .select(
             "user_id",
             F.col("np").alias("n_purchase"),
@@ -1232,15 +1190,12 @@ def moments_probe_then_absorb(spark: SparkSession, out_dir: str, state_dir: str)
     tables (z = (x - mean_prior) / sd_prior, the fixed-expression
     discipline over exact integers), emit the >= 3-sigma outliers,
     persist own moments. Batch 0 has no prior — it emits nothing and
-    only absorbs (the cold-start rule the oracle replays). Per-bid
-    overwrites + prior-only reads = retry idempotence."""
+    only absorbs (the cold-start rule the oracle replays)."""
 
     def probe_then_absorb(bdf: DataFrame, bid: int) -> None:
-        own = st21_batch_moments(bdf)
         if bid > 0:
             prior = (
-                spark.read.schema(_ST21_STATE_SCHEMA)
-                .parquet(*[os.path.join(state_dir, f"m_{j}") for j in range(bid)])
+                read_all_prior(spark, state_dir, "m_", bid, _ST21_STATE_SCHEMA)
                 .groupBy("event_type")
                 .agg(
                     F.sum("n").cast("long").alias("n"),
@@ -1264,8 +1219,8 @@ def moments_probe_then_absorb(spark: SparkSession, out_dir: str, state_dir: str)
             )
         else:
             out = spark.createDataFrame([], _ST21_OUT_SCHEMA)
-        out.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={bid}"))
-        own.write.mode("overwrite").parquet(os.path.join(state_dir, f"m_{bid}"))
+        save_gen(out, out_dir, "batch=", bid)
+        save_gen(st21_batch_moments(bdf), state_dir, "m_", bid)
 
     return probe_then_absorb
 
@@ -1363,8 +1318,7 @@ def cusum_advance_factory(spark: SparkSession, out_dir: str, state_dir: str):
     prefix_min) crosses the alarm threshold. Types absent from a
     batch stay frozen (their grid extends when they next appear, so
     trailing zeros past a type's final observation are never
-    fabricated — exactly the batch twin's per-type span). Per-bid
-    overwrites + prior-only reads = the family's retry contract."""
+    fabricated — exactly the batch twin's per-type span)."""
 
     def cusum_advance(bdf: DataFrame, bid: int) -> None:
         c = (
@@ -1375,12 +1329,7 @@ def cusum_advance_factory(spark: SparkSession, out_dir: str, state_dir: str):
             .groupBy("event_type", "b")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
-        if bid > 0:
-            st = spark.read.schema(_ST22_STATE_SCHEMA).parquet(
-                os.path.join(state_dir, f"s_{bid - 1}")
-            )
-        else:
-            st = spark.createDataFrame([], _ST22_STATE_SCHEMA)
+        st = read_prior(spark, state_dir, "s_", bid, _ST22_STATE_SCHEMA)
         spans = c.groupBy("event_type").agg(
             F.min("b").alias("bmn"), F.max("b").alias("bmx")
         )
@@ -1412,12 +1361,13 @@ def cusum_advance_factory(spark: SparkSession, out_dir: str, state_dir: str):
             F.least(F.min("cs").over(w), F.col("minp")).alias("minp"),
         ).localCheckpoint(eager=True)
         cusum = F.col("cs") - F.least(F.col("minp"), F.lit(0))
-        stepped.filter(cusum >= _ST22_H).select(
+        alarms = stepped.filter(cusum >= _ST22_H).select(
             "event_type",
             F.col("b").alias("bucket"),
             "x",
             cusum.cast("long").alias("cusum"),
-        ).write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={bid}"))
+        )
+        save_gen(alarms, out_dir, "batch=", bid)
         advanced = stepped.groupBy("event_type").agg(
             F.max("b").alias("last_b"),
             F.max_by("cs", "b").alias("cs"),
@@ -1426,9 +1376,7 @@ def cusum_advance_factory(spark: SparkSession, out_dir: str, state_dir: str):
         frozen = st.join(
             advanced.select("event_type"), "event_type", "left_anti"
         )
-        advanced.unionByName(frozen).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"s_{bid}")
-        )
+        save_gen(advanced.unionByName(frozen), state_dir, "s_", bid)
 
     return cusum_advance
 
@@ -1478,9 +1426,7 @@ def st22_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     type reappears (no fabricated trailing zeros).
 
     Batches split on hour-bucket boundaries (the checkpoint-at-window-
-    boundary contract every streaming aggregator keeps); retries are
-    idempotent by the family's per-bid overwrite + prior-only-read
-    rule."""
+    boundary contract every streaming aggregator keeps)."""
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "ts")
     bcol = F.expr("unix_micros(ts) div 3600000000")
     lo, hi = (
@@ -1529,8 +1475,7 @@ def attribution_advance_factory(spark: SparkSession, out_dir: str,
     every in-batch timestamp, so the union IS the full click history
     as far as any in-batch purchase can see), emit this batch's
     credited (campaign, n, cents) rows, and carry forward each user's
-    new latest click by (ts, event_id) struct-max. Per-bid overwrites
-    + prior-only reads = the family's retry contract."""
+    new latest click by (ts, event_id) struct-max."""
     from recipes_spark.operators.joins import asof_join
 
     def attribution_advance(bdf: DataFrame, bid: int) -> None:
@@ -1541,12 +1486,7 @@ def attribution_advance_factory(spark: SparkSession, out_dir: str,
             F.expr("cast(get_json_object(props, '$.k') as bigint) div 20")
             .alias("campaign"),
         )
-        if bid > 0:
-            st = spark.read.schema(_ST23_STATE_SCHEMA).parquet(
-                os.path.join(state_dir, f"s_{bid - 1}")
-            )
-        else:
-            st = spark.createDataFrame([], _ST23_STATE_SCHEMA)
+        st = read_prior(spark, state_dir, "s_", bid, _ST23_STATE_SCHEMA)
         clicks = e.filter(F.col("event_type") == "click").select(
             "user_id", F.col("us").alias("cus"),
             F.col("event_id").alias("ceid"), "campaign",
@@ -1568,7 +1508,7 @@ def attribution_advance_factory(spark: SparkSession, out_dir: str,
         fresh = F.col("ccamp").isNotNull() & (
             F.col("us") - F.col("cus") <= _ST23_WINDOW
         )
-        looked.select(
+        credits = looked.select(
             F.lit(bid).cast("int").alias("bid"),
             F.when(fresh, F.col("ccamp").cast("string"))
             .otherwise("~organic").alias("campaign"),
@@ -1576,9 +1516,8 @@ def attribution_advance_factory(spark: SparkSession, out_dir: str,
         ).groupBy("bid", "campaign").agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("cents").cast("long").alias("cents"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={bid}")
         )
+        save_gen(credits, out_dir, "batch=", bid)
         new_state = (
             clicks.groupBy("user_id")
             .agg(F.max(F.struct("cus", "ceid", "campaign")).alias("m"))
@@ -1589,9 +1528,7 @@ def attribution_advance_factory(spark: SparkSession, out_dir: str,
                 F.col("m.campaign").alias("campaign"),
             )
         )
-        new_state.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"s_{bid}")
-        )
+        save_gen(new_state, state_dir, "s_", bid)
 
     return attribution_advance
 
@@ -1611,7 +1548,7 @@ def st23_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     The carried click is <= every in-batch timestamp (in-order
     contract), so the one-row state is sufficient history — the same
     telescoping argument as st20's funnel maxima, applied to an
-    argmax instead. Retry-idempotent by the family contract."""
+    argmax instead."""
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
     schema = load(spark, sf_dir, "events").schema
     out_dir = scratch_dir("st23_out") + "/credits"
@@ -1673,19 +1610,16 @@ def hll_merge_then_persist(spark: SparkSession, state_dir: str):
     into the carried register table and persist per bid — the HLL
     union is register-wise max, associative and commutative, so the
     final state telescopes to the whole-corpus build no matter how the
-    stream was batched. Per-bid overwrites + prior-only reads = the
-    sketch-state family's retry contract."""
+    stream was batched."""
 
     def merge_then_persist(bdf: DataFrame, bid: int) -> None:
-        own = st24_batch_registers(bdf)
-        if bid > 0:
-            prior = spark.read.schema(_ST24_STATE_SCHEMA).parquet(
-                os.path.join(state_dir, f"s_{bid - 1}")
-            )
-            own = prior.unionByName(own)
-        own.groupBy("bucket").agg(F.max("reg").alias("reg")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(state_dir, f"s_{bid}"))
+        regs = read_prior(
+            spark, state_dir, "s_", bid, _ST24_STATE_SCHEMA
+        ).unionByName(st24_batch_registers(bdf))
+        save_gen(
+            regs.groupBy("bucket").agg(F.max("reg").alias("reg")),
+            state_dir, "s_", bid,
+        )
 
     return merge_then_persist
 
@@ -1725,8 +1659,7 @@ def st24_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: per-batch state is ≤1024 rows regardless of corpus size;
     per-source or per-day register tables union the same way, which
     is what makes global distinct queries a kilobyte-merge instead of
-    a corpus re-shuffle. Retry-idempotent by the family contract
-    (per-bid overwrite, prior-only reads)."""
+    a corpus re-shuffle."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
     staged = stage_ordered(chunks, name="st24_landing")
@@ -1737,10 +1670,8 @@ def st24_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_staged(spark, staged, d.schema, max_files_per_trigger=1),
         merge_then_persist,
     )
-    return (
-        spark.read.schema(_ST24_STATE_SCHEMA)
-        .parquet(os.path.join(state_dir, "s_3"))
-        .orderBy("bucket")
+    return read_latest(spark, state_dir, "s_", _ST24_STATE_SCHEMA).orderBy(
+        "bucket"
     )
 
 
@@ -1775,8 +1706,7 @@ def twap_advance_factory(spark: SparkSession, state_dir: str):
     sum over that union (the carried event is <= every in-batch
     timestamp under the in-order contract, so the boundary holding
     interval is priced exactly), and carry forward the new last event
-    by (ts, event_id) struct-max plus the running totals. Per-bid
-    overwrites + prior-only reads = the family retry contract."""
+    by (ts, event_id) struct-max plus the running totals."""
 
     def twap_advance(bdf: DataFrame, bid: int) -> None:
         e = bdf.select(
@@ -1785,12 +1715,7 @@ def twap_advance_factory(spark: SparkSession, state_dir: str):
             F.col("event_id").cast("long").alias("eid"),
             F.round(F.col("value") * 100).cast("long").alias("cents"),
         )
-        if bid > 0:
-            st = spark.read.schema(_ST25_STATE_SCHEMA).parquet(
-                os.path.join(state_dir, f"s_{bid - 1}")
-            )
-        else:
-            st = spark.createDataFrame([], _ST25_STATE_SCHEMA)
+        st = read_prior(spark, state_dir, "s_", bid, _ST25_STATE_SCHEMA)
         carried = st.select(
             "event_type",
             F.col("last_us").alias("us"),
@@ -1841,9 +1766,7 @@ def twap_advance_factory(spark: SparkSession, state_dir: str):
                 ).alias("min_us"),
             )
         )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"s_{bid}")
-        )
+        save_gen(merged, state_dir, "s_", bid)
 
     return twap_advance
 
@@ -1862,8 +1785,7 @@ def st25_stream_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     further to a window function over the seam.
 
     100 TB: state is one row per type; each batch does one
-    event_type-clustered window + two aggregates. Retry-idempotent by
-    the family contract (per-bid overwrite, prior-only reads)."""
+    event_type-clustered window + two aggregates."""
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
     schema = load(spark, sf_dir, "events").schema
     state_dir = scratch_dir("st25_state")
@@ -1873,9 +1795,7 @@ def st25_stream_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_staged(spark, staged, schema, max_files_per_trigger=1),
         twap_advance,
     )
-    st = spark.read.schema(_ST25_STATE_SCHEMA).parquet(
-        os.path.join(state_dir, "s_3")
-    )
+    st = read_latest(spark, state_dir, "s_", _ST25_STATE_SCHEMA)
     return st.select(
         "event_type",
         F.col("n").alias("n_events"),
@@ -1907,8 +1827,7 @@ def ohlc_advance_factory(spark: SparkSession, state_dir: str):
     open/close resolve by comparing the carried endpoint STRUCT
     against the batch endpoint struct under the same total order — the
     associative-merge property that makes OHLC a CUBE-maintainable
-    aggregate. Per-bid overwrites + prior-only reads = the family
-    retry contract."""
+    aggregate."""
 
     def ohlc_advance(bdf: DataFrame, bid: int) -> None:
         e = bdf.select(
@@ -1925,12 +1844,7 @@ def ohlc_advance_factory(spark: SparkSession, state_dir: str):
             F.min("cents").cast("long").alias("b_low"),
             F.max(F.struct("us", "eid", "cents")).alias("b_close"),
         )
-        if bid > 0:
-            st = spark.read.schema(_ST26_STATE_SCHEMA).parquet(
-                os.path.join(state_dir, f"s_{bid - 1}")
-            )
-        else:
-            st = spark.createDataFrame([], _ST26_STATE_SCHEMA)
+        st = read_prior(spark, state_dir, "s_", bid, _ST26_STATE_SCHEMA)
         s_open = F.struct(
             F.col("open_us").alias("us"),
             F.col("open_eid").alias("eid"),
@@ -1979,9 +1893,7 @@ def ohlc_advance_factory(spark: SparkSession, state_dir: str):
                 cls["cents"].alias("close_cents"),
             )
         )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"s_{bid}")
-        )
+        save_gen(merged, state_dir, "s_", bid)
 
     return ohlc_advance
 
@@ -2000,8 +1912,7 @@ def st26_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: state is one row per (type, hour) — grid-sized; each
     batch does one map-side-combining aggregate + a grid-sized outer
-    join. Retry-idempotent by the family contract (per-bid overwrite,
-    prior-only reads)."""
+    join."""
     staged = stage_events_ordered(spark, sf_dir, chunks=4)
     schema = load(spark, sf_dir, "events").schema
     state_dir = scratch_dir("st26_state")
@@ -2011,9 +1922,7 @@ def st26_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_staged(spark, staged, schema, max_files_per_trigger=1),
         ohlc_advance,
     )
-    st = spark.read.schema(_ST26_STATE_SCHEMA).parquet(
-        os.path.join(state_dir, "s_3")
-    )
+    st = read_latest(spark, state_dir, "s_", _ST26_STATE_SCHEMA)
     return st.select(
         "event_type",
         "bucket",
@@ -2039,29 +1948,20 @@ def line_count_advance_factory(spark: SparkSession, state_dir: str):
     (map-side combining), and SUM-merge into the carried (line, c)
     state by full outer join. Counts are the textbook mergeable
     aggregate, so the state after batch k telescopes to the one-pass
-    counts over chunks 1..k with no seam logic at all. Per-bid
-    overwrites + prior-only reads = the family retry contract."""
-    from recipes_spark.queries.corpus_ops import doc_lines
+    counts over chunks 1..k with no seam logic at all."""
 
     def advance(bdf: DataFrame, bid: int) -> None:
         inc = doc_lines(bdf.select("doc_id", "text")).groupBy("line").agg(
             F.count(F.lit(1)).cast("long").alias("b_c")
         )
-        if bid > 0:
-            st = spark.read.schema(_ST27_STATE_SCHEMA).parquet(
-                os.path.join(state_dir, f"s_{bid - 1}")
-            )
-        else:
-            st = spark.createDataFrame([], _ST27_STATE_SCHEMA)
+        st = read_prior(spark, state_dir, "s_", bid, _ST27_STATE_SCHEMA)
         merged = st.join(inc, "line", "full").select(
             "line",
             (F.coalesce("c", F.lit(0)) + F.coalesce("b_c", F.lit(0)))
             .cast("long")
             .alias("c"),
         )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"s_{bid}")
-        )
+        save_gen(merged, state_dir, "s_", bid)
 
     return advance
 
@@ -2084,9 +1984,7 @@ def st27_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: per-batch work = one batch-sized map-side-combining count
     + a state-sized outer join; the carried state is the distinct-line
     table (vocabulary-scaled, never corpus-scaled — at production
-    scale key it on sha2(line), exactly as the batch docstring says).
-    Retry-idempotent by the family contract (per-bid overwrite,
-    prior-only reads — asserted by re-invoking a mid-stream batch)."""
+    scale key it on sha2(line), exactly as the batch docstring says)."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     chunks = [d.filter(F.pmod("doc_id", F.lit(4)) == i) for i in range(4)]
     staged = stage_ordered(chunks, name="st27_landing")
@@ -2097,9 +1995,7 @@ def st27_stream_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_staged(spark, staged, d.schema, max_files_per_trigger=1),
         advance,
     )
-    freq = spark.read.schema(_ST27_STATE_SCHEMA).parquet(
-        os.path.join(state_dir, f"s_{_max_state_bid(state_dir, 's_')}")
-    )
+    freq = read_latest(spark, state_dir, "s_", _ST27_STATE_SCHEMA)
     return line_dedup_report(doc_lines(d), freq)
 
 
@@ -2120,15 +2016,17 @@ def corpus_pipeline_advance_factory(spark: SparkSession, state_dir: str):
     C4 count state, SUM-merged by full outer join (st27's telescoping
     — counts after batch k ARE the one-pass counts over batches 1..k);
     (3) per-source cleaned-doc counts, SUM-merged the same way (the
-    ingest-monitoring state a production pipeline alarms on). Per-bid
-    overwrites + prior-only reads = the family retry contract."""
+    ingest-monitoring state a production pipeline alarms on)."""
 
     def advance(bdf: DataFrame, bid: int) -> None:
-        lines_path = os.path.join(state_dir, f"l_{bid}")
-        pipeline_clean_lines(
-            bdf.select("doc_id", "source", "text", "n_chars")
-        ).write.mode("overwrite").parquet(lines_path)
-        lines = spark.read.schema(_ST28_LINES_SCHEMA).parquet(lines_path)
+        save_gen(
+            pipeline_clean_lines(
+                bdf.select("doc_id", "source", "text", "n_chars")
+            ),
+            state_dir, "l_", bid,
+        )
+        # Generation bid itself: the line store just written.
+        lines = read_prior(spark, state_dir, "l_", bid + 1, _ST28_LINES_SCHEMA)
         inc = pipeline_line_freq(lines).withColumnRenamed("c", "b_c")
         src_inc = (
             lines.select("doc_id", "source")
@@ -2136,80 +2034,46 @@ def corpus_pipeline_advance_factory(spark: SparkSession, state_dir: str):
             .groupBy("source")
             .agg(F.count(F.lit(1)).cast("long").alias("b_n"))
         )
-        if bid > 0:
-            st = spark.read.schema(_ST27_STATE_SCHEMA).parquet(
-                os.path.join(state_dir, f"s_{bid - 1}")
-            )
-            src_st = spark.read.schema(_ST28_SRC_SCHEMA).parquet(
-                os.path.join(state_dir, f"src_{bid - 1}")
-            )
-        else:
-            st = spark.createDataFrame([], _ST27_STATE_SCHEMA)
-            src_st = spark.createDataFrame([], _ST28_SRC_SCHEMA)
-        st.join(inc, "line", "full").select(
+        st = read_prior(spark, state_dir, "s_", bid, _ST27_STATE_SCHEMA)
+        src_st = read_prior(spark, state_dir, "src_", bid, _ST28_SRC_SCHEMA)
+        counts = st.join(inc, "line", "full").select(
             "line",
             (F.coalesce("c", F.lit(0)) + F.coalesce("b_c", F.lit(0)))
             .cast("long")
             .alias("c"),
-        ).write.mode("overwrite").parquet(os.path.join(state_dir, f"s_{bid}"))
-        src_st.join(src_inc, "source", "full").select(
+        )
+        save_gen(counts, state_dir, "s_", bid)
+        sources = src_st.join(src_inc, "source", "full").select(
             "source",
             (F.coalesce("n_docs", F.lit(0)) + F.coalesce("b_n", F.lit(0)))
             .cast("long")
             .alias("n_docs"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"src_{bid}")
         )
+        save_gen(sources, state_dir, "src_", bid)
 
     return advance
-
-
-def _max_state_bid(state_dir: str, prefix: str) -> int:
-    """Largest batch id among ``<prefix><bid>`` entries in the state
-    dir — the GENERATION the serve phase should read. Raises on an
-    empty family (a serve before any batch advanced is a bug)."""
-    bids = [
-        int(p[len(prefix):])
-        for p in os.listdir(state_dir)
-        if p.startswith(prefix) and p[len(prefix):].isdigit()
-    ]
-    if not bids:
-        raise ValueError(
-            f"no {prefix}* state under {state_dir}: serve phase called "
-            "before any micro-batch advanced"
-        )
-    return max(bids)
 
 
 def st28_final_report(spark: SparkSession, state_dir: str) -> DataFrame:
     """Serve phase over the ACCUMULATED state: reassemble every doc
     from the unioned clean-line store against the final C4 counts,
     then run pipeline_serve VERBATIM — floor, survivor pick, mixture,
-    shard, token-budget pack, manifest. The final count-state
-    generation is DERIVED from the state dir (max s_* bid) and
-    cross-checked against the line-store generations, so the
-    registered 4-batch query, the 8-batch probe and any
-    variable-batch variant share this one code path (round 11
-    hardcoded s_3 — the 8-batch probe had to work around it; fixed
-    per the r11 verdict/ADVICE)."""
-    final_bid = _max_state_bid(state_dir, "s_")
-    lines_bid = _max_state_bid(state_dir, "l_")
+    shard, token-budget pack, manifest. The final generation is the
+    latest one present, so the registered 4-batch query and the
+    8-batch probe share this one code path; it is cross-checked
+    against the line store's latest generation."""
+    final_bid = latest_gen(state_dir, "s_")
+    lines_bid = latest_gen(state_dir, "l_")
     if final_bid != lines_bid:
         raise ValueError(
             f"st28 state families disagree: max s_* bid {final_bid} != "
             f"max l_* bid {lines_bid} — a partial batch advance; "
             "stale counts must not pair with a fuller line store"
         )
-    all_lines = spark.read.schema(_ST28_LINES_SCHEMA).parquet(
-        *sorted(
-            os.path.join(state_dir, p)
-            for p in os.listdir(state_dir)
-            if p.startswith("l_")
-        )
+    all_lines = read_all_prior(
+        spark, state_dir, "l_", final_bid + 1, _ST28_LINES_SCHEMA
     )
-    freq = spark.read.schema(_ST27_STATE_SCHEMA).parquet(
-        os.path.join(state_dir, f"s_{final_bid}")
-    )
+    freq = read_latest(spark, state_dir, "s_", _ST27_STATE_SCHEMA)
     return pipeline_serve(pipeline_reassemble(all_lines, freq))
 
 
@@ -2234,9 +2098,7 @@ def st28_stream_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: per-batch work = batch-sized row-local segmentation + one
     map-side-combining count + a state-sized outer join (the state is
     the distinct-line table — vocabulary-scaled); the corpus-sized
-    serve phase runs ONCE at the end, not per batch.
-    Retry-idempotent by the family contract (per-bid overwrite,
-    prior-only reads — asserted by re-invoking a mid-stream batch)."""
+    serve phase runs ONCE at the end, not per batch."""
     d = load(spark, sf_dir, "documents").select(
         "doc_id", "source", "text", "n_chars"
     )
@@ -2270,8 +2132,7 @@ def classifier_stats_advance_factory(spark: SparkSession, state_dir: str):
     textbook mergeable aggregates, so the state after batch k
     telescopes to the one-pass training aggregate over chunks 1..k —
     the same argument as st27's line counts, applied to a MODEL's
-    training state. Per-bid overwrites + prior-only reads = the
-    family retry contract."""
+    training state."""
     from recipes_spark.queries.corpus_ops import (
         _QTA_DIM,
         _bucket,
@@ -2296,12 +2157,7 @@ def classifier_stats_advance_factory(spark: SparkSession, state_dir: str):
                 F.count(F.lit(1)).cast("long").alias("b_tot"),
             )
         )
-        if bid > 0:
-            st = spark.read.schema(_ST29_STATE_SCHEMA).parquet(
-                os.path.join(state_dir, f"s_{bid - 1}")
-            )
-        else:
-            st = spark.createDataFrame([], _ST29_STATE_SCHEMA)
+        st = read_prior(spark, state_dir, "s_", bid, _ST29_STATE_SCHEMA)
         merged = st.join(inc, "b", "full").select(
             "b",
             (F.coalesce("pos", F.lit(0)) + F.coalesce("b_pos", F.lit(0)))
@@ -2311,9 +2167,7 @@ def classifier_stats_advance_factory(spark: SparkSession, state_dir: str):
             .cast("long")
             .alias("tot"),
         )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"s_{bid}")
-        )
+        save_gen(merged, state_dir, "s_", bid)
 
     return advance
 
@@ -2338,9 +2192,8 @@ def st29_stream_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: per-batch work = one batch-sized map-side-combining agg +
     a dim-bounded outer join (state is ≤50k rows of two int64
     counters — model-sized, never corpus-sized); serving cost is
-    unchanged from the batch query. Retry-idempotent by the family
-    contract (per-bid overwrite, prior-only reads — gated in
-    tests/test_intent_round14.py)."""
+    unchanged from the batch query. Retry idempotence is gated in
+    tests/test_intent_round14.py."""
     from recipes_spark.io import load, scale_partitions
     from recipes_spark.queries.corpus_ops import (
         _QTA_BASE_MICRO,
@@ -2359,13 +2212,7 @@ def st29_stream_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_staged(spark, staged, d.schema, max_files_per_trigger=1),
         advance,
     )
-    stats = (
-        spark.read.schema(_ST29_STATE_SCHEMA)
-        .parquet(
-            os.path.join(state_dir, f"s_{_max_state_bid(state_dir, 's_')}")
-        )
-        .collect()
-    )
+    stats = read_latest(spark, state_dir, "s_", _ST29_STATE_SCHEMA).collect()
     weights = _qta_weights_from_stats(stats)
     gen = quality_score_kernel(
         weights, _QTA_DIM, _QTA_BASE_MICRO, _QTA_THRESHOLD_MICRO
@@ -2404,8 +2251,7 @@ def packing_advance_factory(spark: SparkSession, state_dir: str):
     batch k telescopes to the one-pass packing of chunks 1..k —
     sequence packing is NOT embarrassingly parallel (every sequence
     id depends on every prior token count), which is exactly why the
-    carry is the state. Per-bid overwrites + prior-only reads = the
-    family retry contract."""
+    carry is the state."""
     from recipes_spark.queries.corpus_ops import (
         _BPE_MERGES,
         _BPE_VOCAB,
@@ -2416,18 +2262,11 @@ def packing_advance_factory(spark: SparkSession, state_dir: str):
     gen = bpe_greedy_ids_kernel(_BPE_MERGES, _BPE_VOCAB)
 
     def advance(bdf: DataFrame, bid: int) -> None:
-        if bid > 0:
-            carry = int(
-                spark.read.schema(_ST30_CARRY_SCHEMA)
-                .parquet(os.path.join(state_dir, f"carry_{bid - 1}"))
-                .collect()[0][0]
-            )
-            st = spark.read.schema(_ST30_SEQ_SCHEMA).parquet(
-                os.path.join(state_dir, f"s_{bid - 1}")
-            )
-        else:
-            carry = 0
-            st = spark.createDataFrame([], _ST30_SEQ_SCHEMA)
+        carried = read_prior(
+            spark, state_dir, "carry_", bid, _ST30_CARRY_SCHEMA
+        ).collect()
+        carry = int(carried[0][0]) if bid > 0 else 0
+        st = read_prior(spark, state_dir, "s_", bid, _ST30_SEQ_SCHEMA)
         toks = bdf.select("doc_id", "text").mapInPandas(
             gen, "doc_id bigint, n bigint, ids array<int>"
         )
@@ -2478,14 +2317,13 @@ def packing_advance_factory(spark: SparkSession, state_dir: str):
                 F.coalesce("ids", empty), F.coalesce("b_ids", empty)
             ).alias("ids"),
         )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"s_{bid}")
-        )
+        save_gen(merged, state_dir, "s_", bid)
         batch_total = toks.agg(F.sum("n")).collect()[0][0] or 0
-        spark.createDataFrame(
-            [(carry + int(batch_total),)], _ST30_CARRY_SCHEMA
-        ).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"carry_{bid}")
+        save_gen(
+            spark.createDataFrame(
+                [(carry + int(batch_total),)], _ST30_CARRY_SCHEMA
+            ),
+            state_dir, "carry_", bid,
         )
 
     return advance
@@ -2513,9 +2351,8 @@ def st30_stream_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the open boundary sequence carries (state = O(1)); here the full
     sequence table carries so the final manifest derives from state
     alone. Ordered arrival is the family's staging contract (one file
-    per trigger, latestFirst=false); retry-idempotent by per-bid
-    overwrite + prior-only reads (gated in
-    tests/test_intent_round14.py)."""
+    per trigger, latestFirst=false); retry idempotence is gated in
+    tests/test_intent_round14.py."""
     from recipes_spark.queries.corpus_ops import (
         _bucket,
         _ordered_sha,
@@ -2534,9 +2371,7 @@ def st30_stream_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_staged(spark, staged, d.schema, max_files_per_trigger=1),
         advance,
     )
-    seqs = spark.read.schema(_ST30_SEQ_SCHEMA).parquet(
-        os.path.join(state_dir, f"s_{_max_state_bid(state_dir, 's_')}")
-    )
+    seqs = read_latest(spark, state_dir, "s_", _ST30_SEQ_SCHEMA)
     assigned = seqs.select(
         _bucket(F.col("seq_id").cast("string"), 8).alias("shard"),
         F.floor(F.col("seq_id") / 64).cast("long").alias("chunk"),
@@ -2582,8 +2417,7 @@ def index_append_advance_factory(spark: SparkSession, state_dir: str,
     rows. Unlike the counter families, the state here is data-sized by
     design — the index IS the state, exactly as the production store's
     codes substore grows by each delta commit (plans/ann_index.py's
-    append, micro-batch grain). Per-bid overwrites + prior-only reads
-    = the family retry contract. The frozen model is broadcast ONCE
+    append, micro-batch grain). The frozen model is broadcast ONCE
     here and shared by every batch's encode (books_bc) — a per-batch
     broadcast would accrete one dead copy per micro-batch in every
     executor until the cleaner catches up."""
@@ -2600,15 +2434,8 @@ def index_append_advance_factory(spark: SparkSession, state_dir: str,
             "codes_packed",
             F.col("__list").cast("int").alias("cell"),
         )
-        if bid > 0:
-            st = spark.read.schema(_ST31_STATE_SCHEMA).parquet(
-                os.path.join(state_dir, f"s_{bid - 1}")
-            )
-        else:
-            st = spark.createDataFrame([], _ST31_STATE_SCHEMA)
-        st.unionByName(inc).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"s_{bid}")
-        )
+        st = read_prior(spark, state_dir, "s_", bid, _ST31_STATE_SCHEMA)
+        save_gen(st.unionByName(inc), state_dir, "s_", bid)
 
     return advance
 
@@ -2654,9 +2481,7 @@ def st31_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_staged(spark, staged, emb.schema, max_files_per_trigger=1),
         advance,
     )
-    final = spark.read.schema(_ST31_STATE_SCHEMA).parquet(
-        os.path.join(state_dir, f"s_{_max_state_bid(state_dir, 's_')}")
-    )
+    final = read_latest(spark, state_dir, "s_", _ST31_STATE_SCHEMA)
     return (
         _cell_codes_digest(
             final.select(

@@ -187,14 +187,14 @@ def test_every_engine_function_is_named():
     assert not unnamed, f"engine functions nothing names: {sorted(unnamed)}"
 
 
-def _code_tokens(path):
-    """NAME and OP tokens of a Python file: code only, so docstrings and
-    comments do not count."""
+def _code_tokens(path, kinds=("NAME", "OP")):
+    """Tokens of a Python file of the given tokenize kinds. The default,
+    NAME and OP, is code only, so docstrings and comments do not count."""
     import io
     import tokenize
 
     tokens = tokenize.generate_tokens(io.StringIO(Path(path).read_text()).readline)
-    return [t.string for t in tokens if t.type in (tokenize.NAME, tokenize.OP)]
+    return [t.string for t in tokens if tokenize.tok_name[t.type] in kinds]
 
 
 def test_stream_lifecycle_lives_in_streaming_core():
@@ -228,3 +228,83 @@ def test_scratch_dirs_come_from_session():
         if "mkdtemp" in _code_tokens(path)
     )
     assert found == [os.path.join("recipes_spark", "session.py")], found
+
+
+def test_per_batch_paths_live_in_streaming_core():
+    """One state store for the foreachBatch bodies: under
+    recipes_spark/streaming/, only core.py formats a per-batch path (an
+    f-string holding `{bid` or `{j}`); every body names its generations
+    through core's save_gen / read_prior / read_all_prior / read_latest.
+    st13's raw bloom bitmaps are the one exception."""
+    found = []
+    for path in _files_under(os.path.join("recipes_spark", "streaming"), ".py"):
+        rel = os.path.relpath(path, REPO)
+        if rel == os.path.join("recipes_spark", "streaming", "core.py"):
+            continue
+        for s in _code_tokens(path, ("STRING",)):
+            prefix = s[: len(s) - len(s.lstrip("rRbBuUfF"))]
+            if "f" in prefix.lower() and ("{bid" in s or "{j}" in s):
+                found.append((rel, s))
+    ingest = os.path.join("recipes_spark", "streaming", "ingest.py")
+    assert found == [(ingest, 'f"bloom_{j}.bin"')], found
+
+
+def _unused_imports(path):
+    """`<file>:<line> <name>` for each name an import binds in a module
+    or function scope that nothing in that scope reads. Imports marked
+    `# noqa: F401` (side-effect imports) are exempt, and so are names a
+    module lists in __all__."""
+    import ast
+
+    text = Path(path).read_text()
+    lines = text.splitlines()
+    tree = ast.parse(text)
+    scopes = [tree] + [
+        n for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    unused = []
+    for scope in scopes:
+        used = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name)}
+        used |= {
+            c.value
+            for a in ast.walk(scope)
+            if isinstance(a, ast.Assign)
+            and any(getattr(t, "id", None) == "__all__" for t in a.targets)
+            for c in ast.walk(a.value)
+            if isinstance(c, ast.Constant)
+        }
+        # The scope's own statements, into if/try/with blocks but not
+        # into nested function or class bodies (their own scopes).
+        stack = list(scope.body)
+        while stack:
+            node = stack.pop()
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            stack.extend(ast.iter_child_nodes(node))
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if getattr(node, "module", None) == "__future__":
+                continue
+            if "noqa: F401" in lines[node.lineno - 1]:
+                continue
+            for alias in node.names:
+                name = alias.asname or alias.name.split(".")[0]
+                if name != "*" and name not in used:
+                    rel = os.path.relpath(path, REPO)
+                    unused.append(f"{rel}:{node.lineno} {name}")
+    return unused
+
+
+def test_no_unused_imports():
+    """No engine module or function imports a name it never reads. The
+    repo runs no linter, so this AST scan stands in for pyflakes' F401
+    over recipes_spark/."""
+    unused = [
+        u
+        for path in sorted(_files_under("recipes_spark", ".py"))
+        for u in _unused_imports(path)
+    ]
+    assert not unused, f"unused imports: {unused}"

@@ -5,6 +5,7 @@ ingest idempotency."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from recipes_spark.io import load
 from recipes_spark.streaming.core import run_to_memory, stream_events
@@ -778,3 +779,124 @@ def test_run_foreach_batch_in_order_cleans_up_and_propagates(spark, monkeypatch)
         )
     assert spark.streams.active == []
     assert len(made) == 2 and not os.path.exists(made[1])
+
+
+def _gens(spark, root, family, values):
+    """Write one single-row generation `<family><j>` holding `j` for
+    each j in `values`."""
+    from recipes_spark.streaming.core import save_gen
+
+    for j in values:
+        save_gen(spark.createDataFrame([(j,)], "g long"), root, family, j)
+
+
+def test_read_latest_reads_the_highest_generation(spark):
+    """read_latest picks the highest generation of its own family, and
+    raises when the root holds none."""
+    import pytest
+
+    from recipes_spark.streaming.core import read_latest
+
+    root = scratch_dir("test_state_latest")
+    _gens(spark, root, "s_", range(5))
+    _gens(spark, root, "src_", [9])
+    assert read_latest(spark, root, "s_", "g long").collect() == [(4,)]
+    with pytest.raises(FileNotFoundError):
+        read_latest(spark, scratch_dir("test_state_empty"), "s_", "g long")
+
+
+def test_read_all_prior_ignores_own_and_later_generations(spark):
+    """A retry of batch 2 after batch 3 has run: read_all_prior sees
+    generations 0 and 1 only, never s_2 or s_3."""
+    from recipes_spark.streaming.core import read_all_prior
+
+    root = scratch_dir("test_state_all_prior")
+    _gens(spark, root, "s_", range(4))
+    got = read_all_prior(spark, root, "s_", 2, "g long").collect()
+    assert sorted(r.g for r in got) == [0, 1]
+
+
+def test_read_prior_at_batch_zero_is_empty_with_the_schema(spark):
+    """At batch 0 there is no prior generation: both prior reads return
+    no rows, typed exactly as the family's schema."""
+    from recipes_spark.streaming.core import read_all_prior, read_prior
+
+    root = scratch_dir("test_state_batch0")
+    for read in (read_prior, read_all_prior):
+        df = read(spark, root, "s_", 0, "a long, b string, c array<int>")
+        assert df.count() == 0
+        assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+            ("a", "bigint"), ("b", "string"), ("c", "array<int>"),
+        ]
+
+
+def test_missing_prior_generation_raises(spark):
+    """Lost state is never taken for empty: a read at batch N>0 whose
+    generation < N is missing raises."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from recipes_spark.streaming.core import read_all_prior, read_prior
+
+    root = scratch_dir("test_state_missing")
+    _gens(spark, root, "s_", [0, 2])
+    with pytest.raises(AnalysisException):
+        read_prior(spark, root, "s_", 2, "g long")
+    with pytest.raises(AnalysisException):
+        read_all_prior(spark, root, "s_", 3, "g long")
+    with pytest.raises(AnalysisException):
+        read_prior(spark, scratch_dir("test_state_none"), "s_", 1, "g long")
+
+
+_CARRY_STATE_BODIES = {
+    "st20": ("pattern_advance_factory", None, "_ST20_STATE_SCHEMA"),
+    "st21": ("moments_probe_then_absorb", "_ST21_OUT_SCHEMA", "_ST21_STATE_SCHEMA"),
+    "st22": ("cusum_advance_factory", "_ST22_OUT_SCHEMA", "_ST22_STATE_SCHEMA"),
+    "st23": ("attribution_advance_factory", "_ST23_OUT_SCHEMA", "_ST23_STATE_SCHEMA"),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_CARRY_STATE_BODIES))
+def test_carry_state_batches_are_retry_idempotent(spark, sf_dir, kind):
+    """st20-st23 under the retry contract: after batches 0..2, a
+    redelivery of batch 1 leaves every state generation and every
+    emitted output byte-identical. The batches are time-ordered and
+    split on hour buckets, the arrival order st20/st23 and st22
+    assume."""
+    import os
+
+    from recipes_spark.streaming import ingest
+
+    factory, out_schema, state_schema = (
+        getattr(ingest, name) if name else None
+        for name in _CARRY_STATE_BODIES[kind]
+    )
+    ev = load(spark, sf_dir, "events")
+    b = F.expr("unix_micros(ts) div 3600000000")
+    lo, hi = ev.agg(F.min(b), F.max(b)).first()
+    width = -(-(hi - lo + 1) // 3)
+    batches = [
+        ev.filter((b >= lo + i * width) & (b < lo + (i + 1) * width))
+        for i in range(3)
+    ]
+    out_dir = scratch_dir(f"test_{kind}_out")
+    state_dir = scratch_dir(f"test_{kind}_state")
+    if out_schema is None:
+        fn = factory(spark, state_dir)
+    else:
+        fn = factory(spark, out_dir, state_dir)
+
+    def snapshot():
+        found = {}
+        for root, schema in ((state_dir, state_schema), (out_dir, out_schema)):
+            for name in sorted(os.listdir(root)):
+                df = spark.read.schema(schema).parquet(os.path.join(root, name))
+                found[name] = sorted(tuple(r) for r in df.collect())
+        return found
+
+    for bid, bdf in enumerate(batches):
+        fn(bdf, bid)
+    before = snapshot()
+    assert len(os.listdir(state_dir)) == 3
+    fn(batches[1], 1)  # at-least-once redelivery
+    assert snapshot() == before

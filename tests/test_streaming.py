@@ -793,8 +793,6 @@ def _gens(spark, root, family, values):
 def test_read_latest_reads_the_highest_generation(spark):
     """read_latest picks the highest generation of its own family, and
     raises when the root holds none."""
-    import pytest
-
     from recipes_spark.streaming.core import read_latest
 
     root = scratch_dir("test_state_latest")
@@ -833,7 +831,6 @@ def test_read_prior_at_batch_zero_is_empty_with_the_schema(spark):
 def test_missing_prior_generation_raises(spark):
     """Lost state is never taken for empty: a read at batch N>0 whose
     generation < N is missing raises."""
-    import pytest
     from pyspark.errors import AnalysisException
 
     from recipes_spark.streaming.core import read_all_prior, read_prior
